@@ -102,10 +102,7 @@ object Daemon {
     graft.functions.GraftFunctions.installAll(spark)
     val props = new Properties()
     val repl = new Replicator(spark, cfg, cfg.sink, props)
-    val observed = {
-      val conn = java.sql.DriverManager.getConnection(cfg.sink, props)
-      try observedCatalog(conn) finally conn.close()
-    }
+    val observed = graft.sink.UpsertWriter.withConnection(cfg.sink, props)(observedCatalog)
     // The source seam: a mongodb:// `inp` URI selects the live connector
     // binding; the harness binding reads the parquet snapshots + oplog
     // segment dirs the sandbox provides.

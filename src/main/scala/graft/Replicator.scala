@@ -1,11 +1,11 @@
 package graft
 
-import java.sql.DriverManager
 import java.util.Properties
 
 import graft.config.{MappingConfig, TableSpec}
 import graft.operators.Transforms
 import graft.sink.{MySqlDialect, SchemaSync, SqlDialect, UpsertWriter}
+import graft.sink.UpsertWriter.{inTransaction, withConnection}
 import graft.sources.{ChangeFeed, Json}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,30 +34,22 @@ class Replicator(
     sinkProps: Properties = new Properties(),
     dialect: SqlDialect = MySqlDialect) {
 
-  private def withConn[A](f: java.sql.Connection => A): A = {
-    val conn = DriverManager.getConnection(sinkUrl, sinkProps)
-    try f(conn) finally conn.close()
-  }
-
   /** Idempotent state-table bootstrap (reference creates it on connect,
     * mysql.go:128-144); both lifecycle entry points need it before any
     * offset read or commit. */
-  private def ensureStateTable(): Unit = withConn { conn =>
-    conn.setAutoCommit(false)
-    dialect.ensureStateTable(conn)
-    conn.commit()
-  }
+  private def ensureStateTable(): Unit =
+    inTransaction(sinkUrl, sinkProps)(dialect.ensureStateTable)
+
+  /** The stored offset; 0 when absent (`mysql.go:108-126`). */
+  private def storedOffset(): Long =
+    withConnection(sinkUrl, sinkProps)(UpsertWriter.readOffset(_, dialect)).getOrElse(0L)
 
   /** D1: compute and execute the DDL plan IN THE SINK'S OWN GRAMMAR
     * (`dialect.renderDdl` — identity for MySQL, translated for Derby,
     * with inexpressible cosmetic steps skipped); returns resync columns. */
   def reconcileSchema(observed: SchemaSync.Catalog, force: Boolean): SchemaSync.Plan = {
     val plan = SchemaSync.plan(config, observed, force)
-    withConn { conn =>
-      conn.setAutoCommit(false)
-      SchemaSync.execute(conn, dialect, plan)
-      conn.commit()
-    }
+    inTransaction(sinkUrl, sinkProps)(SchemaSync.execute(_, dialect, plan))
     plan
   }
 
@@ -128,8 +120,7 @@ class Replicator(
       force: Boolean,
       zerop: Boolean): StreamingQuery = {
     ensureStateTable()
-    val stored = withConn(UpsertWriter.readOffset(_, dialect)).getOrElse(0L)
-    val fromScratch = stored == 0L || zerop
+    val fromScratch = storedOffset() == 0L || zerop
     val plan = reconcileSchema(observed, force)
     val resync: Map[String, Set[String]] =
       if (fromScratch)
@@ -160,14 +151,10 @@ class Replicator(
         }
       }
       pinTs.foreach { ts =>
-        withConn { conn =>
-          conn.setAutoCommit(false)
-          UpsertWriter.commitOffset(conn, ts, dialect)
-          conn.commit()
-        }
+        inTransaction(sinkUrl, sinkProps)(UpsertWriter.commitOffset(_, ts, dialect))
       }
     }
-    val resume = withConn(UpsertWriter.readOffset(_, dialect)).getOrElse(0L)
+    val resume = storedOffset()
     // Resume STRICTLY BELOW the stored offset: the feed predicate is
     // `ts > afterTs`, so resuming at `resume` itself would drop a
     // boundary-ts sibling appended after the stop — the loss the apply
@@ -184,24 +171,12 @@ class Replicator(
       sinkProps, dialect = dialect)
 
   /** J1: delete sink rows whose key is absent from the source (anti-join,
-    * one statement per orphan, batched per partition). */
+    * one keyed DELETE per orphan, batched per partition; a failed partition
+    * rolls back and deletes nothing). */
   def deleteOrphans(spec: TableSpec, sourceIds: DataFrame, sinkIds: DataFrame): Unit = {
-    val gone = sink.MergeApply.deleteReconcile(sinkIds, sourceIds, spec.pk)
-    val url = sinkUrl; val props = sinkProps
-    val sql = dialect.delete(spec).sql
-    val bounded = dialect.maxWriteConnections.fold(gone)(gone.coalesce)
-    bounded.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url, props)
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.prepareStatement(sql)
-          rows.foreach { r => st.setObject(1, r.get(0)); st.addBatch() }
-          st.executeBatch()
-          conn.commit()
-        } finally conn.close()
-      }
-    }
+    val stmt = dialect.delete(spec)
+    UpsertWriter.writeRows(sink.MergeApply.deleteReconcile(sinkIds, sourceIds, spec.pk),
+      sinkUrl, sinkProps, dialect)(r => (stmt, _ => r.get(0)))
   }
 
   /** Entry point C: continuous replication from an oplog-segment directory.
@@ -238,24 +213,14 @@ class Replicator(
         // legally share the boundary ts, and `>` would lose it. Dead
         // letters are persisted BEFORE the guard (their ts sentinel must
         // never be offset-compared).
-        val stored: Long = {
-          val conn = DriverManager.getConnection(url, props)
-          try UpsertWriter.readOffset(conn, dl).getOrElse(Long.MinValue)
-          finally conn.close()
-        }
+        val stored = withConnection(url, props)(UpsertWriter.readOffset(_, dl))
+          .getOrElse(Long.MinValue)
         val maxTs = Replicator.applyBatch(batch, specs, url, props,
           deadLetterDir = Some(s"$checkpointDir/dead_letter"), batchId = batchId,
           skipBelowTs = stored, dialect = dl,
           quarantineDir = qr.map(_ => s"$checkpointDir/quarantine"),
           quarantineRule = qr)
-        maxTs.foreach { ts =>
-          val conn = DriverManager.getConnection(url, props)
-          try {
-            conn.setAutoCommit(false)
-            UpsertWriter.commitOffset(conn, ts, dl)
-            conn.commit()
-          } finally conn.close()
-        }
+        maxTs.foreach(ts => inTransaction(url, props)(UpsertWriter.commitOffset(_, ts, dl)))
         ()
       }
       .start()
@@ -266,29 +231,6 @@ class Replicator(
 }
 
 object Replicator {
-
-  /** Apply one decoded micro-batch: per-key ordered apply on executors.
-    * Partial upserts bind only present∩declared columns (mysql.go:456-459);
-    * full images NULL absent declared columns (mysql.go:381-407); unsets
-    * null the named columns. Returns the max applied offset.
-    *
-    * Statement strategy (parity target `mysql.go:410-415`, which at least
-    * reused prepared statements; the reference still round-tripped per op):
-    * prepared statements are CACHED per distinct SQL shape — (table,
-    * present-column-set) for upserts, table for deletes — for the life of
-    * the partition, and consecutive ops sharing a shape accumulate into one
-    * JDBC batch, flushed when the shape changes (preserving per-key op
-    * order: rows arrive sorted by (tbl, id, ts, seq) and batches execute in
-    * add order) or at `applyBatchSize`. Uniform streams collapse to
-    * ~one round-trip per `applyBatchSize` ops instead of one per op.
-    *
-    * `skipBelowTs`: replay guard — ops with ts STRICTLY below this (the
-    * durably stored offset) are dropped before apply. Ops AT the stored
-    * ts re-apply idempotently: the offset proves some op at that ts was
-    * applied, but distinct entries may legally share one ts (a producer
-    * with second-granularity stamps), and a later batch could carry a
-    * sibling — skipping ≤ would lose it. See [[Replicator.startStream]]. */
-  private[graft] val applyBatchSize = 1000
 
   /** Re-admit previously quarantined rows — the recovery half of the
     * quarantine contract: read the persisted store and drive the rows
@@ -311,6 +253,23 @@ object Replicator {
       quarantineRule = rule)
   }
 
+  /** Apply one decoded micro-batch: per-key ordered apply on executors
+    * through [[UpsertWriter.writeRows]]. Partial upserts bind only
+    * present∩declared columns (mysql.go:456-459); full images NULL absent
+    * declared columns (mysql.go:381-407); unsets null the named columns.
+    * Returns the max applied offset.
+    *
+    * Rows are repartitioned by (tbl, id) and sorted by (tbl, id, ts, seq),
+    * so each key's ops reach the writer contiguous and in order; its
+    * statement shape is (table, present-column-set) for upserts and the
+    * table for deletes.
+    *
+    * `skipBelowTs`: replay guard — ops with ts STRICTLY below this (the
+    * durably stored offset) are dropped before apply. Ops AT the stored
+    * ts re-apply idempotently: the offset proves some op at that ts was
+    * applied, but distinct entries may legally share one ts (a producer
+    * with second-granularity stamps), and a later batch could carry a
+    * sibling — skipping ≤ would lose it. See [[Replicator.startStream]]. */
   private[graft] def applyBatch(
       batch: DataFrame,
       specs: Seq[TableSpec],
@@ -364,81 +323,42 @@ object Replicator {
       // applyOps tx inner ops share the outer ts — seq (index within the
       // oplog entry) breaks the tie so per-key order is total
       .sortWithinPartitions(col("tbl"), col("id"), col("ts"), col("seq"))
-    // coalesce concatenates whole reduce partitions, so a key's sorted
-    // run stays contiguous — O1 holds at any connection cap
-    val bounded = dialect.maxWriteConnections.fold(relevant)(relevant.coalesce)
-    val maxRun = applyBatchSize
-    bounded.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url, props)
-        try {
-          conn.setAutoCommit(false)
-          // one PreparedStatement per distinct SQL shape, reused for the
-          // whole partition; `current` accumulates the running batch of
-          // consecutive same-shape ops
-          val cache = scala.collection.mutable.Map.empty[String, java.sql.PreparedStatement]
-          var current: java.sql.PreparedStatement = null
-          var pending = 0
-          def flush(): Unit = if (pending > 0) { current.executeBatch(); pending = 0 }
-          rows.foreach { r =>
-            val spec = specByName(r.getString(1))
-            // statement + per-slot values come from the dialect's declared
-            // bind order (SinkStatement.params), so the same loop drives
-            // ODKU (pk + present) and MERGE (pk twice) identically
-            val (stmt, valueOf): (graft.sink.SinkStatement, String => Any) =
-              r.getString(0) match {
-                case "delete" =>
-                  (dialect.delete(spec), _ => r.getString(3))
-                case "upsert" =>
-                  val fields = Json.parseObject(r.getString(4))
-                  val partial = r.getBoolean(5)
-                  // removal paths arrive DOTTED (source-path form,
-                  // ChangeEvent doc). A path covers a declared column
-                  // iff it equals the column's dotted sourceName or is
-                  // a dotted ANCESTOR: `$unset: {cfg: 1}` (whole-subdoc
-                  // unset) nulls cfg.pub / cfg.deep.y (sink cfg_pub,
-                  // cfg_deep_y) — while `$unset` of a SCALAR `status`
-                  // leaves a distinct source field `status_code` alone,
-                  // which a flattened-prefix match would corrupt.
-                  val removedPaths = r.getSeq[String](6).toSet
-                  val removedCols: Set[String] = spec.columns.iterator
-                    .filter(c => removedPaths.contains(c.sourceName) ||
-                      removedPaths.exists(p => c.sourceName.startsWith(p + ".")))
-                    .map(_.sinkName).toSet
-                  val declared = spec.columns.map(_.sinkName)
-                  def isRemoved(c: String): Boolean = removedCols.contains(c)
-                  val present =
-                    if (partial) declared.filter(c => fields.contains(c) || isRemoved(c))
-                    else declared
-                  (dialect.upsert(spec, present), {
-                    case spec.pk => r.getString(3)
-                    case c =>
-                      val v = if (isRemoved(c)) null else fields.getOrElse(c, null)
-                      // P4 at the bind boundary: composite values become JSON
-                      // text, exactly like the snapshot path (mysql.go:402-404)
-                      v match {
-                        case _: Seq[_] | _: Map[_, _] => Json.render(v)
-                        case other                    => other
-                      }
-                  })
+    UpsertWriter.writeRows(relevant, url, props, dialect) { r =>
+      val spec = specByName(r.getString(1))
+      r.getString(0) match {
+        case "delete" =>
+          (dialect.delete(spec), _ => r.getString(3))
+        case "upsert" =>
+          val fields = Json.parseObject(r.getString(4))
+          val partial = r.getBoolean(5)
+          // removal paths arrive DOTTED (source-path form, ChangeEvent
+          // doc). A path covers a declared column iff it equals the
+          // column's dotted sourceName or is a dotted ANCESTOR: `$unset:
+          // {cfg: 1}` (whole-subdoc unset) nulls cfg.pub / cfg.deep.y
+          // (sink cfg_pub, cfg_deep_y) — while `$unset` of a SCALAR
+          // `status` leaves a distinct source field `status_code` alone,
+          // which a flattened-prefix match would corrupt.
+          val removedPaths = r.getSeq[String](6).toSet
+          val removedCols: Set[String] = spec.columns.iterator
+            .filter(c => removedPaths.contains(c.sourceName) ||
+              removedPaths.exists(p => c.sourceName.startsWith(p + ".")))
+            .map(_.sinkName).toSet
+          val declared = spec.columns.map(_.sinkName)
+          val present =
+            if (partial) declared.filter(c => fields.contains(c) || removedCols.contains(c))
+            else declared
+          val valueOf: String => Any = {
+            case spec.pk => r.getString(3)
+            case c =>
+              // P4 at the bind boundary: composite values become JSON
+              // text, exactly like the snapshot path (mysql.go:402-404)
+              if (removedCols.contains(c)) null
+              else fields.getOrElse(c, null) match {
+                case v @ (_: Seq[_] | _: Map[_, _]) => Json.render(v)
+                case other                          => other
               }
-            val sql = stmt.sql
-            val bind: java.sql.PreparedStatement => Unit = st =>
-              stmt.params.zipWithIndex.foreach { case (name, i) =>
-                UpsertWriter.bindValue(st, i + 1, valueOf(name))
-              }
-            val st = cache.getOrElseUpdate(sql, conn.prepareStatement(sql))
-            if (st ne current) { flush(); current = st }
-            bind(st)
-            st.addBatch()
-            pending += 1
-            if (pending >= maxRun) flush()
           }
-          flush()
-          conn.commit()
-        } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally conn.close()
+          (dialect.upsert(spec, present), valueOf)
       }
     }
     // offset from in-scope rows: dead letters (ts sentinel 0) never move

@@ -17,33 +17,25 @@ object MergeApply {
     * per `key` ordered by `ordering` (e.g. ts, then a unique tiebreaker so
     * the result is deterministic under equal timestamps).
     *
-    * Default formulation is the `max_by(struct(*), struct(ordering))`
+    * The formulation is the `max_by(struct(*), struct(ordering))`
     * AGGREGATE (the [[foldChanges]] pattern): map-side partial combine
     * reduces each (key, task) to one candidate row before the shuffle, so
     * a hot key ships one row per upstream task instead of its whole
     * change history — the skew-immune shape for the W1 apply hot path.
     * The row values ride inside a struct so legitimate NULLs survive the
-    * argmax. The window `row_number` twin (the original spec shape; Spark
-    * prunes it map-side via WindowGroupLimit but still shuffles every
-    * surviving row of the hot key) stays available behind
-    * `spark.graft.lastImage.forceWindowed` — the [[graft.operators.TopK]]
-    * `forceWindowed` precedent — and MergeApplySpec pins agg ≡ window. */
+    * argmax. The window `row_number` formulation stays as the test twin
+    * [[lastImageWindowed]]; MergeApplySpec pins agg ≡ window. */
   def lastImage(changes: DataFrame, key: Seq[String], ordering: Seq[Column]): DataFrame = {
-    val windowed = changes.sparkSession.conf
-      .get("spark.graft.lastImage.forceWindowed", "false").toBoolean
-    if (windowed) lastImageWindowed(changes, key, ordering)
-    else {
-      val cols = changes.columns.toSeq
-      // key columns re-emerge from the GROUP BY output (same attribute →
-      // the aggregate's hash partitioning survives the projection, so a
-      // downstream join on the key reuses this exchange); value columns
-      // come out of the argmax struct
-      changes
-        .groupBy(key.map(col): _*)
-        .agg(max_by(struct(cols.map(col): _*), struct(ordering: _*)).as("__img"))
-        .select(cols.map(c =>
-          if (key.contains(c)) col(c) else col(s"__img.`$c`").as(c)): _*)
-    }
+    val cols = changes.columns.toSeq
+    // key columns re-emerge from the GROUP BY output (same attribute →
+    // the aggregate's hash partitioning survives the projection, so a
+    // downstream join on the key reuses this exchange); value columns
+    // come out of the argmax struct
+    changes
+      .groupBy(key.map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), struct(ordering: _*)).as("__img"))
+      .select(cols.map(c =>
+        if (key.contains(c)) col(c) else col(s"__img.`$c`").as(c)): _*)
   }
 
   /** The window formulation of [[lastImage]] — kept as the spec-pinned

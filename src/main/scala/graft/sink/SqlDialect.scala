@@ -59,19 +59,25 @@ trait SqlDialect extends Serializable {
     * per-key ordered-apply contract (O1) survives: a key's ops live in
     * one parent partition and stay contiguous and in order. */
   def maxWriteConnections: Option[Int] = None
+
+  /** One statement, closed deterministically — the state-table bootstrap
+    * runs on connections the driver reuses, and an unclosed handle per
+    * call eventually exhausts the server's cursor limit. */
+  protected def executeUpdate(conn: Connection, sql: String): Unit = {
+    val st = conn.prepareStatement(sql)
+    try st.executeUpdate() finally st.close()
+  }
 }
 
 /** The reference dialect: backtick quoting, `INSERT … ON DUPLICATE KEY
   * UPDATE`, `CREATE TABLE IF NOT EXISTS`. Statement text is produced by
-  * [[UpsertWriter]]'s original builders — the golden-tested grammar. */
+  * [[UpsertWriter]]'s builders — the golden-tested grammar; the full-image
+  * upsert is the partial one over every declared column. */
 object MySqlDialect extends SqlDialect {
   override def name: String = "mysql"
 
   override def upsert(spec: TableSpec, present: Seq[String]): SinkStatement =
     SinkStatement(UpsertWriter.partialUpsertSql(spec, present), spec.pk +: present)
-
-  override def upsertAll(spec: TableSpec): SinkStatement =
-    SinkStatement(UpsertWriter.upsertSql(spec), spec.pk +: spec.columns.map(_.sinkName))
 
   override def delete(spec: TableSpec): SinkStatement =
     SinkStatement(UpsertWriter.deleteSql(spec), Seq(spec.pk))
@@ -82,7 +88,7 @@ object MySqlDialect extends SqlDialect {
   override def readOffsetSql: String = UpsertWriter.readOffsetSql
 
   override def ensureStateTable(conn: Connection): Unit =
-    conn.prepareStatement(UpsertWriter.createStateTableSql).executeUpdate()
+    executeUpdate(conn, UpsertWriter.createStateTableSql)
 
   /** The planner's own grammar IS MySQL (reference parity,
     * `mysql.go:146-290`) — rendered verbatim. */
@@ -149,10 +155,10 @@ object DerbyDialect extends SqlDialect {
     * exactly like the reference's blob (`mysql.go:541`). */
   override def ensureStateTable(conn: Connection): Unit =
     try {
-      conn.prepareStatement(
+      executeUpdate(conn,
         s"CREATE TABLE ${q(UpsertWriter.StateTable)} (" +
           s"${q("name")} VARCHAR(100) NOT NULL PRIMARY KEY, " +
-          s"${q("value")} VARCHAR (100) FOR BIT DATA)").executeUpdate()
+          s"${q("value")} VARCHAR (100) FOR BIT DATA)")
     } catch {
       case e: SQLException if e.getSQLState == "X0Y32" => () // already exists
     }

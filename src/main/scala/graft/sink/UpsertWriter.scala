@@ -1,15 +1,19 @@
 package graft.sink
 
 import graft.config.TableSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.util.Properties
+
+import scala.collection.mutable
 
 /** W1/W2/W3/C1: the transactional JDBC apply path (reference
   * `mysql.go:292-588`). Spark's built-in JDBC sink is append/overwrite
   * only, so upsert-with-offset-co-commit is necessarily custom — but the
-  * custom part is confined to `foreachPartition`: the plan upstream stays
-  * declarative.
+  * custom part is confined to ONE executor-side loop ([[writeRows]]) and
+  * one driver-side connection pair ([[withConnection]], [[inTransaction]]):
+  * the plan upstream stays declarative.
   *
   * Exactly-once contract (SURVEY §7 "hard parts"): `foreachBatch` may
   * replay a micro-batch after failure. Safety =
@@ -28,29 +32,14 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
   *       boundary-ts ops, which (a) makes free; ops AT the stored ts are
   *       never skipped because a later entry may legally share that ts.
   *
-  * SQL generation is pure and unit-tested; the connection path runs only
-  * in integration (no MySQL in this environment).
+  * SQL generation is pure and golden-tested against the MySQL grammar;
+  * the connection path is executed by the in-memory JDBC double and by
+  * embedded Derby ([[DerbyDialect]]).
   */
 object UpsertWriter {
 
   val StateTable = "momyre" // reference mysql.go:128-144
   val OffsetKey  = "timestamp"
-
-  /** `INSERT … ON DUPLICATE KEY UPDATE col=VALUES(col)` over the full
-    * declared column list (insert path `mysql.go:376-431`; the reference's
-    * separate UPDATE fallback on error 1062 collapses into one statement). */
-  def upsertSql(spec: TableSpec): String = {
-    val cols = spec.pk +: spec.columns.map(_.sinkName)
-    val collist = cols.map(c => s"`$c`").mkString(", ")
-    val placeholders = cols.map(_ => "?").mkString(", ")
-    // a pk-only table (declarable via ConfigParser) must not render the
-    // bare "ON DUPLICATE KEY UPDATE " MySQL rejects — same no-op
-    // assignment fallback as partialUpsertSql's empty-present case
-    val updates =
-      if (spec.columns.isEmpty) s"`${spec.pk}`=VALUES(`${spec.pk}`)"
-      else spec.columns.map(c => s"`${c.sinkName}`=VALUES(`${c.sinkName}`)").mkString(", ")
-    s"INSERT INTO `${spec.name}` ($collist) VALUES ($placeholders) ON DUPLICATE KEY UPDATE $updates"
-  }
 
   /** Partial-image upsert: only `present` columns are written on conflict
     * (parity with `mysql.go:449-476`, absent field → column omitted). An
@@ -113,47 +102,91 @@ object UpsertWriter {
     s"CREATE TABLE IF NOT EXISTS `$StateTable` (`name` varchar(100) NOT NULL, " +
       "`value` blob, PRIMARY KEY (`name`))"
 
-  /** W3: write one micro-batch transactionally. Each partition opens one
-    * connection, applies its rows as a JDBC batch (amortized — the
-    * reference commits one tx per row during snapshot, `run.go:235-246`),
-    * and the driver co-commits the offset once all partitions succeed.
+  /** Rows per JDBC batch: a run of same-shape statements is flushed at
+    * this size (≈ `rewriteBatchedStatements`). */
+  private[graft] val applyBatchSize = 1000
+
+  /** One connection for `f`, closed after it (auto-commit left on). */
+  def withConnection[A](url: String, props: Properties)(f: Connection => A): A = {
+    val conn = DriverManager.getConnection(url, props)
+    try f(conn) finally conn.close()
+  }
+
+  /** `f` in one transaction: commit on return, roll back on any throw.
+    * The rollback runs before the close, so a failure surfaces its own
+    * error — closing over an open transaction throws instead (Derby
+    * `25001`) and would hide it — and leaves no locks held. */
+  def inTransaction[A](url: String, props: Properties)(f: Connection => A): A =
+    withConnection(url, props) { conn =>
+      conn.setAutoCommit(false)
+      try {
+        val a = f(conn)
+        conn.commit()
+        a
+      } catch {
+        case e: Throwable =>
+          try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+          throw e
+      }
+    }
+
+  /** The executor-side write loop every sink path runs (snapshot, orphan
+    * delete, streamed apply). `statementFor` maps a row to its statement
+    * and to the value bound for each of the statement's named params.
     *
-    * `batchSize` bounds statement batches (≈ `rewriteBatchedStatements`).
-    */
+    * Each non-empty partition (capped at `dialect.maxWriteConnections`)
+    * applies its rows in ONE transaction on one connection. Prepared
+    * statements are cached per SQL text for the life of the partition, and
+    * consecutive rows sharing a statement accumulate into one JDBC batch,
+    * flushed when the statement changes — batches execute in add order,
+    * so the input's per-key op order is preserved — or at
+    * [[applyBatchSize]]. A uniform stream costs ~one round trip per
+    * [[applyBatchSize]] rows instead of one per row (the reference
+    * round-trips per op and reuses its statements, `mysql.go:410-415`). */
+  private[graft] def writeRows(df: DataFrame, url: String, props: Properties,
+      dialect: SqlDialect)(statementFor: Row => (SinkStatement, String => Any)): Unit = {
+    // coalesce concatenates whole parent partitions, so a key's sorted run
+    // stays contiguous — per-key order (O1) holds at any connection cap
+    val bounded = dialect.maxWriteConnections.fold(df)(df.coalesce)
+    bounded.foreachPartition { rows: Iterator[Row] =>
+      if (rows.nonEmpty) inTransaction(url, props) { conn =>
+        val cache = mutable.Map.empty[String, PreparedStatement]
+        var current: PreparedStatement = null
+        var pending = 0
+        def flush(): Unit = if (pending > 0) { current.executeBatch(); pending = 0 }
+        rows.foreach { r =>
+          val (stmt, valueOf) = statementFor(r)
+          val st = cache.getOrElseUpdate(stmt.sql, conn.prepareStatement(stmt.sql))
+          if (st ne current) { flush(); current = st }
+          // bind order is the dialect's declared param order, so the same
+          // loop drives ODKU (pk + present) and MERGE (pk twice)
+          stmt.params.zipWithIndex.foreach { case (name, i) =>
+            bindValue(st, i + 1, valueOf(name))
+          }
+          st.addBatch()
+          pending += 1
+          if (pending >= applyBatchSize) flush()
+        }
+        flush()
+      }
+    }
+  }
+
+  /** W3 snapshot side: full-image upsert of every row of `df`, one
+    * transaction per partition (the reference commits one tx per row,
+    * `run.go:235-246`). No offset is written here: `Replicator.run`
+    * commits the pinned feed head once every table's snapshot succeeds. */
   def writeBatch(
       df: DataFrame,
       spec: TableSpec,
       url: String,
-      props: java.util.Properties,
-      batchSize: Int = 1000,
+      props: Properties,
       dialect: SqlDialect = MySqlDialect): Unit = {
     val stmt = dialect.upsertAll(spec)
-    val cols = (spec.pk +: spec.columns.map(_.sinkName)).distinct
-    val idxBySink = cols.map(c => c -> df.columns.indexOf(c)).toMap
+    val idxBySink = (spec.pk +: spec.columns.map(_.sinkName))
+      .map(c => c -> df.columns.indexOf(c)).toMap
     require(idxBySink.values.forall(_ >= 0), s"batch is missing declared columns for ${spec.name}")
-    // bind positions come from the dialect's declared param order (the pk
-    // may occur at more than one slot — e.g. MERGE binds it twice)
-    val srcIdx = stmt.params.map(idxBySink)
-    val bounded = dialect.maxWriteConnections.fold(df)(df.coalesce)
-    bounded.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val conn = DriverManager.getConnection(url, props)
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.prepareStatement(stmt.sql)
-          var n = 0
-          rows.foreach { r =>
-            srcIdx.zipWithIndex.foreach { case (src, dst) => bindValue(st, dst + 1, r.get(src)) }
-            st.addBatch(); n += 1
-            if (n % batchSize == 0) st.executeBatch()
-          }
-          if (n % batchSize != 0) st.executeBatch()
-          conn.commit()
-        } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally conn.close()
-      }
-    }
+    writeRows(df, url, props, dialect)(r => (stmt, c => r.get(idxBySink(c))))
   }
 
   /** Null-safe bind: Derby (and other strict engines) reject

@@ -2383,25 +2383,4 @@ object StreamPipeline {
   private[streaming] def streamingSemanticDedupInline(
       spark: SparkSession, dir: String): DataFrame =
     semanticDedupAgainst(spark, dir, semanticCorpus(spark, dir))
-
-  /** CDC micro-batch driver: change feed → per-key last-image reduction →
-    * `apply` per micro-batch (the foreachBatch analog of run.go:301-322;
-    * apply is the caller's transactional sink, e.g. UpsertWriter). Returns
-    * the running query; caller awaits/stops. */
-  def cdcApply(
-      changes: DataFrame,
-      keyCol: String,
-      orderCols: Seq[String],
-      checkpointDir: String)(
-      apply: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    changes.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val reduced = graft.sink.MergeApply.lastImage(
-          batch, Seq(keyCol), orderCols.map(col))
-        apply(reduced, batchId)
-      }
-      .start()
-  }
 }

@@ -53,10 +53,6 @@ class PlanSpec extends SparkSpec {
       "last-image fold must combine map-side")
     assert(!p.contains("WindowGroupLimit"),
       "window formulation leaked back into the default apply path")
-    // the window twin stays reachable behind the dial
-    spark.conf.set("spark.graft.lastImage.forceWindowed", "true")
-    try assert(plan("t1_cdc_apply").contains("WindowGroupLimit"))
-    finally spark.conf.unset("spark.graft.lastImage.forceWindowed")
   }
 
   test("anti-join reconciliation plans as a real anti join, not a loop") {

@@ -40,12 +40,15 @@ class DerbyRuntimeSpec extends SparkSpec {
     try f(conn) finally conn.close()
   }
 
-  private def freshTable(spec: graft.config.TableSpec): Unit = withConn { conn =>
-    try conn.prepareStatement(s"""DROP TABLE "${spec.name}"""").executeUpdate()
+  private def dropTable(name: String): Unit = withConn { conn =>
+    try conn.prepareStatement(s"""DROP TABLE "$name"""").executeUpdate()
     catch { case e: java.sql.SQLException if e.getSQLState == "42Y55" => () }
-    try conn.prepareStatement(s"""DROP TABLE "${UpsertWriter.StateTable}"""").executeUpdate()
-    catch { case e: java.sql.SQLException if e.getSQLState == "42Y55" => () }
-    conn.prepareStatement(DerbyDialect.createTableSql(spec)).executeUpdate()
+  }
+
+  private def freshTable(spec: graft.config.TableSpec): Unit = {
+    dropTable(spec.name)
+    dropTable(UpsertWriter.StateTable)
+    withConn(_.prepareStatement(DerbyDialect.createTableSql(spec)).executeUpdate())
   }
 
   private def readTable(name: String, cols: Seq[String]): Map[String, Seq[Any]] =
@@ -116,6 +119,35 @@ class DerbyRuntimeSpec extends SparkSpec {
     q2.stop()
     assert(readTable("users", Seq("name", "visits"))("u3") == Seq("cat", 7L))
     assert(withConn(UpsertWriter.readOffset(_, DerbyDialect)).contains(106L))
+  }
+
+  test("a failed orphan delete rolls back and surfaces its own error (FK violation)") {
+    val cfg = ConfigParser.parse(configText)
+    val users = cfg.table("users").get
+    dropTable("visit_log")
+    freshTable(users)
+    val repl = new Replicator(spark, cfg, url, props, DerbyDialect)
+    repl.snapshot(users, Seq(("u1", "ann", 1L), ("u2", "bob", 2L), ("u3", "cat", 3L))
+      .toDF("_id", "name", "visits"))
+    // a child row pins orphan u3: deleting it violates the foreign key
+    withConn { conn =>
+      conn.prepareStatement(
+        """CREATE TABLE "visit_log" ("id" INTEGER NOT NULL PRIMARY KEY, """ +
+          """"user_id" VARCHAR(24) REFERENCES "users" ("_id"))""").executeUpdate()
+      conn.prepareStatement("""INSERT INTO "visit_log" VALUES (1, 'u3')""").executeUpdate()
+    }
+    try {
+      val e = intercept[Exception] {
+        repl.deleteOrphans(users, sourceIds = Seq("u1").toDF("_id"),
+          sinkIds = Seq("u1", "u2", "u3").toDF("_id"))
+      }
+      val states = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collect { case s: java.sql.SQLException => s.getSQLState }.toSeq
+      assert(states.headOption.contains("23503"),
+        s"the FK violation must surface, not a close over an open transaction: $states")
+      // the partition's transaction rolled back: no orphan was deleted
+      assert(readTable("users", Seq("name")).keySet == Set("u1", "u2", "u3"))
+    } finally dropTable("visit_log")
   }
 
   test("quality quarantine: violating upserts diverted, offset passes them, readmit recovers") {

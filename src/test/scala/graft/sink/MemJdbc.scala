@@ -29,7 +29,8 @@ object MemJdbc {
     dbs.synchronized { catalogs.getOrElse(db, mutable.Map.empty).toMap }
 
   /** db → JDBC-call counters ("prepare", "executeBatch", "executeUpdate",
-    * "addBatch") — lets specs assert statement reuse and batching. */
+    * "addBatch", "close" of a statement) — lets specs assert statement
+    * reuse, batching and that statements are closed. */
   private val counters = mutable.Map.empty[String, mutable.Map[String, Int]]
 
   def table(db: String, name: String): Map[String, Map[String, Any]] =
@@ -245,7 +246,7 @@ object MemJdbc {
       case ("executeBatch", _)               => bump(db, "executeBatch"); Array.emptyIntArray
       case ("executeQuery", _)               => query()
       case ("executeUpdate", _)              => bump(db, "executeUpdate"); stage(); params.clear(); Integer.valueOf(1)
-      case ("close", _)                      => null
+      case ("close", _)                      => bump(db, "close"); null
     }
   }
 

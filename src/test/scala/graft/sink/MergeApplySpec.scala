@@ -31,9 +31,9 @@ class MergeApplySpec extends SparkSpec {
   }
 
   test("lastImage: default aggregate form ≡ windowed twin, row for row") {
-    // the default is the skew-immune max_by aggregate; the window
-    // row_number formulation stays behind the forceWindowed dial (the
-    // TopK precedent) and must stay row-identical under a total ordering
+    // lastImage is the skew-immune max_by aggregate; the window
+    // row_number formulation is its reference twin and must stay
+    // row-identical under a total ordering
     val ord = Seq(col("ts"), col("seq"))
     val agg = MergeApply.lastImage(changes, Seq("_id"), ord)
     val win = MergeApply.lastImageWindowed(changes, Seq("_id"), ord)
@@ -41,15 +41,7 @@ class MergeApplySpec extends SparkSpec {
       "aggregate form must preserve column order")
     assert(agg.orderBy("_id").collect().toSeq ==
       win.orderBy("_id").collect().toSeq)
-    // the dial routes the public entry point through the window twin
-    spark.conf.set("spark.graft.lastImage.forceWindowed", "true")
-    try {
-      val dialed = MergeApply.lastImage(changes, Seq("_id"), ord)
-      assert(dialed.queryExecution.optimizedPlan.toString.contains("row_number"))
-      assert(dialed.orderBy("_id").collect().toSeq ==
-        agg.orderBy("_id").collect().toSeq)
-    } finally spark.conf.unset("spark.graft.lastImage.forceWindowed")
-    // and the default plan is the aggregate — no window exchange
+    // the public plan is the aggregate — no window exchange
     assert(!agg.queryExecution.optimizedPlan.toString.contains("row_number"))
   }
 

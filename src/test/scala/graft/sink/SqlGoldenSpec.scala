@@ -16,7 +16,7 @@ class SqlGoldenSpec extends AnyFunSuite {
     ColumnSpec("score", "double")))
 
   test("golden: full upsert") {
-    val sql = UpsertWriter.upsertSql(users)
+    val sql = MySqlDialect.upsertAll(users).sql
     assert(sql ==
       "INSERT INTO `users` (`_id`, `name`, `visits`, `score`) VALUES (?, ?, ?, ?) " +
         "ON DUPLICATE KEY UPDATE `name`=VALUES(`name`), `visits`=VALUES(`visits`), " +

@@ -19,7 +19,7 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     MemJdbc.reset("db1")
     val df = Seq(("u1", "ann", 1L), ("u2", "bob", 2L)).toDF("_id", "name", "visits")
       .repartition(3) // exercise multiple partitions incl. empty ones
-    UpsertWriter.writeBatch(df, spec, MemJdbc.UrlPrefix + "db1", new Properties(), batchSize = 1)
+    UpsertWriter.writeBatch(df, spec, MemJdbc.UrlPrefix + "db1", new Properties())
     assert(MemJdbc.table("db1", "users") == Map(
       "u1" -> Map("_id" -> "u1", "name" -> "ann", "visits" -> 1L),
       "u2" -> Map("_id" -> "u2", "name" -> "bob", "visits" -> 2L)))
@@ -35,6 +35,28 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     val df2 = Seq(("u1", "anne", 5L)).toDF("_id", "name", "visits")
     UpsertWriter.writeBatch(df2, spec, url, new Properties())
     assert(MemJdbc.table("db2", "users")("u1")("name") == "anne")
+  }
+
+  test("snapshot and orphan delete run the shared writer: one statement, a flush per 1000 rows") {
+    MemJdbc.reset("db8")
+    val url = MemJdbc.UrlPrefix + "db8"
+    val n = 2500
+    val rows = (1 to n).map(i => (s"u$i", s"n$i", i.toLong)).toDF("_id", "name", "visits")
+      .repartition(1)
+    UpsertWriter.writeBatch(rows, spec, url, new Properties())
+    val snap = MemJdbc.stats("db8")
+    assert((snap("prepare"), snap("executeBatch"), snap("addBatch")) == ((1, 3, n)))
+    assert(MemJdbc.table("db8", "users").size == n)
+
+    // u0 is the one source key: every other sink key is an orphan
+    val repl = new graft.Replicator(spark,
+      graft.config.MappingConfig("mongodb://localhost/app", url, Seq(spec)), url, new Properties())
+    repl.deleteOrphans(spec, sourceIds = Seq("u0").toDF("_id"),
+      sinkIds = (0 to n).map(i => s"u$i").toDF("_id").repartition(1))
+    val del = MemJdbc.stats("db8")
+    assert((del("prepare") - snap("prepare"), del("executeBatch") - snap("executeBatch"),
+      del("addBatch") - snap("addBatch")) == ((1, 3, n)))
+    assert(MemJdbc.table("db8", "users").isEmpty)
   }
 
   // decoded-batch frame in ChangeFeed.decode's column order
@@ -106,9 +128,13 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     val conn = MemJdbc.connect("db7")
     assert(UpsertWriter.readOffset(conn).isEmpty)
     conn.setAutoCommit(false)
+    MySqlDialect.ensureStateTable(conn)
     UpsertWriter.commitOffset(conn, 777L)
     conn.commit()
     assert(UpsertWriter.readOffset(conn).contains(777L))
+    // every statement on this reused connection was closed
+    val st = MemJdbc.stats("db7")
+    assert(st("close") == st("prepare"), s"leaked statements: $st")
   }
 
   test("offset co-commits transactionally with data (C1)") {
@@ -203,7 +229,7 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
       runDdl(SchemaSync.AddColumn("cov_users", "visits", "bigint"))
 
       // upsert-full: insert, then conflicting re-upsert must UPDATE
-      assert(UpsertWriter.upsertSql(cov).contains("ON DUPLICATE KEY UPDATE"))
+      assert(MySqlDialect.upsertAll(cov).sql.contains("ON DUPLICATE KEY UPDATE"))
       exec(DerbyDialect.upsertAll(cov),
         Map("_id" -> "u1", "name" -> "ann", "visits" -> 3L))
       exec(DerbyDialect.upsertAll(cov),

@@ -10,7 +10,7 @@ class UpsertWriterSpec extends AnyFunSuite {
     ColumnSpec("cfg.pub", "tinyint(1)")))
 
   test("full upsert covers pk + every declared sink column (mysql.go:376-431)") {
-    assert(UpsertWriter.upsertSql(spec) ==
+    assert(MySqlDialect.upsertAll(spec).sql ==
       "INSERT INTO `users` (`_id`, `name`, `cfg_pub`) VALUES (?, ?, ?) " +
         "ON DUPLICATE KEY UPDATE `name`=VALUES(`name`), `cfg_pub`=VALUES(`cfg_pub`)")
   }

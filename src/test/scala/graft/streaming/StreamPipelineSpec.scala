@@ -116,30 +116,6 @@ class StreamPipelineSpec extends SparkSpec {
     assert(streamed.nonEmpty, "fixture must exercise at least one overlap")
   }
 
-  test("cdcApply reduces each micro-batch to last image per key before applying") {
-    val dir = Files.createTempDirectory("graft_cdc_src").toString
-    val ckpt = Files.createTempDirectory("graft_cdc_ckpt").toString
-    Seq(
-      ("a", 1L, 10.0), ("a", 3L, 30.0), ("a", 2L, 20.0),
-      ("b", 1L, 1.0))
-      .toDF("_id", "ts", "bal")
-      .write.parquet(s"$dir/batch0")
-
-    val applied = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
-    val stream = spark.readStream
-      .schema("_id STRING, ts LONG, bal DOUBLE")
-      .parquet(s"$dir/batch0")
-    val q = StreamPipeline.cdcApply(stream, "_id", Seq("ts"), ckpt) { (batch, _) =>
-      applied.synchronized {
-        applied ++= batch.collect().map(r =>
-          (r.getString(0), r.getLong(1), r.getDouble(2)))
-      }
-    }
-    q.processAllAvailable()
-    q.stop()
-    assert(applied.sortBy(_._1).toSeq == Seq(("a", 3L, 30.0), ("b", 1L, 1.0)))
-  }
-
   test("lastImage + apply is deterministic under duplicate delivery (replay safety)") {
     val changes = Seq(("a", 2L, "new"), ("a", 1L, "old"), ("a", 2L, "new"))
       .toDF("_id", "ts", "v")
