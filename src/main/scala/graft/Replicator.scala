@@ -4,12 +4,14 @@ import java.util.Properties
 
 import graft.config.{MappingConfig, TableSpec}
 import graft.operators.Transforms
-import graft.sink.{MySqlDialect, SchemaSync, SqlDialect, UpsertWriter}
+import graft.sink.{MySqlDialect, SchemaSync, SinkStatement, SqlDialect, UpsertWriter}
 import graft.sink.UpsertWriter.{inTransaction, withConnection}
 import graft.sources.{ChangeFeed, Json}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import scala.collection.mutable
 
 /** The momyre-equivalent entry surface (reference `app.Run`, run.go:79):
   * schema reconciliation → initial snapshot → continuous replication — as
@@ -176,7 +178,7 @@ class Replicator(
   def deleteOrphans(spec: TableSpec, sourceIds: DataFrame, sinkIds: DataFrame): Unit = {
     val stmt = dialect.delete(spec)
     UpsertWriter.writeRows(sink.MergeApply.deleteReconcile(sinkIds, sourceIds, spec.pk),
-      sinkUrl, sinkProps, dialect)(r => (stmt, _ => r.get(0)))
+      sinkUrl, sinkProps, dialect)(rows => (rows.map(r => (stmt, (_: String) => r.get(0))), () => ()))
   }
 
   /** Entry point C: continuous replication from an oplog-segment directory.
@@ -193,8 +195,8 @@ class Replicator(
   def startStream(source: graft.sources.SourceProvider, checkpointDir: String,
       afterTs: Long,
       quarantineRule: Option[org.apache.spark.sql.Column]): StreamingQuery = {
-    // every batch reads and co-commits the offset — the state table must
-    // exist even when startStream is the first entry point called
+    // every batch co-commits the offset — the state table must exist
+    // even when startStream is the first entry point called
     ensureStateTable()
     val replicated = config.tables.map(t => dbName + "." + t.name).toSet
     val feed = source.changeStream(replicated, afterTs)
@@ -202,6 +204,9 @@ class Replicator(
     val url = sinkUrl; val props = sinkProps; val specs = config.tables
     val dl = dialect
     val qr = quarantineRule
+    // the stored offset: read from the sink on the query's first batch, then
+    // the value last committed here (the query is its only writer meanwhile)
+    var stored: Option[Long] = None
     decoded.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -211,17 +216,16 @@ class Replicator(
         // data-commit and offset-commit); skip them instead of re-writing.
         // Ops AT the stored ts re-apply idempotently — a later entry may
         // legally share the boundary ts, and `>` would lose it. Dead
-        // letters are persisted BEFORE the guard (their ts sentinel must
-        // never be offset-compared).
-        val stored = withConnection(url, props)(UpsertWriter.readOffset(_, dl))
-          .getOrElse(Long.MinValue)
+        // letters are kept whatever their ts: it is never offset-compared.
+        val cut = stored.getOrElse(withConnection(url, props)(UpsertWriter.readOffset(_, dl))
+          .getOrElse(Long.MinValue))
         val maxTs = Replicator.applyBatch(batch, specs, url, props,
           deadLetterDir = Some(s"$checkpointDir/dead_letter"), batchId = batchId,
-          skipBelowTs = stored, dialect = dl,
+          skipBelowTs = cut, dialect = dl,
           quarantineDir = qr.map(_ => s"$checkpointDir/quarantine"),
           quarantineRule = qr)
         maxTs.foreach(ts => inTransaction(url, props)(UpsertWriter.commitOffset(_, ts, dl)))
-        ()
+        stored = Some(maxTs.getOrElse(cut))
       }
       .start()
   }
@@ -254,19 +258,22 @@ object Replicator {
   }
 
   /** Apply one decoded micro-batch: per-key ordered apply on executors
-    * through [[UpsertWriter.writeRows]]. Partial upserts bind only
-    * present∩declared columns (mysql.go:456-459); full images NULL absent
-    * declared columns (mysql.go:381-407); unsets null the named columns.
-    * Returns the max applied offset.
+    * through [[UpsertWriter.writeRows]] — ONE Spark action when the batch
+    * holds no dead letters and no quarantine rule is set. Partial upserts
+    * bind only present∩declared columns (mysql.go:456-459); full images
+    * NULL absent declared columns (mysql.go:381-407); unsets null the
+    * named columns. Returns the max applied or quarantined ts.
     *
     * Rows are repartitioned by (tbl, id) and sorted by (tbl, id, ts, seq),
     * so each key's ops reach the writer contiguous and in order; its
-    * statement shape is (table, present-column-set) for upserts and the
-    * table for deletes.
+    * statement shape, rendered once, is (table, present-column-set) for
+    * upserts and the table for deletes. Each write task also reports its
+    * partition's max ts and dead letters: no pass of its own for either.
     *
-    * `skipBelowTs`: replay guard — ops with ts STRICTLY below this (the
-    * durably stored offset) are dropped before apply. Ops AT the stored
-    * ts re-apply idempotently: the offset proves some op at that ts was
+    * `skipBelowTs`: replay guard — the writer skips ops with ts STRICTLY
+    * below this (the durably stored offset); as a plan literal, new each
+    * batch, it would compile new code each batch. Ops AT the stored ts
+    * re-apply idempotently: the offset proves some op at that ts was
     * applied, but distinct entries may legally share one ts (a producer
     * with second-granularity stamps), and a later batch could carry a
     * sibling — skipping ≤ would lose it. See [[Replicator.startStream]]. */
@@ -282,18 +289,9 @@ object Replicator {
       quarantineDir: Option[String] = None,
       quarantineRule: Option[org.apache.spark.sql.Column] = None): Option[Long] = {
     val specByName = specs.map(s => s.name -> s).toMap
-    // one pass over the decoded batch serves apply + dead-letter + offset
-    batch.persist()
-    try {
-    // dead letters are PERSISTED before the offset advances past them —
-    // dropping them silently would be unrecoverable loss (the reference
-    // aborts instead, mongo.go:183; neither is acceptable at scale). The
-    // batchId-keyed subdirectory + overwrite makes the write idempotent
-    // under foreachBatch replay (no duplicate dead letters).
-    deadLetterDir.foreach { dir =>
-      batch.filter(col("kind") === "dead_letter")
-        .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-    }
+    val deletes = specs.map(s => s.name -> dialect.delete(s)).toMap
+    val inScope = col("kind").isin("upsert", "delete") && col("tbl").isin(specs.map(_.name): _*)
+    val rows = batch.filter(inScope || col("kind") === "dead_letter")
     // quality quarantine — ingest admission control on the APPLY path:
     // upserts failing the declarative rule are persisted to the
     // quarantine store (batchId-keyed overwrite, idempotent under
@@ -303,69 +301,84 @@ object Replicator {
     // quarantined rows — they are durably stored BEFORE the offset
     // co-commits, so a later re-admission (rule relaxed, upstream fixed)
     // replays from the quarantine store, never from the oplog.
-    val inScope = batch
-      .filter(col("kind").isin("upsert", "delete") &&
-        col("tbl").isin(specs.map(_.name): _*) &&
-        col("ts") >= lit(skipBelowTs))
-    val applicable = (quarantineDir, quarantineRule) match {
+    val marked = (quarantineDir, quarantineRule) match {
       case (Some(dir), Some(rule)) =>
         // a NULL rule result admits: partial updates legally omit the
         // guarded field, and quarantining every such row would divert
         // the bulk of a $set-heavy feed — write an explicit IS NOT NULL
         // conjunct to reject unevaluable rows instead
         val bad = col("kind") === "upsert" && !coalesce(rule, lit(true))
-        inScope.filter(bad).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-        inScope.filter(!bad)
-      case _ => inScope
+        batch.filter(inScope && col("ts") >= lit(skipBelowTs) && bad)
+          .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+        rows.withColumn("kind", when(bad, lit("quarantined")).otherwise(col("kind")))
+      case _ => rows
     }
-    val relevant = applicable
+    val relevant = marked
       .repartition(col("tbl"), col("id"))
       // applyOps tx inner ops share the outer ts — seq (index within the
       // oplog entry) breaks the tie so per-key order is total
       .sortWithinPartitions(col("tbl"), col("id"), col("ts"), col("seq"))
-    UpsertWriter.writeRows(relevant, url, props, dialect) { r =>
-      val spec = specByName(r.getString(1))
-      r.getString(0) match {
-        case "delete" =>
-          (dialect.delete(spec), _ => r.getString(3))
-        case "upsert" =>
-          val fields = Json.parseObject(r.getString(4))
-          val partial = r.getBoolean(5)
-          // removal paths arrive DOTTED (source-path form, ChangeEvent
-          // doc). A path covers a declared column iff it equals the
-          // column's dotted sourceName or is a dotted ANCESTOR: `$unset:
-          // {cfg: 1}` (whole-subdoc unset) nulls cfg.pub / cfg.deep.y
-          // (sink cfg_pub, cfg_deep_y) — while `$unset` of a SCALAR
-          // `status` leaves a distinct source field `status_code` alone,
-          // which a flattened-prefix match would corrupt.
-          val removedPaths = r.getSeq[String](6).toSet
-          val removedCols: Set[String] = spec.columns.iterator
-            .filter(c => removedPaths.contains(c.sourceName) ||
-              removedPaths.exists(p => c.sourceName.startsWith(p + ".")))
-            .map(_.sinkName).toSet
-          val declared = spec.columns.map(_.sinkName)
-          val present =
-            if (partial) declared.filter(c => fields.contains(c) || removedCols.contains(c))
-            else declared
-          val valueOf: String => Any = {
-            case spec.pk => r.getString(3)
-            case c =>
-              // P4 at the bind boundary: composite values become JSON
-              // text, exactly like the snapshot path (mysql.go:402-404)
-              if (removedCols.contains(c)) null
-              else fields.getOrElse(c, null) match {
-                case v @ (_: Seq[_] | _: Map[_, _]) => Json.render(v)
-                case other                          => other
-              }
-          }
-          (dialect.upsert(spec, present), valueOf)
+    val parts = UpsertWriter.writeRows(relevant, url, props, dialect) { rows =>
+      var maxTs = Long.MinValue // below every in-scope ts: none seen yet
+      var deadLetters = 0L
+      val upserts = mutable.HashMap.empty[(String, Seq[String]), SinkStatement]
+      val writes = rows.flatMap { r =>
+        val ts = r.getLong(2)
+        r.getString(0) match {
+          case "dead_letter" => deadLetters += 1; None
+          case _ if ts < skipBelowTs => None
+          case kind =>
+            maxTs = math.max(maxTs, ts) // quarantined rows too: they were stored above
+            val spec = specByName(r.getString(1))
+            kind match {
+              case "quarantined" => None
+              case "delete" => Some((deletes(spec.name), (_: String) => r.getString(3)))
+              case "upsert" =>
+                val fields = Json.parseObject(r.getString(4))
+                val partial = r.getBoolean(5)
+                // removal paths arrive DOTTED (source-path form, ChangeEvent
+                // doc). A path covers a declared column iff it equals the
+                // column's dotted sourceName or is a dotted ANCESTOR: `$unset:
+                // {cfg: 1}` (whole-subdoc unset) nulls cfg.pub / cfg.deep.y
+                // (sink cfg_pub, cfg_deep_y) — while `$unset` of a SCALAR
+                // `status` leaves a distinct source field `status_code` alone,
+                // which a flattened-prefix match would corrupt.
+                val removedPaths = r.getSeq[String](6).toSet
+                val removedCols: Set[String] = spec.columns.iterator
+                  .filter(c => removedPaths.contains(c.sourceName) ||
+                    removedPaths.exists(p => c.sourceName.startsWith(p + ".")))
+                  .map(_.sinkName).toSet
+                val declared = spec.columns.map(_.sinkName)
+                val present =
+                  if (partial) declared.filter(c => fields.contains(c) || removedCols.contains(c))
+                  else declared
+                val valueOf: String => Any = {
+                  case spec.pk => r.getString(3)
+                  case c =>
+                    // P4 at the bind boundary: composite values become JSON
+                    // text, exactly like the snapshot path (mysql.go:402-404)
+                    if (removedCols.contains(c)) null
+                    else fields.getOrElse(c, null) match {
+                      case v @ (_: Seq[_] | _: Map[_, _]) => Json.render(v)
+                      case other                          => other
+                    }
+                }
+                val stmt = upserts.getOrElseUpdate((spec.name, present), dialect.upsert(spec, present))
+                Some((stmt, valueOf))
+            }
+        }
       }
+      (writes, () => (maxTs, deadLetters))
     }
-    // offset from in-scope rows: dead letters (ts sentinel 0) never move
-    // the checkpoint, but QUARANTINED rows do — they are durably stored
-    // above, so the checkpoint may pass them without loss
-    val mx = inScope.agg(max(col("ts"))).collect()(0)
-    if (mx.isNullAt(0)) None else Some(mx.getLong(0))
-    } finally batch.unpersist()
+    // dead letters are PERSISTED before the offset advances past them —
+    // dropping them silently would be unrecoverable loss (the reference
+    // aborts instead, mongo.go:183; neither is acceptable at scale). The
+    // batchId-keyed subdirectory + overwrite makes the write idempotent
+    // under foreachBatch replay (no duplicate dead letters).
+    if (parts.exists(_._2 > 0)) deadLetterDir.foreach { dir =>
+      batch.filter(col("kind") === "dead_letter")
+        .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+    }
+    parts.iterator.map(_._1).filter(_ != Long.MinValue).maxOption
   }
 }

@@ -7,6 +7,7 @@ import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** W1/W2/W3/C1: the transactional JDBC apply path (reference
   * `mysql.go:292-588`). Spark's built-in JDBC sink is append/overwrite
@@ -25,9 +26,9 @@ import scala.collection.mutable
   *       `mysql.go:563-588` — with parallel executor connections the
   *       window between data-commit and offset-commit is closed by (a)
   *       and (c), not by a shared transaction), plus
-  *   (c) skip-if-already-applied: each batch reads the stored offset
-  *       first and drops ops STRICTLY below it ([[readOffset]], consumed
-  *       by `Replicator.startStream`) — replays after a crash in the
+  *   (c) skip-if-already-applied: the apply skips ops STRICTLY below the
+  *       stored offset ([[readOffset]], read once per query by
+  *       `Replicator.startStream`) — replays after a crash in the
   *       (b)-window re-apply only the unrecorded suffix plus the
   *       boundary-ts ops, which (a) makes free; ops AT the stored ts are
   *       never skipped because a later entry may legally share that ts.
@@ -131,31 +132,32 @@ object UpsertWriter {
     }
 
   /** The executor-side write loop every sink path runs (snapshot, orphan
-    * delete, streamed apply). `statementFor` maps a row to its statement
-    * and to the value bound for each of the statement's named params.
-    *
-    * Each non-empty partition (capped at `dialect.maxWriteConnections`)
-    * applies its rows in ONE transaction on one connection. Prepared
-    * statements are cached per SQL text for the life of the partition, and
-    * consecutive rows sharing a statement accumulate into one JDBC batch,
-    * flushed when the statement changes — batches execute in add order,
-    * so the input's per-key op order is preserved — or at
-    * [[applyBatchSize]]. A uniform stream costs ~one round trip per
-    * [[applyBatchSize]] rows instead of one per row (the reference
-    * round-trips per op and reuses its statements, `mysql.go:410-415`). */
-  private[graft] def writeRows(df: DataFrame, url: String, props: Properties,
-      dialect: SqlDialect)(statementFor: Row => (SinkStatement, String => Any)): Unit = {
+    * delete, streamed apply), as ONE Spark action. `partition` maps a
+    * partition's rows to the writes they make (a row may make none; a
+    * write is a statement and the value bound to each named param) and to
+    * a summary, read once the rows are consumed and returned from the
+    * same job. A partition that writes (capped at
+    * `dialect.maxWriteConnections`) applies its writes in ONE transaction
+    * on one connection. Prepared statements are cached per SQL text, and
+    * consecutive writes sharing a statement accumulate into one JDBC
+    * batch, flushed when the statement changes — batches execute in add
+    * order, so per-key op order holds — or at [[applyBatchSize]]: ~one
+    * round trip per [[applyBatchSize]] uniform rows, not one per row (the
+    * reference round-trips per op and reuses statements, `mysql.go:410-415`). */
+  private[graft] def writeRows[A: ClassTag](df: DataFrame, url: String, props: Properties,
+      dialect: SqlDialect)(
+      partition: Iterator[Row] => (Iterator[(SinkStatement, String => Any)], () => A)): Array[A] = {
     // coalesce concatenates whole parent partitions, so a key's sorted run
     // stays contiguous — per-key order (O1) holds at any connection cap
     val bounded = dialect.maxWriteConnections.fold(df)(df.coalesce)
-    bounded.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) inTransaction(url, props) { conn =>
+    bounded.rdd.mapPartitions { rows =>
+      val (writes, summary) = partition(rows)
+      if (writes.hasNext) inTransaction(url, props) { conn =>
         val cache = mutable.Map.empty[String, PreparedStatement]
         var current: PreparedStatement = null
         var pending = 0
         def flush(): Unit = if (pending > 0) { current.executeBatch(); pending = 0 }
-        rows.foreach { r =>
-          val (stmt, valueOf) = statementFor(r)
+        writes.foreach { case (stmt, valueOf) =>
           val st = cache.getOrElseUpdate(stmt.sql, conn.prepareStatement(stmt.sql))
           if (st ne current) { flush(); current = st }
           // bind order is the dialect's declared param order, so the same
@@ -169,7 +171,8 @@ object UpsertWriter {
         }
         flush()
       }
-    }
+      Iterator.single(summary())
+    }.collect()
   }
 
   /** W3 snapshot side: full-image upsert of every row of `df`, one
@@ -186,7 +189,7 @@ object UpsertWriter {
     val idxBySink = (spec.pk +: spec.columns.map(_.sinkName))
       .map(c => c -> df.columns.indexOf(c)).toMap
     require(idxBySink.values.forall(_ >= 0), s"batch is missing declared columns for ${spec.name}")
-    writeRows(df, url, props, dialect)(r => (stmt, c => r.get(idxBySink(c))))
+    writeRows(df, url, props, dialect)(rows => (rows.map(r => (stmt, (c: String) => r.get(idxBySink(c)))), () => ()))
   }
 
   /** Null-safe bind: Derby (and other strict engines) reject

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.Properties
 
 import graft.config.ConfigParser
-import graft.sink.{MemJdbc, SchemaSync, UpsertWriter}
+import graft.sink.{CountingDialect, MemJdbc, SchemaSync, UpsertWriter}
 import org.apache.spark.sql.functions._
 
 /** End-to-end momyre-equivalence: config → schema plan → snapshot →
@@ -104,6 +104,50 @@ class ReplicatorSpec extends SparkSpec {
     val dl = spark.read.parquet(s"$ckpt/dead_letter/batch=1")
       .select("fields_json").collect().map(_.getString(0))
     assert(dl.exists(_.contains("utter garbage")))
+  }
+
+  test("a query reads the stored offset once; a restarted query reads it again and skips below it") {
+    MemJdbc.reset("replo")
+    val cfg = ConfigParser.parse(configText.replace("graftmem:repl", "graftmem:replo"))
+    val url = MemJdbc.UrlPrefix + "replo"
+    val repl = new Replicator(spark, cfg, url, new Properties(), CountingDialect)
+    repl.reconcileSchema(Map.empty, force = false)
+    val segDir = Files.createTempDirectory("graft_offset_seg").toString
+    val ckpt = Files.createTempDirectory("graft_offset_ckpt").toString
+    def segment(name: String, lines: String*): Unit =
+      Files.write(Paths.get(segDir, name), lines.mkString("\n").getBytes("UTF-8"))
+    def offset: String = new String(MemJdbc.table("replo", UpsertWriter.StateTable)("timestamp")("value")
+      .asInstanceOf[Array[Byte]], "UTF-8")
+    CountingDialect.reset()
+
+    // two batches in one query: one offset read, each batch commits
+    segment("seg0.json", """{"op":"i","ns":"app.users","ts":101,"o":{"_id":"u1","name":"ann"}}""")
+    val q1 = repl.startStream(segDir, ckpt)
+    q1.processAllAvailable()
+    segment("seg1.json", """{"op":"u","ns":"app.users","ts":102,"o":{"$set":{"visits":2}},"o2":{"_id":"u1"}}""")
+    q1.processAllAvailable()
+    q1.stop()
+    assert(offset == "102")
+    assert(CountingDialect.count("readOffset") == 1)
+
+    // the sink's offset moved past what this checkpoint has seen (a run
+    // that committed it, then crashed before its streaming commit): the
+    // restarted query must read it and skip the op strictly below it
+    val conn = MemJdbc.connect("replo")
+    conn.setAutoCommit(false)
+    UpsertWriter.commitOffset(conn, 110L, CountingDialect)
+    conn.commit()
+    segment("seg2.json",
+      """{"op":"u","ns":"app.users","ts":105,"o":{"$set":{"name":"stale"}},"o2":{"_id":"u1"}}""",
+      """{"op":"u","ns":"app.users","ts":110,"o":{"$set":{"visits":10}},"o2":{"_id":"u1"}}""")
+    val q2 = repl.startStream(segDir, ckpt)
+    q2.processAllAvailable()
+    q2.stop()
+    assert(CountingDialect.count("readOffset") == 2)
+    val u1 = MemJdbc.table("replo", "users")("u1")
+    assert(u1("name") == "ann", "the op below the stored offset was applied")
+    assert(u1("visits") == 10L, "the op at the stored offset re-applies")
+    assert(offset == "110")
   }
 
   test("scalar $unset never nulls an underscore-named sibling column (ADVICE r15)") {

@@ -193,6 +193,36 @@ class DerbyRuntimeSpec extends SparkSpec {
     assert(t2("bad") == Seq("junk", 999999L))
   }
 
+  test("mixed batch: dead letters written, below-cut rows skipped, offset over applied and quarantined rows") {
+    val cfg = ConfigParser.parse(configText)
+    val users = cfg.table("users").get
+    freshTable(users)
+    val dlDir = Files.createTempDirectory("graft_dead").toString
+    val qDir = Files.createTempDirectory("graft_quarantine").toString
+    val rule = get_json_object(col("fields_json"), "$.visits").cast("long") <= 100L
+    val batch = Seq(
+      // a payload-parse dead letter keeps its ts; it never moves the offset
+      ("dead_letter", "users", 99L, null: String, "raw {", false, Seq.empty[String], 0),
+      ("upsert", "users", 5L, "old", """{"name":"stale","visits":1}""", false, Seq.empty[String], 0),
+      ("upsert", "users", 6L, "oldbad", """{"name":"stale","visits":500}""", false, Seq.empty[String], 0),
+      ("upsert", "users", 10L, "a", """{"name":"at-cut","visits":1}""", false, Seq.empty[String], 0),
+      ("upsert", "users", 12L, "b", """{"name":"ok","visits":2}""", false, Seq.empty[String], 0),
+      ("delete", "users", 13L, "gone", "", false, Seq.empty[String], 0),
+      ("upsert", "users", 14L, "bad", """{"name":"junk","visits":999}""", false, Seq.empty[String], 0))
+      .toDF("kind", "tbl", "ts", "id", "fields_json", "partial", "removed", "seq")
+
+    val maxTs = Replicator.applyBatch(batch, Seq(users), url, props,
+      deadLetterDir = Some(dlDir), batchId = 4L, skipBelowTs = 10L, dialect = DerbyDialect,
+      quarantineDir = Some(qDir), quarantineRule = Some(rule))
+    assert(maxTs.contains(14L), "offset = max over applied and quarantined rows")
+    assert(readTable("users", Seq("name", "visits")) ==
+      Map("a" -> Seq("at-cut", 1L), "b" -> Seq("ok", 2L)))
+    val dead = spark.read.parquet(s"$dlDir/batch=4")
+    assert(dead.select("fields_json").as[String].collect().toSeq == Seq("raw {"))
+    // below-cut rows are neither applied nor quarantined
+    assert(spark.read.parquet(qDir).select("id").as[String].collect().toSeq == Seq("bad"))
+  }
+
   test("MERGE replay is idempotent: re-applying an applied batch converges (crash window)") {
     val cfg = ConfigParser.parse(configText)
     val users = cfg.table("users").get

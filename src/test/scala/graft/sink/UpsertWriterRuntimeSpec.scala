@@ -63,14 +63,15 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
   private def decodedDf(rows: Seq[(String, String, Long, String, String, Boolean, Seq[String], String, Int)]) =
     rows.toDF("kind", "tbl", "ts", "id", "fields_json", "partial", "removed", "reason", "seq")
 
+  // 100 full-image upserts on one table = ONE statement shape
+  private val fullImages = (1 to 100).map(i =>
+    ("upsert", "users", i.toLong, s"u$i",
+      s"""{"name":"n$i","visits":$i}""", false, Seq.empty[String], null: String, 0))
+
   test("applyBatch reuses prepared statements and batches runs (mysql.go:410-415 parity)") {
     MemJdbc.reset("db4")
     val url = MemJdbc.UrlPrefix + "db4"
-    // 100 full-image upserts on one table = ONE statement shape
-    val ops = (1 to 100).map(i =>
-      ("upsert", "users", i.toLong, s"u$i",
-        s"""{"name":"n$i","visits":$i}""", false, Seq.empty[String], null: String, 0))
-    graft.Replicator.applyBatch(decodedDf(ops), Seq(spec), url, new Properties())
+    graft.Replicator.applyBatch(decodedDf(fullImages), Seq(spec), url, new Properties())
     val st = MemJdbc.stats("db4")
     assert(st.getOrElse("executeUpdate", 0) == 0,  "no per-op round-trips")
     assert(st("addBatch") == 100,                  "every op batched")
@@ -78,6 +79,67 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     assert(st("prepare") <= 4, s"statement reuse: prepared ${st("prepare")} for 100 ops")
     assert(st("executeBatch") <= 4, s"run batching: ${st("executeBatch")} flushes for 100 ops")
     assert(MemJdbc.table("db4", "users").size == 100)
+  }
+
+  test("applyBatch renders each statement shape once per non-empty partition") {
+    MemJdbc.reset("db9")
+    val url = MemJdbc.UrlPrefix + "db9"
+    CountingDialect.reset()
+    graft.Replicator.applyBatch(decodedDf(fullImages), Seq(spec), url, new Properties(),
+      dialect = CountingDialect)
+    val st = MemJdbc.stats("db9")
+    // one prepare per non-empty partition: each rendered the one shape once
+    assert(CountingDialect.count("upsert") == st("prepare") && st("prepare") <= 4)
+    val dels = (1 to 100).map(i =>
+      ("delete", "users", 200L + i, s"u$i", null: String, false, Seq.empty[String], null: String, 0))
+    CountingDialect.reset()
+    graft.Replicator.applyBatch(decodedDf(dels), Seq(spec), url, new Properties(),
+      dialect = CountingDialect)
+    assert(CountingDialect.count("delete") == 1, "a table's delete is rendered once per batch")
+    assert(CountingDialect.count("upsert") == 0 && MemJdbc.table("db9", "users").isEmpty)
+  }
+
+  test("applyBatch plan is batch-invariant: a new replay cut compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    MemJdbc.reset("db10")
+    val url = MemJdbc.UrlPrefix + "db10"
+    graft.Replicator.applyBatch(decodedDf(fullImages), Seq(spec), url, new Properties(),
+      skipBelowTs = 5L)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val mx = graft.Replicator.applyBatch(decodedDf(fullImages), Seq(spec), url, new Properties(),
+      skipBelowTs = 50L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the second cut compiled new code")
+    assert(mx.contains(100L))
+    assert(MemJdbc.stats("db10")("addBatch") == 96 + 51, "the guard skips ops below each cut")
+  }
+
+  test("a batch without dead letters is one Spark action and writes no dead-letter directory") {
+    MemJdbc.reset("db11")
+    val url = MemJdbc.UrlPrefix + "db11"
+    val batch = decodedDf(fullImages)
+    val deadLetters = java.nio.file.Files.createTempDirectory("graft_dl").toString
+    val group = "graft-one-pass-apply"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one-pass apply")
+    val mx = try graft.Replicator.applyBatch(batch, Seq(spec), url, new Properties(),
+      deadLetterDir = Some(deadLetters), batchId = 3L)
+    finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.removeSparkListener(listener)
+    // with AQE the one action is two jobs: the shuffle map stage, the result
+    val expected = if (spark.conf.get("spark.sql.adaptive.enabled").toBoolean) 2 else 1
+    assert(jobs.get == expected, s"${jobs.get} jobs for one batch")
+    assert(mx.contains(100L))
+    assert(!new java.io.File(s"$deadLetters/batch=3").exists)
+    assert(MemJdbc.table("db11", "users").size == 100)
   }
 
   test("applyBatch flushes between shapes so per-key op order is preserved") {
