@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver-run per round → BENCH_r{N}.json): times the
   * headline queries from [[SparkEntry.benchQueries]] on
   * `SPARK_GRAFT_SF_DIR` and prints exactly one JSON line.
@@ -339,14 +337,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.start(s"local[$cpus]", cpus)
     // The inter-rep cleanup below unpersists locally-checkpointed RDDs
     // (Lloyd / connected-components rounds); each such unpersist logs
     // "RDD was locally checkpointed" at WARN because the lineage cannot
@@ -362,7 +354,6 @@ object Bench {
         "org.apache.spark.sql.catalyst.util.StringUtils").foreach(l =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         l, org.apache.logging.log4j.Level.ERROR))
-    graft.functions.GraftFunctions.installAll(spark)
     // Warm the session once (file listing, parquet footers, codegen paths)
     // so per-query timings measure the queries, not JVM cold start.
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")

@@ -5,7 +5,6 @@ import java.util.Properties
 
 import graft.config.ConfigParser
 import graft.sink.SchemaSync
-import org.apache.spark.sql.SparkSession
 
 /** The momyre binary (`main.go:31-35` → `app.Run`, `run.go:79`) as a
   * `runMain`-able Spark driver: load the YAML mapping, honor the
@@ -93,13 +92,9 @@ object Daemon {
     val cfg = parsed.copy(
       source = args.inp.getOrElse(parsed.source),
       sink = args.out.getOrElse(parsed.sink))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-daemon")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    graft.functions.GraftFunctions.installAll(spark)
+    val spark = GraftSession.start(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32,
+      "spark.app.name" -> "graft-daemon", "spark.ui.enabled" -> "true")
     val props = new Properties()
     val repl = new Replicator(spark, cfg, cfg.sink, props)
     val observed = graft.sink.UpsertWriter.withConnection(cfg.sink, props)(observedCatalog)

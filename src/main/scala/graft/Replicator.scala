@@ -308,7 +308,11 @@ object Replicator {
         // the bulk of a $set-heavy feed — write an explicit IS NOT NULL
         // conjunct to reject unevaluable rows instead
         val bad = col("kind") === "upsert" && !coalesce(rule, lit(true))
-        batch.filter(inScope && col("ts") >= lit(skipBelowTs) && bad)
+        // below-cut rows stay out of the store (re-admitting an old image
+        // would overwrite newer state); the cut rides in the closure, not
+        // as a plan literal that would compile new code each batch
+        val atOrAboveCut = udf((ts: Long) => ts >= skipBelowTs)
+        batch.filter(inScope && atOrAboveCut(col("ts")) && bad)
           .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
         rows.withColumn("kind", when(bad, lit("quarantined")).otherwise(col("kind")))
       case _ => rows

@@ -72,14 +72,8 @@ object ScaleSoak {
       bigMult: Int = ScaleFactor)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.installAll(spark)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.start(s"local[$cpus]", cpus)
 
     def docs(mult: Int) = SkewBench.documents(spark, BaseDocs * mult, skewed = false)
     def vecs(mult: Int) = SkewBench.embeddings(spark, BaseVecs * mult, skewed = false)

@@ -177,8 +177,7 @@ object SkewBench {
     *    cap absorbing the monster bucket of exact copies;
     *  - `dedup_jaccard`: shingle-posting-list Jaccard with `maxDocFreq`
     *    dropping the hot shingles. */
-  def run(spark: SparkSession, nRows: Long, nDocs: Long,
-      only: Set[String] = Set.empty): Seq[(String, Double, Double)] = {
+  def run(spark: SparkSession, nRows: Long, nDocs: Long): Seq[(String, Double, Double)] = {
     graft.functions.GraftFunctions.register(spark)
     val tailKeys = (nRows / 100) max 10
     val dim = spark.range(tailKeys + 1)
@@ -382,6 +381,6 @@ object SkewBench {
         graft.operators.Dedup.repeatedSpans(
           documents(spark, nDocs, sk), "doc_id", "text", gramChars = 30)
       })
-    paths.filter(p => only.isEmpty || only(p._1)).map(timePair)
+    paths.map(timePair)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev smoke main: drives the public API surface end-to-end against the
@@ -10,14 +9,8 @@ import org.apache.spark.sql.functions._
 object Smoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.installAll(spark)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.start(s"local[$cpus]", cpus)
     import spark.implicits._
 
     println(s"== entry: ${SparkEntry.entry(spark).count()} rows")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure proof main (forked by TopKSpillEndToEndSpec, output
@@ -34,7 +33,7 @@ import org.apache.spark.sql.functions._
 object SpillProof {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.start(
       // two concurrent tasks, not four: the WINDOW twin's consumers
       // (WindowExec buffer, aggregate BytesToBytesMap) need their
       // minimum pages from the same starved pool, and with 4-way task
@@ -44,22 +43,16 @@ object SpillProof {
       // not a finding about the heap path. Halving concurrency doubles
       // each task's guaranteed share; the heap path still spills (its
       // state is tens of MB against a ~7 MB pool).
-      .master("local[2]")
-      .appName("graft-spill-proof")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
+      "local[2]", 2,
+      "spark.app.name" -> "graft-spill-proof",
+      "spark.sql.adaptive.enabled" -> "false",
       // starve the ACCOUNTING pool (not the heap): ~12 MB system memory
       // → ~7.2 MB unified pool shared by the task's consumers
-      .config("spark.testing.memory", (12L << 20).toString)
-      .config("spark.testing.reservedMemory", "0")
+      "spark.testing.memory" -> (12L << 20).toString,
+      "spark.testing.reservedMemory" -> "0",
       // fine-grained reservations so the decline arrives while chunks are
       // held (tier 2), not on the first request (tier 3)
-      .config("spark.graft.topk.partialReserveChunk", (256L << 10).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.installAll(spark)
+      "spark.graft.topk.partialReserveChunk" -> (256L << 10).toString)
 
     val spills = new java.util.concurrent.atomic.AtomicLong
     val flushes = new java.util.concurrent.atomic.AtomicLong

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * longs via `spark.sql.legacy.parquet.nanosAsLong`) and microsecond
   * TIMESTAMP/TIMESTAMP_NTZ — so [[load]] normalizes whatever the file
   * holds to the canonical nanos-long view. Timestamp math runs in the
-  * UTC session every entry point pins, matching the oracle's naive
-  * reading. Scan pushdown through the normalizing projection is restored
+  * UTC session [[GraftSession]] pins for every entry point, matching the
+  * oracle's naive reading. Scan pushdown through the normalizing projection is restored
   * by [[graft.plans.DerivedPredicatePushdown]], which maps derived-offset
   * bounds back to raw `ts` literals of the file's own type.
   */

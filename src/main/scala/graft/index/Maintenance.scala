@@ -168,13 +168,8 @@ object IndexMaintenance {
     val keepFrom = flag("keep-from", -1L)
     val keepLast = flag("keep-last", 3L).toInt
     val grace = flag("orphan-grace-ms", 20L * 60L * 1000L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus
+    val spark = graft.GraftSession.start(s"local[$cpus]", cpus)
     roots.foreach { root =>
       val line =
         try Maintenance.maintain(spark, root, keepFrom, grace, keepLast)

@@ -114,6 +114,31 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     assert(MemJdbc.stats("db10")("addBatch") == 96 + 51, "the guard skips ops below each cut")
   }
 
+  test("quarantine write is batch-invariant: a new replay cut compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.{col, get_json_object}
+    MemJdbc.reset("db12")
+    val url = MemJdbc.UrlPrefix + "db12"
+    val qDir = java.nio.file.Files.createTempDirectory("graft_quarantine").toString
+    // every tenth image violates the rule
+    val rule = get_json_object(col("fields_json"), "$.visits").cast("long") % 10L =!= 0L
+    def applyAt(batchId: Long, cut: Long) =
+      graft.Replicator.applyBatch(decodedDf(fullImages), Seq(spec), url, new Properties(),
+        batchId = batchId, skipBelowTs = cut,
+        quarantineDir = Some(qDir), quarantineRule = Some(rule))
+    applyAt(1L, 5L)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val mx = applyAt(2L, 50L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the second cut compiled new code")
+    assert(mx.contains(100L))
+    def stored(batchId: Long) =
+      spark.read.parquet(s"$qDir/batch=$batchId").select("ts").as[Long].collect().sorted.toSeq
+    // below-cut rows stay out of the store
+    assert(stored(1L) == (10L to 100L by 10L))
+    assert(stored(2L) == (50L to 100L by 10L))
+  }
+
   test("a batch without dead letters is one Spark action and writes no dead-letter directory") {
     MemJdbc.reset("db11")
     val url = MemJdbc.UrlPrefix + "db11"

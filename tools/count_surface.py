@@ -3,10 +3,13 @@
 
     python3 tools/count_surface.py [REPO_ROOT]
 
-Three counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
-  - scala_lines: non-blank lines of the Scala sources;
-  - options:     distinct `spark.graft.*` conf keys the sources name;
-  - mains:       `def main` entry points.
+Four counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
+  - scala_lines:      non-blank lines of the Scala sources;
+  - options:          distinct `spark.graft.*` conf keys the sources name;
+  - mains:            `def main` entry points;
+  - session_builders: `SparkSession.builder` occurrences. Every entry point
+                      builds its session through `graft.GraftSession`, so
+                      this reads 1.
 
 A simplification is read as the before/after difference of these counts.
 """
@@ -18,10 +21,11 @@ import sys
 
 OPTION = re.compile(r"spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]")
 MAIN = re.compile(r"\bdef main\b")
+BUILDER = re.compile(r"\bSparkSession\.builder\b")
 
 
 def count(root):
-    lines, mains, options = 0, 0, set()
+    lines, mains, builders, options = 0, 0, 0, set()
     for d, _, files in os.walk(os.path.join(root, "src", "main")):
         for f in files:
             if not f.endswith(".scala"):
@@ -32,7 +36,9 @@ def count(root):
                         lines += 1
                     options.update(OPTION.findall(line))
                     mains += len(MAIN.findall(line))
-    return {"scala_lines": lines, "options": len(options), "mains": mains}
+                    builders += len(BUILDER.findall(line))
+    return {"scala_lines": lines, "options": len(options), "mains": mains,
+            "session_builders": builders}
 
 
 if __name__ == "__main__":
