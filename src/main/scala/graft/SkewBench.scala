@@ -178,7 +178,6 @@ object SkewBench {
     *  - `dedup_jaccard`: shingle-posting-list Jaccard with `maxDocFreq`
     *    dropping the hot shingles. */
   def run(spark: SparkSession, nRows: Long, nDocs: Long): Seq[(String, Double, Double)] = {
-    graft.functions.GraftFunctions.register(spark)
     val tailKeys = (nRows / 100) max 10
     val dim = spark.range(tailKeys + 1)
       .select(concat(lit("k"), col("id")).as("_id"), col("id").as("weight"))

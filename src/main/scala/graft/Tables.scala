@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Loader for the driver-provided parquet test tables (TESTDATA.md).
   *
@@ -15,9 +15,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * TIMESTAMP/TIMESTAMP_NTZ — so [[load]] normalizes whatever the file
   * holds to the canonical nanos-long view. Timestamp math runs in the
   * UTC session [[GraftSession]] pins for every entry point, matching the
-  * oracle's naive reading. Scan pushdown through the normalizing projection is restored
-  * by [[graft.plans.DerivedPredicatePushdown]], which maps derived-offset
-  * bounds back to raw `ts` literals of the file's own type.
+  * oracle's naive reading. Scan pushdown through the normalizing
+  * projection is restored by [[graft.plans.DerivedPredicatePushdown]],
+  * which maps derived-offset bounds back to raw `ts` literals of the
+  * file's own type. That rule is the session's, not this loader's: it is
+  * installed where the session is built (`GraftSession.start`, or
+  * `spark.sql.extensions=graft.functions.GraftExtensions`), and [[load]]
+  * changes nothing on the session but the `nanosAsLong` read flag.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -31,12 +35,8 @@ object Tables {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(TimestampNTZType) =>
-        // offset filters land on the normalized column; the derived-bound
-        // rule maps them back to raw-ts literals the scan can prune on
-        graft.plans.GraftOptimizations.install(spark)
         df.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
       case Some(TimestampType) =>
-        graft.plans.GraftOptimizations.install(spark)
         df.withColumn("ts", unix_micros(col("ts")) * 1000L)
       case _ => df // LongType nanos (or no ts column): already canonical
     }
@@ -46,33 +46,23 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Scale-adaptive scan-parallelism floor for KERNEL-HEAVY text passes
-    * (guide §2.5 "input skew: one huge unsplittable file … repartition
-    * immediately after the read"). The harness's corpus tables are
-    * single-row-group parquet files, so every scan plans ONE task and a
-    * gram-digest/shingle kernel pass runs single-threaded regardless of
-    * core count. When — and only when — the frame's planned parallelism
-    * is under half the floor (default: the session's default
-    * parallelism, overridable via `spark.graft.scan.parallelismFloor`;
-    * 0 disables), the input is shuffled ONCE round-robin so the kernel
-    * runs on every core. By the same single-row-group construction that
-    * input is small (one row group caps at the writer's block size), so
-    * the widening shuffle moves megabytes; on a real multi-file corpus
-    * the planned parallelism already exceeds the floor and this is the
-    * IDENTITY — the text of a 100 TB lake is never shuffled by this
-    * helper (the PlanSpec shuffle budgets count it as the at-most-one
-    * conditional widening exchange). */
-  def widenScan(df: DataFrame, site: String = ""): DataFrame = {
-    val spark = df.sparkSession
-    val floor = spark.conf.get("spark.graft.scan.parallelismFloor",
-      spark.sparkContext.defaultParallelism.toString).toInt
-    // per-site kill switch (comma list of site labels), so each widening
-    // call site can be A/B-measured and disabled independently of the
-    // global floor — e.g. spark.graft.scan.widenDisable=postings,dsir
-    val disabled = spark.conf.get("spark.graft.scan.widenDisable", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    if (floor <= 1 || (site.nonEmpty && disabled.contains(site))) df
-    else if (!scanShaped(df.queryExecution.analyzed)) df
+  /** Scan-parallelism floor for KERNEL-HEAVY text passes (guide §2.5
+    * "input skew: one huge unsplittable file … repartition immediately
+    * after the read"). The harness's corpus tables are single-row-group
+    * parquet files, so every scan plans ONE task and a gram-digest/shingle
+    * kernel pass runs single-threaded regardless of core count. When —
+    * and only when — the frame's planned parallelism is under half the
+    * session's default parallelism, the input is shuffled ONCE
+    * round-robin to that parallelism so the kernel runs on every core. By
+    * the same single-row-group construction that input is small (one row
+    * group caps at the writer's block size), so the widening shuffle
+    * moves megabytes; on a real multi-file corpus the planned parallelism
+    * already exceeds the floor and this is the IDENTITY — the text of a
+    * 100 TB lake is never shuffled by this helper (the PlanSpec shuffle
+    * budgets count it as the at-most-one conditional widening exchange). */
+  def widenScan(df: DataFrame): DataFrame = {
+    val floor = df.sparkSession.sparkContext.defaultParallelism
+    if (floor <= 1 || !scanShaped(df.queryExecution.analyzed)) df
     else {
       // planned scan parallelism; no job runs — the scanShaped guard
       // above proved the frame is an exchange-free scan+filter chain,

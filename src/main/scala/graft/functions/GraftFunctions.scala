@@ -1,191 +1,124 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** Registration for graft's native Catalyst expressions.
-  *
-  * Two paths, same registry entries:
-  *  - cluster deployment: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (the standard `SparkSessionExtensions` injection point);
-  *  - library use: [[GraftFunctions.register]] on an existing session
-  *    (idempotent) — lets `functions.call_function("graft_cosine", ...)`
-  *    and SQL both resolve without session-construction control.
+/** graft's native Catalyst kernels, two ways in:
+  *  - a typed `Column` constructor per kernel ([[cosine]], [[pqAdc]], …),
+  *    which is how every graft operator puts a kernel into a plan. It
+  *    needs nothing on the session: the kernel expression wraps its
+  *    argument columns, and the session's column converter resolves them
+  *    where the column is used;
+  *  - SQL names (`graft_cosine(a, b)` in `spark.sql`), from the registry
+  *    entries in [[all]]: `spark.sql.extensions=graft.functions.GraftExtensions`
+  *    at deploy time, or [[installAll]] on a live session (what
+  *    `graft.GraftSession.start` does for every entry point).
   */
 object GraftFunctions {
+  private def kernel(e: Expression): Column = GraftSqlBridge.column(e)
+  private def arg(c: Column): Expression = GraftSqlBridge.argument(c)
 
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_cosine(a, b) takes two array<float> arguments")
-        CosineSimilarity(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_cosine_d"),
-      new ExpressionInfo(classOf[CosineSimilarityD].getName, "graft_cosine_d"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_cosine_d(a, b) takes two array<double> arguments")
-        CosineSimilarityD(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_digest60"),
-      new ExpressionInfo(classOf[Digest60].getName, "graft_digest60"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_digest60(s) takes one string argument")
-        Digest60(args.head)
-      }),
-    (FunctionIdentifier("graft_shingle_digests"),
-      new ExpressionInfo(classOf[ShingleDigests].getName, "graft_shingle_digests"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "graft_shingle_digests(tokens, text, n) takes tokens, text, and a literal n")
-        val n = args(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_shingle_digests n must be an int literal, got $other")
-        }
-        ShingleDigests(args.head, args(1), n)
-      }),
-    (FunctionIdentifier("graft_quantize_sq8"),
-      new ExpressionInfo(classOf[QuantizeSq8].getName, "graft_quantize_sq8"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_quantize_sq8(v) takes one array<float> argument")
-        QuantizeSq8(args.head)
-      }),
-    (FunctionIdentifier("graft_int_dot"),
-      new ExpressionInfo(classOf[IntDotProduct].getName, "graft_int_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_int_dot(a, b) takes two array<int> arguments")
-        IntDotProduct(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_float_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "graft_float_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "graft_float_dot(a, b) takes two array<float> arguments")
-        FloatDotProduct(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdcScore].getName, "graft_pq_adc"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "graft_pq_adc(lut, codes, k) takes a LUT, a code vector, and a literal codebook size")
-        val k = args(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_pq_adc codebook size must be an int literal, got $other")
-        }
-        PqAdcScore(args.head, args(1), k)
-      }),
-    (FunctionIdentifier("graft_hash_embed"),
-      new ExpressionInfo(classOf[HashEmbed].getName, "graft_hash_embed"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "graft_hash_embed(text, dim) takes a string and a literal dimension")
-        val d = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_hash_embed dim must be an int literal, got $other")
-        }
-        HashEmbed(args.head, d)
-      }),
-    (FunctionIdentifier("graft_decode_features"),
-      new ExpressionInfo(classOf[DecodeFeatures].getName, "graft_decode_features"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_decode_features(payload) takes one binary argument")
-        DecodeFeatures(args.head)
-      }),
-    (FunctionIdentifier("graft_media_header"),
-      new ExpressionInfo(classOf[MediaHeader].getName, "graft_media_header"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_media_header(payload) takes one binary argument")
-        MediaHeader(args.head)
-      }),
-    (FunctionIdentifier("graft_av_header"),
-      new ExpressionInfo(classOf[AvHeader].getName, "graft_av_header"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_av_header(payload) takes one binary argument")
-        AvHeader(args.head)
-      }),
-    (FunctionIdentifier("graft_gram_digests"),
-      new ExpressionInfo(classOf[GramDigests].getName, "graft_gram_digests"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "graft_gram_digests(text, gramChars) takes a string and a literal width")
-        val l = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_gram_digests gramChars must be an int literal, got $other")
-        }
-        GramDigests(args.head, l)
-      }),
-    (FunctionIdentifier("graft_token_gram_digests"),
-      new ExpressionInfo(classOf[TokenGramDigests].getName, "graft_token_gram_digests"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "graft_token_gram_digests(text, gramTokens) takes a string and a literal width")
-        val l = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_token_gram_digests gramTokens must be an int literal, got $other")
-        }
-        TokenGramDigests(args.head, l)
-      }),
-    (FunctionIdentifier("graft_byte_encode"),
-      new ExpressionInfo(classOf[ByteEncode].getName, "graft_byte_encode"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_byte_encode(word) takes one string argument")
-        ByteEncode(args.head)
-      }),
-    (FunctionIdentifier("graft_phash"),
-      new ExpressionInfo(classOf[PHash64].getName, "graft_phash"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_phash(payload) takes one binary argument")
-        PHash64(args.head)
-      }),
-    (FunctionIdentifier("graft_synth_bmp"),
-      new ExpressionInfo(classOf[SynthBmp].getName, "graft_synth_bmp"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_synth_bmp(id) takes one bigint argument")
-        SynthBmp(args.head)
-      }),
-    (FunctionIdentifier("graft_bmp_tile"),
-      new ExpressionInfo(classOf[BmpLumaTile].getName, "graft_bmp_tile"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_bmp_tile(payload) takes one binary argument")
-        BmpLumaTile(args.head)
-      }),
-    (FunctionIdentifier("graft_phash_bmp"),
-      new ExpressionInfo(classOf[PHashBmp].getName, "graft_phash_bmp"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_phash_bmp(payload) takes one binary argument")
-        PHashBmp(args.head)
-      }))
+  def cosine(a: Column, b: Column): Column = kernel(CosineSimilarity(arg(a), arg(b)))
+  def cosineD(a: Column, b: Column): Column = kernel(CosineSimilarityD(arg(a), arg(b)))
+  def digest60(s: Column): Column = kernel(Digest60(arg(s)))
+  def shingleDigests(tokens: Column, text: Column, n: Int): Column =
+    kernel(ShingleDigests(arg(tokens), arg(text), n))
+  def quantizeSq8(v: Column): Column = kernel(QuantizeSq8(arg(v)))
+  def intDot(a: Column, b: Column): Column = kernel(IntDotProduct(arg(a), arg(b)))
+  def floatDot(a: Column, b: Column): Column = kernel(FloatDotProduct(arg(a), arg(b)))
+  def pqAdc(lut: Column, codes: Column, codebookSize: Int): Column =
+    kernel(PqAdcScore(arg(lut), arg(codes), codebookSize))
+  def hashEmbed(text: Column, dim: Int): Column = kernel(HashEmbed(arg(text), dim))
+  def decodeFeatures(payload: Column): Column = kernel(DecodeFeatures(arg(payload)))
+  def mediaHeader(payload: Column): Column = kernel(MediaHeader(arg(payload)))
+  def avHeader(payload: Column): Column = kernel(AvHeader(arg(payload)))
+  def gramDigests(text: Column, gramChars: Int): Column =
+    kernel(GramDigests(arg(text), gramChars))
+  def tokenGramDigests(text: Column, gramTokens: Int): Column =
+    kernel(TokenGramDigests(arg(text), gramTokens))
+  def byteEncode(word: Column): Column = kernel(ByteEncode(arg(word)))
+  def phash(payload: Column): Column = kernel(PHash64(arg(payload)))
+  def synthBmp(id: Column): Column = kernel(SynthBmp(arg(id)))
+  def bmpTile(payload: Column): Column = kernel(BmpLumaTile(arg(payload)))
+  def phashBmp(payload: Column): Column = kernel(PHashBmp(arg(payload)))
 
-  /** Per-session once: the FIRST call on a session registers with
-    * overwrite (so graft's builders win over any stale or same-named
-    * foreign registration — a name-exists guard would silently keep the
-    * foreign one); later calls are a map lookup, because operators invoke
-    * this per call and re-registering takes a synchronized registry write
-    * plus a 'replaced a previously registered function' WARN each time. */
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      val registry = spark.sessionState.functionRegistry
-      all.foreach { case (ident, info, builder) =>
-        registry.registerFunction(ident, info, builder)
-      }
+  private object IntLit {
+    def unapply(e: Expression): Option[Int] = e match {
+      case Literal(v: Int, IntegerType) => Some(v)
+      case _                            => None
     }
   }
 
-  /** Functions + optimizer rules + planner strategies on a live session. */
+  /** One registry entry; `usage` is the error for any argument list
+    * `build` does not take. */
+  private def entry(name: String, cls: Class[_], usage: String)(
+      build: PartialFunction[Seq[Expression], Expression])
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => build.applyOrElse(args, (_: Seq[Expression]) =>
+        throw new IllegalArgumentException(s"$name$usage, got ${args.mkString(", ")}")))
+
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    entry("graft_cosine", classOf[CosineSimilarity],
+        "(a, b) takes two array<float> arguments") {
+      case Seq(a, b) => CosineSimilarity(a, b) },
+    entry("graft_cosine_d", classOf[CosineSimilarityD],
+        "(a, b) takes two array<double> arguments") {
+      case Seq(a, b) => CosineSimilarityD(a, b) },
+    entry("graft_digest60", classOf[Digest60], "(s) takes one string argument") {
+      case Seq(s) => Digest60(s) },
+    entry("graft_shingle_digests", classOf[ShingleDigests],
+        "(tokens, text, n) takes tokens, text and an int literal n") {
+      case Seq(t, s, IntLit(n)) => ShingleDigests(t, s, n) },
+    entry("graft_quantize_sq8", classOf[QuantizeSq8], "(v) takes one array<float> argument") {
+      case Seq(v) => QuantizeSq8(v) },
+    entry("graft_int_dot", classOf[IntDotProduct], "(a, b) takes two array<int> arguments") {
+      case Seq(a, b) => IntDotProduct(a, b) },
+    entry("graft_float_dot", classOf[FloatDotProduct],
+        "(a, b) takes two array<float> arguments") {
+      case Seq(a, b) => FloatDotProduct(a, b) },
+    entry("graft_pq_adc", classOf[PqAdcScore],
+        "(lut, codes, k) takes a LUT, a code vector and an int literal codebook size") {
+      case Seq(l, c, IntLit(k)) => PqAdcScore(l, c, k) },
+    entry("graft_hash_embed", classOf[HashEmbed],
+        "(text, dim) takes a string and an int literal dimension") {
+      case Seq(t, IntLit(d)) => HashEmbed(t, d) },
+    entry("graft_decode_features", classOf[DecodeFeatures],
+        "(payload) takes one binary argument") {
+      case Seq(p) => DecodeFeatures(p) },
+    entry("graft_media_header", classOf[MediaHeader], "(payload) takes one binary argument") {
+      case Seq(p) => MediaHeader(p) },
+    entry("graft_av_header", classOf[AvHeader], "(payload) takes one binary argument") {
+      case Seq(p) => AvHeader(p) },
+    entry("graft_gram_digests", classOf[GramDigests],
+        "(text, gramChars) takes a string and an int literal width") {
+      case Seq(t, IntLit(l)) => GramDigests(t, l) },
+    entry("graft_token_gram_digests", classOf[TokenGramDigests],
+        "(text, gramTokens) takes a string and an int literal width") {
+      case Seq(t, IntLit(l)) => TokenGramDigests(t, l) },
+    entry("graft_byte_encode", classOf[ByteEncode], "(word) takes one string argument") {
+      case Seq(w) => ByteEncode(w) },
+    entry("graft_phash", classOf[PHash64], "(payload) takes one binary argument") {
+      case Seq(p) => PHash64(p) },
+    entry("graft_synth_bmp", classOf[SynthBmp], "(id) takes one bigint argument") {
+      case Seq(i) => SynthBmp(i) },
+    entry("graft_bmp_tile", classOf[BmpLumaTile], "(payload) takes one binary argument") {
+      case Seq(p) => BmpLumaTile(p) },
+    entry("graft_phash_bmp", classOf[PHashBmp], "(payload) takes one binary argument") {
+      case Seq(p) => PHashBmp(p) })
+
+  /** SQL names, optimizer rule and planner strategy on a live session.
+    * Re-registering a name overwrites it, so graft's builders win over a
+    * stale or foreign registration of the same name. */
   def installAll(spark: SparkSession): Unit = {
-    register(spark)
+    val registry = spark.sessionState.functionRegistry
+    all.foreach { case (ident, info, builder) =>
+      registry.registerFunction(ident, info, builder)
+    }
     graft.plans.GraftOptimizations.install(spark)
-    org.apache.spark.sql.GraftSqlBridge.addStrategy(spark, graft.plans.TopKPerKeyStrategy)
+    GraftSqlBridge.addStrategy(spark, graft.plans.TopKPerKeyStrategy)
   }
 }
 

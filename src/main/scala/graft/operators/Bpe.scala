@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BpeKernel, BpeMergeTableRef, BpeTokenCount}
+import graft.functions.{BpeKernel, BpeMergeTableRef, BpeTokenCount, GraftFunctions}
 
 /** Byte-pair-encoding tokenizer training — the TOKENIZER-TRAINING
   * primitive of an LLM data pipeline (Sennrich, Haddow & Birch 2016;
@@ -530,7 +530,7 @@ object Bpe {
   // BpeBytesSpec).
 
   private def byteEncCol(c: Column): Column =
-    call_function("graft_byte_encode", c)
+    GraftFunctions.byteEncode(c)
 
   /** Learn a BYTE-LEVEL BPE model: one capped corpus wordcount (raw-word
     * cap selection, identical to the codepoint flavor), words
@@ -569,7 +569,6 @@ object Bpe {
   def learnedMergesBytesDistributed(
       docs: DataFrame, textCol: String, nMerges: Int,
       maxWords: Int): Seq[(Int, String, String, Long)] = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val (merges, _, release) =
       learnLoop(docs, textCol, nMerges, maxWords, byteEncCol)
     release()
@@ -585,7 +584,6 @@ object Bpe {
   def tokenizeWithMergesBytes(
       docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val ref = new BpeMergeTableRef(
       merges.map(_._1).toArray, merges.map(_._2).toArray)
     val kCount = org.apache.spark.sql.GraftSqlBridge.column(
@@ -645,7 +643,6 @@ object Bpe {
   private[graft] def tokenizeWithMergesBytesChained(
       docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sym0 = encodeWord(byteEncCol(col("word")))
     val symN = merges.foldLeft(sym0) { case (s, (a, b)) =>
       call_function("replace", s, lit(D + a + D + D + b + D), lit(D + a + b + D))

@@ -232,7 +232,6 @@ object Curation {
       df: DataFrame, textCol: String, isTarget: Column,
       buckets: Int): DataFrame = {
     require(buckets > 0, s"buckets=$buckets must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     lrFromHistogram(
       df.select(isTarget.as("__t"),
           explode(TextAnalysis.tokens(col(textCol))).as("__tok"))
@@ -289,7 +288,6 @@ object Curation {
       df: DataFrame, idCol: String, textCol: String,
       isTarget: Column, buckets: Int): (DataFrame, DataFrame) = {
     require(buckets > 0, s"buckets=$buckets must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // ONE tokenize+hash pass: the token stream collapses to per-
     // (doc, pool, bucket) integer counts in a single map-side-combined
     // aggregate, the frame CACHES (lazily — docs × ≤B rows, orders of
@@ -301,7 +299,7 @@ object Curation {
     // to the broadcast log-ratio table. The earlier shape re-ran the
     // full corpus tokenize inside importanceLogRatios — the heaviest
     // stage, paid twice.
-    val docBuckets = graft.Tables.widenScan(df, "dsir")
+    val docBuckets = graft.Tables.widenScan(df)
       .select(col(idCol), isTarget.as("__t"),
         explode(TextAnalysis.tokens(col(textCol))).as("__tok"))
       .filter(col("__tok") =!= "")

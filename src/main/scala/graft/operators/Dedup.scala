@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,7 +100,6 @@ object Dedup {
     * and the DuckDB oracle applies the SAME digest, so result equality
     * stays exact either way. */
   def digestShingles(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     rawShingles(df, textCol, idCol, n)
       .select(col(idCol), TextAnalysis.tokenHash60Native(col("shingle")).as("shingle"))
       .distinct()
@@ -116,7 +116,7 @@ object Dedup {
     // folds downstream of it) is whole-corpus map work; on the
     // harness's single-row-group files the scan plans ONE task
     // (identity on a real multi-file corpus; see Tables.widenScan)
-    graft.Tables.widenScan(df, "shingles")
+    graft.Tables.widenScan(df)
       .select(col(idCol), col(textCol), split(col(textCol), " ").as("__toks"))
       .select(col(idCol),
         explode(shingles(col("__toks"), col(textCol), n)).as("shingle"))
@@ -180,7 +180,6 @@ object Dedup {
     * (id, __m0..__m{k-1}) — the shared upstream of [[minhashBands]] and
     * [[lshEstimatedPairs]]. */
   private def wideSigs(shingled: DataFrame, idCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(shingled.sparkSession)
     require(k <= MaxMinhashK, s"k=$k exceeds $MaxMinhashK: seeds ≥ $MaxMinhashK are reserved for the count-min family")
     val base = shingled.select(col(idCol), shingleHashMod(col("shingle")).as("__hm"))
     val aggs = (0 until k).map(i =>
@@ -473,7 +472,6 @@ object Dedup {
     * sf0.1 and shuffle-bounded at scale (|tokens| rows, partial aggs
     * map-side). */
   def simhashSigs(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // NOT widened (r21 A/B): dedup_simhash 1.07 s widened vs 0.81-0.92 s
     // plain on the r21 host — the 60 conditional sums aggregate map-side
     // behind their own exchange, so the round-robin widening only added
@@ -555,9 +553,8 @@ object Dedup {
     * primitive: where [[simhashSigs]] fingerprints token text, this
     * fingerprints media bytes. */
   def phashSigs(df: DataFrame, payloadCol: String, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
-        call_function("graft_phash", col(payloadCol)).as("phash"))
+        GraftFunctions.phash(col(payloadCol)).as("phash"))
       .filter(col("phash").isNotNull)
   }
 
@@ -1236,7 +1233,6 @@ object Dedup {
       emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, signBits: Int = 8,
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     require(maxBucket > 1, s"maxBucket=$maxBucket would drop every bucket")
     val allBucketed = emb.withColumn("bucket", Similarity.signBucket(col(vecCol), signBits))
     // Same skew guard as simhashPairs: cap the quadratic within-bucket
@@ -1289,7 +1285,6 @@ object Dedup {
   def semDedup(
       emb: DataFrame, centroids: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCluster: Int = Int.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     require(maxCluster > 1, s"maxCluster=$maxCluster would drop every cluster")
     // one argmax pass: assignment + the winner's cosine from the struct
     // kernel — no join back to the centroid frame (whose filters
@@ -1444,11 +1439,10 @@ object Dedup {
       gramChars: Int, minDocs: Int = 2): DataFrame = {
     require(gramChars > 0, s"gramChars=$gramChars must be positive")
     require(minDocs >= 2, s"minDocs=$minDocs: below 2 every position is a span")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val grams = graft.Tables.widenScan(df
         .filter(col(textCol).isNotNull && length(col(textCol)) >= gramChars))
       .select(col(idCol), posexplode(
-          call_function("graft_gram_digests", col(textCol), lit(gramChars)))
+          GraftFunctions.gramDigests(col(textCol), gramChars))
         .as(Seq("__p0", "__h")))
     val pts = repeatedOccurrences(grams, idCol, minDocs, col("__p0"))
       .select(col(idCol), (col("__p0") + 1).as("pos"))
@@ -1482,11 +1476,10 @@ object Dedup {
       gramTokens: Int, minDocs: Int = 2): DataFrame = {
     require(gramTokens > 0, s"gramTokens=$gramTokens must be positive")
     require(minDocs >= 2, s"minDocs=$minDocs: below 2 every position is a span")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val grams = df
       .filter(col(textCol).isNotNull)
       .select(col(idCol), explode(
-          call_function("graft_token_gram_digests", col(textCol), lit(gramTokens)))
+          GraftFunctions.tokenGramDigests(col(textCol), gramTokens))
         .as("__g"))
       .select(col(idCol), col("__g.s").as("s"), col("__g.e").as("e"),
         col("__g.h").as("__h"))
@@ -1524,11 +1517,10 @@ object Dedup {
       gramChars: Int, minDocs: Int = 2): DataFrame = {
     require(gramChars > 0, s"gramChars=$gramChars must be positive")
     require(minDocs >= 2, s"minDocs=$minDocs: below 2 every position is a span")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val grams = graft.Tables.widenScan(df
         .filter(col(textCol).isNotNull && length(col(textCol)) >= gramChars))
       .select(col(idCol), posexplode(
-          call_function("graft_gram_digests", col(textCol), lit(gramChars)))
+          GraftFunctions.gramDigests(col(textCol), gramChars))
         .as(Seq("__p0", "__h")))
     // owner = min(id) per repeated digest — [[repeatedOccurrences]]
     // carries it on every surviving row; the owner exemption is one
@@ -1558,12 +1550,11 @@ object Dedup {
   private def gramIndexFrame(df: DataFrame, idCol: String, textCol: String,
       gramChars: Int): DataFrame = {
     require(gramChars > 0, s"gramChars=$gramChars must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     graft.Tables.widenScan(
         df.filter(col(textCol).isNotNull && length(col(textCol)) >= gramChars &&
           col(idCol).isNotNull))
       .select(col(idCol), explode(
-          call_function("graft_gram_digests", col(textCol), lit(gramChars)))
+          GraftFunctions.gramDigests(col(textCol), gramChars))
         .as("__h"))
       .groupBy(col("__h"))
       .agg(min(col(idCol)).as("owner"))
@@ -1597,11 +1588,10 @@ object Dedup {
   def incrementalSpansBucketed(index: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, gramChars: Int): DataFrame = {
     require(gramChars > 0, s"gramChars=$gramChars must be positive")
-    graft.functions.GraftFunctions.register(delta.sparkSession)
     val grams = delta
       .filter(col(textCol).isNotNull && length(col(textCol)) >= gramChars)
       .select(col(idCol), posexplode(
-          call_function("graft_gram_digests", col(textCol), lit(gramChars)))
+          GraftFunctions.gramDigests(col(textCol), gramChars))
         .as(Seq("__p0", "__h")))
     val byDigest = grams.filter(col(idCol).isNotNull).repartition(col("__h"))
     val agg = byDigest.groupBy(col("__h"))
@@ -1807,11 +1797,10 @@ object Dedup {
       idCol: String, textCol: String, gramChars: Int,
       keepFirst: Boolean): DataFrame = {
     require(gramChars > 0, s"gramChars=$gramChars must be positive")
-    graft.functions.GraftFunctions.register(delta.sparkSession)
     val grams = delta
       .filter(col(textCol).isNotNull && length(col(textCol)) >= gramChars)
       .select(col(idCol), posexplode(
-          call_function("graft_gram_digests", col(textCol), lit(gramChars)))
+          GraftFunctions.gramDigests(col(textCol), gramChars))
         .as(Seq("__p0", "__h")))
     val byDigest = grams.filter(col(idCol).isNotNull).repartition(col("__h"))
     // One aggregate serves three consumers (the broadcast probe set, the

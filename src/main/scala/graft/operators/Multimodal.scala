@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -53,9 +54,8 @@ object Multimodal {
     * lake-wide "what formats/dimensions do we have" scan never leaves
     * Tungsten rows and never decodes a pixel. */
   def headerMeta(withPayload: DataFrame, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(withPayload.sparkSession)
     withPayload.withColumn("hdr",
-      call_function("graft_media_header", col("payload")))
+      GraftFunctions.mediaHeader(col("payload")))
   }
 
   /** Deterministic synthetic image payloads for the test corpus (which
@@ -101,9 +101,8 @@ object Multimodal {
     * bitfield, MP4's box walk to mvhd. A lake-wide "what rates/
     * durations do we have" scan never decodes a sample. */
   def avHeaderMeta(withPayload: DataFrame, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(withPayload.sparkSession)
     withPayload.withColumn("av",
-      call_function("graft_av_header", col("payload")))
+      GraftFunctions.avHeader(col("payload")))
   }
 
   /** Deterministic synthetic audio/video payloads, mirroring
@@ -208,10 +207,9 @@ object Multimodal {
     * swaps the kernel for a JNI/FFM codec binding and this plan shape is
     * exactly what it compiles to. */
   def decodeFeatures(withPayload: DataFrame, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(withPayload.sparkSession)
     withPayload.select(
       col(idCol).cast("long").as(idCol),
-      call_function("graft_decode_features", col("payload")).as("features"))
+      GraftFunctions.decodeFeatures(col("payload")).as("features"))
   }
 
   /** The per-partition BATCH-CONTRACT twin of [[decodeFeatures]]: typed
@@ -246,9 +244,8 @@ object Multimodal {
     * pixel values derive from `(doc_id, x, y)` so the oracle predicts
     * the decoded plane from the formula alone. */
   def synthesizeBmpPayloads(df: DataFrame, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("payload",
-      call_function("graft_synth_bmp", col(idCol).cast("long")))
+      GraftFunctions.synthBmp(col(idCol).cast("long")))
   }
 
   /** Decode each BMP payload's 8×8 luminance tile
@@ -258,8 +255,7 @@ object Multimodal {
     * [[headerMeta]]'s dimensions-only parse and [[decodeFeatures]]'s
     * stubbed codec: for THIS format the pipeline is real end to end. */
   def bmpLumaTiles(withPayload: DataFrame, idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(withPayload.sparkSession)
     withPayload.withColumn("tile",
-      call_function("graft_bmp_tile", col("payload")))
+      GraftFunctions.bmpTile(col("payload")))
   }
 }

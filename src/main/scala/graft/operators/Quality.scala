@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -292,7 +293,6 @@ object Quality {
     * count). Output (group, n, drift). */
   def embeddingGroupDrift(
       emb: DataFrame, groupCol: String, vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val parts = emb
       .select(col(groupCol).as("grp"), posexplode(col(vecCol)).as(Seq("__pos", "__v")))
       .groupBy(col("grp"), col("__pos"))
@@ -313,7 +313,7 @@ object Quality {
       .agg(assemble.as("__glob")))
     grp.crossJoin(glob)
       .select(col("grp").as(groupCol), col("n"),
-        round(call_function("graft_cosine_d", col("__gv"), col("__glob")), 6)
+        round(GraftFunctions.cosineD(col("__gv"), col("__glob")), 6)
           .as("drift"))
   }
 

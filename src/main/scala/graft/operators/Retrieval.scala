@@ -497,7 +497,6 @@ object Retrieval {
       docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[(Int, String)], k: Int,
       fbDocs: Int = 3, fbTerms: Int = 8, alpha: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
     // posts feeds FOUR subtrees (stage-1 candidates, the feedback
     // term-vector join, stage-2 candidates, stage-2 df) and Catalyst's
     // pushed filters make them canonically distinct, so without the
@@ -615,64 +614,10 @@ object Retrieval {
     // frame chain is exact-arithmetic, not float luck: every step
     // below replays the identical decimal ops on the identical values
     // (shortest-string double→BigDecimal = Spark's Cast/Round path).
-    val selRows = selected.select(col("query_id"), col("term"), col("fbw"))
-      .collect()
-    def round6(x: Double): Double =
-      // Spark's Round(double) passes NaN/Inf through untouched
-      if (x.isNaN || x.isInfinite) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    // per query: s = Σ fbw as exact decimal(·,10) cast to double (the
-    // old window's sum), then fbw_n = round6(fbw / s)
-    val fbByQ = selRows.groupBy(_.getInt(0))
-    val fbwN: Map[(Int, String), Double] = fbByQ.toSeq.flatMap {
-      case (qid, rows) =>
-        val s = rows.map(r => java.math.BigDecimal.valueOf(r.getDouble(2))
-            .setScale(10, java.math.RoundingMode.HALF_UP))
-          .reduce(_.add(_)).doubleValue
-        rows.toSeq.map(r =>
-          (qid, r.getString(1)) -> round6(r.getDouble(2) / s))
-    }.toMap
-    // interpolate with the original query: each original term carries
-    // alpha/|q| (pre-rounded, the same literal the oracle reads),
-    // feedback terms carry (1-alpha)·fbw_n. The interpolation runs in
-    // EXACT DECIMAL: wq + (1-α)·fbw_n is an exact ≤8-dp decimal whose
-    // 7th digit is 5 half the time (whenever fbw_n's 6th digit is odd
-    // at α = ½) — a double round there is engine-dependent on every
-    // such tie, so the one rounding happens on the exact decimal, where
-    // HALF_UP ties agree across engines by definition.
-    val origWRows: Map[(Int, String), Double] = queries.flatMap {
-      case (qid, text) =>
-        val terms = text.split(" ").filter(_.nonEmpty).distinct
-        if (terms.isEmpty) Seq.empty
-        else {
-          val w = BigDecimal(alpha / terms.length)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          terms.map(t => (qid, t) -> w)
-        }
-    }.toMap
-    val oneMinusAlphaD = java.math.BigDecimal.valueOf(1.0 - alpha)
-    def dec9(x: Double): java.math.BigDecimal =
-      // NaN/Inf → 0: an all-zero feedback sum (s = 0 ⇒ fbw/s = NaN)
-      // contributes nothing, and an original-query term KEEPS its α/|q|
-      // share. NOTE (r21): this is an intentional divergence from the
-      // pre-r20 frame chain on this degenerate edge — there the NaN
-      // survived the coalesce (which ran BEFORE the cast), cast to NULL,
-      // and nulled the ENTIRE interpolated weight including the α/|q|
-      // share. No oracle row or caller exercises the edge (271/271
-      // green either way); keeping the α/|q| share is the intended
-      // semantics — a degenerate feedback set must degrade RM3 toward
-      // the original query, not erase it.
-      if (x.isNaN || x.isInfinite) java.math.BigDecimal.ZERO.setScale(9)
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(9, java.math.RoundingMode.HALF_UP)
-    val expandedRows: Seq[(Int, String, java.math.BigDecimal)] =
-      (origWRows.keySet ++ fbwN.keySet).toSeq.sorted.map { case (qid, t) =>
-        val w = dec9(origWRows.getOrElse((qid, t), 0.0))
-          .add(oneMinusAlphaD.multiply(dec9(fbwN.getOrElse((qid, t), 0.0))))
-          .setScale(6, java.math.RoundingMode.HALF_UP)
-        (qid, t, w)
-      }
+    val expandedRows = rm3Expansion(
+      selected.select(col("query_id"), col("term"), col("fbw")).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq,
+      queries, alpha)
     import spark.implicits._
     val expanded = expandedRows.toDF("query_id", "term", "w")
 
@@ -700,6 +645,68 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("c")), 6).cast("double").as("score"))
     rankTopK(scored, k)
+  }
+
+  /** RM3's driver-side interpolation over the selected feedback rows
+    * `(query_id, term, fbw)`: the expanded weighted query `(query_id,
+    * term, w)`, sorted by (query_id, term). */
+  private[graft] def rm3Expansion(
+      selected: Seq[(Int, String, Double)], queries: Seq[(Int, String)],
+      alpha: Double): Seq[(Int, String, java.math.BigDecimal)] = {
+    def round6(x: Double): Double =
+      // Spark's Round(double) passes NaN/Inf through untouched
+      if (x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    // per query: s = Σ fbw as exact decimal(·,10) cast to double (the
+    // old window's sum), then fbw_n = round6(fbw / s)
+    val fbByQ = selected.groupBy(_._1)
+    val fbwN: Map[(Int, String), Double] = fbByQ.toSeq.flatMap {
+      case (qid, rows) =>
+        val s = rows.map(r => java.math.BigDecimal.valueOf(r._3)
+            .setScale(10, java.math.RoundingMode.HALF_UP))
+          .reduce(_.add(_)).doubleValue
+        rows.map(r => (qid, r._2) -> round6(r._3 / s))
+    }.toMap
+    // interpolate with the original query: each original term carries
+    // alpha/|q| (pre-rounded, the same literal the oracle reads),
+    // feedback terms carry (1-alpha)·fbw_n. The interpolation runs in
+    // EXACT DECIMAL: wq + (1-α)·fbw_n is an exact ≤8-dp decimal whose
+    // 7th digit is 5 half the time (whenever fbw_n's 6th digit is odd
+    // at α = ½) — a double round there is engine-dependent on every
+    // such tie, so the one rounding happens on the exact decimal, where
+    // HALF_UP ties agree across engines by definition.
+    val origWRows: Map[(Int, String), Double] = queries.flatMap {
+      case (qid, text) =>
+        val terms = text.split(" ").filter(_.nonEmpty).distinct
+        if (terms.isEmpty) Seq.empty
+        else {
+          val w = BigDecimal(alpha / terms.length)
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+          terms.map(t => (qid, t) -> w)
+        }
+    }.toMap
+    val oneMinusAlphaD = java.math.BigDecimal.valueOf(1.0 - alpha)
+    def dec9(x: Double): java.math.BigDecimal =
+      // NaN/Inf → 0: an all-zero feedback sum (s = 0 ⇒ fbw/s = NaN)
+      // contributes nothing, and an original-query term KEEPS its α/|q|
+      // share. NOTE (r21): this is an intentional divergence from the
+      // pre-r20 frame chain on this degenerate edge — there the NaN
+      // survived the coalesce (which ran BEFORE the cast), cast to NULL,
+      // and nulled the ENTIRE interpolated weight including the α/|q|
+      // share. No oracle row exercises the edge (RetrievalSpec pins it);
+      // keeping the α/|q| share is the intended semantics — a degenerate
+      // feedback set must degrade RM3 toward the original query, not
+      // erase it.
+      if (x.isNaN || x.isInfinite) java.math.BigDecimal.ZERO.setScale(9)
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(9, java.math.RoundingMode.HALF_UP)
+    (origWRows.keySet ++ fbwN.keySet).toSeq.sorted.map { case (qid, t) =>
+      val w = dec9(origWRows.getOrElse((qid, t), 0.0))
+        .add(oneMinusAlphaD.multiply(dec9(fbwN.getOrElse((qid, t), 0.0))))
+        .setScale(6, java.math.RoundingMode.HALF_UP)
+      (qid, t, w)
+    }
   }
 
   // ---- persisted inverted index ---------------------------------------

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,11 +36,11 @@ object Similarity {
   /** Cosine via the native codegen expression
     * [[graft.functions.CosineSimilarity]] — bit-identical to [[cosine]],
     * ~an order of magnitude cheaper per row (tight primitive loop, no
-    * intermediate array). Requires [[graft.functions.GraftFunctions
-    * .register]] on the session; every DataFrame-level operator here does
-    * that itself. */
+    * intermediate array). Works on any session: the kernel enters the
+    * plan as a typed column ([[graft.functions.GraftFunctions.cosine]]),
+    * not by name. */
   def cosineNative(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
+    GraftFunctions.cosine(a, b)
 
   /** Sign-pattern LSH bucket over the first `bits` dimensions: a coarse,
     * deterministic random-hyperplane surrogate (axis-aligned planes). */
@@ -103,7 +104,6 @@ object Similarity {
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
@@ -129,21 +129,21 @@ object Similarity {
   def sq8TopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // Native one-pass quantization (graft.functions.QuantizeSq8): the
     // composed transform/array_max form re-evaluates the max INSIDE the
     // per-element lambda — O(d²) interpreted walks per vector (spec-pinned
     // equivalent, SimilaritySpec keeps the composed twin as the cross-check).
-    def quantize(vec: Column): Column = call_function("graft_quantize_sq8", vec)
-    val q = broadcast(queries.select(col(idCol).as("query_id"), quantize(col(vecCol)).as("__qq")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), quantize(col(vecCol)).as("__qc"))
+    val q = broadcast(queries.select(col(idCol).as("query_id"),
+      GraftFunctions.quantizeSq8(col(vecCol)).as("__qq")))
+    val c = corpus.select(col(idCol).as("neighbor_id"),
+      GraftFunctions.quantizeSq8(col(vecCol)).as("__qc"))
     // per-PAIR scoring is the native codegen'd int-dot expression
     // (graft.functions.IntDotProduct) — the interpreted
     // aggregate(zip_with(...)) form allocates an array per pair and costs
     // ~3x the whole query at sf0.1; quantization stays composed-builtins
     // because it runs once per VECTOR, not per pair
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", call_function("graft_int_dot", col("__qq"), col("__qc")))
+      .withColumn("score", GraftFunctions.intDot(col("__qq"), col("__qc")))
     rankedTail(scored, "score", ascending = false, k,
       Seq("query_id", "neighbor_id", "score", "rank"))
   }
@@ -154,7 +154,6 @@ object Similarity {
   def signLshTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, bits: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       signBucket(col(vecCol), bits).as("bucket")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
@@ -222,7 +221,6 @@ object Similarity {
           .withColumn("centroid_sim", col("__ns.centroid_sim"))
           .drop("__ns")
       case None =>
-        graft.functions.GraftFunctions.register(vectors.sparkSession)
         val cen = broadcast(centroids.select(
           col(idCol).as("__cenid"), col(vecCol).as("__cen")))
         assignClustersComposed(vectors, centroids, idCol, vecCol)
@@ -306,7 +304,6 @@ object Similarity {
   private[operators] def assignClustersComposed(
       vectors: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     // the rank window runs over the broadcast-small centroid set only;
     // partitionBy(lit(0)) keeps that explicit (and the
     // single-partition-WindowExec WARN out of every log) — the
@@ -371,7 +368,7 @@ object Similarity {
     * so kernel, composed twin, and the DuckDB oracle all read one
     * matrix. */
   private def jlSign(i: Column, j: Column): Column =
-    when(call_function("graft_digest60",
+    when(GraftFunctions.digest60(
       concat(lit("jl:"), i.cast("string"), lit(":"), j.cast("string"))) % 2 === 0,
       lit(1.0)).otherwise(lit(-1.0))
 
@@ -408,7 +405,6 @@ object Similarity {
     * query batch projected next month live in the same space). */
   def jlProject(df: DataFrame, vecCol: String, m: Int, d: Int,
       outCol: String = "jl_vec"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn(outCol, jlProjectKernel(vecCol, m, d))
   }
 
@@ -431,7 +427,6 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, m: Int = 16, d: Int = 64): DataFrame = {
     guardFlatScan(corpus, "jlTopK", "ivfTopKProbed / ivfPqTopK")
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val ref = graft.functions.JlSignsRef.generate(m, d)
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       kernelCol(graft.functions.JlProject(attr(vecCol), ref)).as("__qp")))
@@ -443,7 +438,7 @@ object Similarity {
     // form costs ~3× the whole query in lambda plumbing per pair
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        round(call_function("graft_cosine_d", col("__qp"), col("__cp")), 6))
+        round(GraftFunctions.cosineD(col("__qp"), col("__cp")), 6))
     topKPerQueryAuto(scored, k)
       .select(col("query_id"), col("neighbor_id"),
         col("cosine").as("jl_cosine"), col("rank"))
@@ -525,7 +520,6 @@ object Similarity {
     // future ANN pool) inherits it instead of re-stating it
     require(lambdaNum >= 0 && lambdaDen > 0 && lambdaNum <= lambdaDen,
       s"lambda=$lambdaNum/$lambdaDen must be in [0, 1]")
-    graft.functions.GraftFunctions.register(candIn.sparkSession)
     // r20: the greedy is per-query data by construction, so the whole
     // selection fuses into ONE aggregate + kernel projection
     // ([[graft.functions.MmrSelect]] — bit-equivalence contract there,
@@ -622,7 +616,6 @@ object Similarity {
   def intraListSimilarity(
       selected: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val v = corpus.select(col(idCol).as("__vid"), col(vecCol).as("__v"))
     val s = selected.select(col("query_id"), col("neighbor_id"))
     val withVec = v.join(broadcast(s), col("__vid") === col("neighbor_id"))
@@ -693,7 +686,6 @@ object Similarity {
   private[operators] def probeClustersComposed(
       queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, nProbe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val cen = broadcast(centroids.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cen")))
     val scored = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
@@ -725,7 +717,6 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    graft.functions.GraftFunctions.register(queries.sparkSession) // cosineNative below
     val (assigned, probeList) =
       clusteredAndProbes(queries, corpus, centroids, idCol, vecCol, nProbe)
     val clustered = assigned
@@ -772,7 +763,6 @@ object Similarity {
   def pqCodebook(
       codewords: DataFrame, idCol: String, vecCol: String,
       m: Int, dsub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(codewords.sparkSession)
     // duplicate codeword ids would make the dense-code ranks (and thus
     // every encoded corpus row) nondeterministic across runs — the same
     // contract CentroidsRef.fromDataFrame enforces with a collect-side
@@ -792,7 +782,7 @@ object Similarity {
       .drop("__prev_id")
       .withColumnRenamed("__sub", "__cw")
       .withColumn("__cw2",
-        call_function("graft_float_dot", col("__cw"), col("__cw")))
+        GraftFunctions.floatDot(col("__cw"), col("__cw")))
   }
 
   /** PQ ENCODE, composed DataFrame form — the spec-pinned twin of the
@@ -812,13 +802,12 @@ object Similarity {
   def pqEncode(
       corpus: DataFrame, codebook: DataFrame,
       idCol: String, vecCol: String, m: Int, dsub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    def fdot(a: Column, b: Column) = call_function("graft_float_dot", a, b)
     subspaces(corpus, idCol, vecCol, m, dsub, idCol)
-      .withColumn("__x2", fdot(col("__sub"), col("__sub")))
+      .withColumn("__x2", GraftFunctions.floatDot(col("__sub"), col("__sub")))
       .join(broadcast(codebook), Seq("subspace"))
       .withColumn("__d2",
-        round(col("__x2") - lit(2.0) * fdot(col("__sub"), col("__cw")) + col("__cw2"), 6))
+        round(col("__x2") - lit(2.0) * GraftFunctions.floatDot(col("__sub"), col("__cw")) +
+          col("__cw2"), 6))
       .groupBy(col(idCol), col("subspace"))
       .agg(max_by(col("code"),
         struct((-col("__d2")).as("__negd"), (-col("code")).as("__negc"))).as("code"))
@@ -838,11 +827,10 @@ object Similarity {
   private[operators] def pqLut(
       queries: DataFrame, codebook: DataFrame,
       idCol: String, vecCol: String, m: Int, dsub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     subspaces(queries, idCol, vecCol, m, dsub, "query_id")
       .join(broadcast(codebook), Seq("subspace"))
       .withColumn("__term",
-        round(call_function("graft_float_dot", col("__sub"), col("__cw")), 6))
+        round(GraftFunctions.floatDot(col("__sub"), col("__cw")), 6))
       .groupBy(col("query_id"))
       .agg(expr(
         "transform(array_sort(collect_list(struct(subspace, code, __term))), s -> s.__term)")
@@ -1003,14 +991,13 @@ object Similarity {
       queries: DataFrame, codes: DataFrame, ref: graft.functions.PqCodebookRef,
       idCol: String, vecCol: String, codesIdCol: String,
       hintBroadcastQueries: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val c = codes.select(col(codesIdCol).as("neighbor_id"), col("codes"))
     val lut0 = queries.select(col(idCol).as("query_id"),
       kernelCol(graft.functions.PqBuildLut(attr(vecCol), ref)).as("__lut"))
     val lut = if (hintBroadcastQueries) broadcast(lut0) else lut0
     lut.join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("score",
-        round(call_function("graft_pq_adc", col("__lut"), col("codes"), lit(ref.k)), 6))
+        round(GraftFunctions.pqAdc(col("__lut"), col("codes"), ref.k), 6))
       .select(col("query_id"), col("neighbor_id"), col("score"))
   }
 
@@ -1273,7 +1260,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, d: Int, root: String): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val seg = graft.index.IndexManifest.newSegment(JlProjTable)
     jlIndexRows(corpus, idCol, vecCol, m, d)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/$seg")
@@ -1320,7 +1306,6 @@ object Similarity {
       snap: graft.index.IndexManifest.Snapshot): DataFrame = {
     require(refine > 0, s"refine must be positive, got $refine")
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val (m, d) = jlParams(snap)
     val proj = graft.index.IndexManifest.readAt(spark, root, snap, JlProjTable)
       .select(col("id").as("neighbor_id"), col("proj").as("__cp"))
@@ -1328,7 +1313,7 @@ object Similarity {
       jlProjectKernel(vecCol, m, d).as("__qp")))
     val scored = q.join(proj, col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        round(call_function("graft_cosine_d", col("__qp"), col("__cp")), 6))
+        round(GraftFunctions.cosineD(col("__qp"), col("__cp")), 6))
     val coarse = topKPerQueryAuto(scored, k * refine)
       .select(col("query_id"), col("neighbor_id"))
     rerankExact(coarse, queries, corpus, idCol, vecCol, k)
@@ -1516,7 +1501,6 @@ object Similarity {
       corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, root: String): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val cenSeg = graft.index.IndexManifest.newSegment(IvfCentroidsTable)
     centroids.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$cenSeg")
@@ -1541,7 +1525,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String, root: String,
       extraMeta: Map[String, String] = Map.empty): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val snap = graft.index.IndexManifest.snapshot(spark, root)
     val cen = storedIvfCentroids(spark, root, snap, idCol, vecCol)
     val existing = graft.index.IndexManifest
@@ -1566,7 +1549,6 @@ object Similarity {
   def refreshIvfIndexM(
       corpus: DataFrame, idCol: String, vecCol: String, root: String): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val snap = graft.index.IndexManifest.snapshot(spark, root)
     val cen = storedIvfCentroids(spark, root, snap, idCol, vecCol)
     val idx = graft.index.IndexManifest.readAt(spark, root, snap, IvfAssignedTable)
@@ -1638,7 +1620,6 @@ object Similarity {
       snap: graft.index.IndexManifest.Snapshot): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val cen = storedIvfCentroids(spark, root, snap, idCol, vecCol)
     // r21: the probe list is a pure kernel projection over the query
     // scan — recomputing it for the join is cheaper than the r20
@@ -1699,7 +1680,6 @@ object Similarity {
       corpus: DataFrame, centroids: DataFrame, codebook: DataFrame,
       idCol: String, vecCol: String, m: Int, dsub: Int, root: String): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val ref = graft.functions.PqCodebookRef.fromCodebook(codebook, m, dsub)
     val cenSeg = graft.index.IndexManifest.newSegment(IvfCentroidsTable)
     centroids.select(col(idCol).as("id"), col(vecCol).as("vec"))
@@ -1729,7 +1709,6 @@ object Similarity {
       m: Int, dsub: Int, root: String,
       extraMeta: Map[String, String] = Map.empty): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val snap = graft.index.IndexManifest.snapshot(spark, root)
     val cen = storedIvfCentroids(spark, root, snap, idCol, vecCol)
     val ref = storedPqRef(spark, root, snap, m, dsub)
@@ -1759,7 +1738,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, dsub: Int, root: String): Long = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val snap = graft.index.IndexManifest.snapshot(spark, root)
     val cen = storedIvfCentroids(spark, root, snap, idCol, vecCol)
     val ref = storedPqRef(spark, root, snap, m, dsub)
@@ -1824,7 +1802,6 @@ object Similarity {
       snap: graft.index.IndexManifest.Snapshot): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val cen = storedIvfCentroids(spark, root, snap, idCol, vecCol)
     val ref = storedPqRef(spark, root, snap, m, dsub)
     // r21 (guide §2.4): on the kernel path the per-query ADC LUT rides
@@ -1863,7 +1840,7 @@ object Similarity {
         Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("score",
-        round(call_function("graft_pq_adc", col("__lut"), col("codes"), lit(ref.k)), 6))
+        round(GraftFunctions.pqAdc(col("__lut"), col("codes"), ref.k), 6))
     rankedTail(scored, "score", ascending = false, k,
       Seq("query_id", "cluster", "neighbor_id", "score", "rank"))
   }
@@ -1926,8 +1903,6 @@ object Similarity {
   def pqTrainCodebooks(
       corpus: DataFrame, init: DataFrame,
       idCol: String, vecCol: String, m: Int, dsub: Int, iters: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    def fdot(a: Column, b: Column) = call_function("graft_float_dot", a, b)
     (1 to iters).foldLeft(pqCodebook(init, idCol, vecCol, m, dsub)) { (cb, _) =>
       // assignment is the kernel encode (zero-shuffle projection against
       // the round's collected codebook — spec-pinned ≡ the DataFrame
@@ -1962,7 +1937,7 @@ object Similarity {
       cb.join(means, Seq("subspace", "code"), "left")
         .select(col("subspace"), col("code_id"), col("code"),
           coalesce(col("__new"), col("__cw")).as("__cw"))
-        .withColumn("__cw2", fdot(col("__cw"), col("__cw")))
+        .withColumn("__cw2", GraftFunctions.floatDot(col("__cw"), col("__cw")))
         .localCheckpoint()
     }
   }
@@ -1994,7 +1969,6 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, m: Int, dsub: Int,
       nProbe: Int = 1): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val ref = graft.functions.PqCodebookRef.fromCodebook(
       pqCodebook(codewords, idCol, vecCol, m, dsub), m, dsub)
     val (assigned, probeList) =
@@ -2013,7 +1987,7 @@ object Similarity {
       .join(codes, Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("score",
-        round(call_function("graft_pq_adc", col("__lut"), col("codes"), lit(ref.k)), 6))
+        round(GraftFunctions.pqAdc(col("__lut"), col("codes"), ref.k), 6))
     rankedTail(scored, "score", ascending = false, k,
       Seq("query_id", "cluster", "neighbor_id", "score", "rank"))
   }
@@ -2114,7 +2088,6 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, m: Int, dsub: Int,
       nProbe: Int = 1): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // ONE centroid collect on the kernel path, threaded through both
     // residual passes, the constraint-free cen frame (the centroid
     // subset predicate must not ride probes' cluster key through the
@@ -2148,10 +2121,10 @@ object Similarity {
         (a, b) => (a.cast("double") - b.cast("double")).cast("float")))
       .withColumn("__lut", kernelCol(graft.functions.PqBuildLut(attr("__qres"), ref)))
       .withColumn("__q2",
-        round(call_function("graft_float_dot", col("__qres"), col("__qres")), 6))
+        round(GraftFunctions.floatDot(col("__qres"), col("__qres")), 6))
       .select(col("query_id"), col("cluster"), col("__lut"), col("__q2"))
     def adc(lut: Column): Column =
-      call_function("graft_pq_adc", lut, col("codes"), lit(ref.k))
+      GraftFunctions.pqAdc(lut, col("codes"), ref.k)
     // counted-cap broadcast: probe rows carry per-(query, cluster) LUTs
     val scored = probeSideMaybeBroadcast(queries.sparkSession, probes)
       .join(codes, Seq("cluster"))

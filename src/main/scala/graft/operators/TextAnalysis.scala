@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -177,11 +178,10 @@ object TextAnalysis {
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** [[tokenHash60]] through the native [[graft.functions.Digest60]]
-    * expression — bit-identical, zero per-row string allocation. Requires
-    * `GraftFunctions.register` on the session; the DataFrame-level
-    * operators that use it register themselves. */
+    * expression — bit-identical, zero per-row string allocation. Works on
+    * any session (a typed kernel column, not a by-name call). */
   def tokenHash60Native(c: Column): Column =
-    call_function("graft_digest60", c)
+    GraftFunctions.digest60(c)
 
   /** SimHash over the token multiset: for each of 60 bits, sum ±1 votes
     * across token hashes; bit set where the vote is positive. Folded over
@@ -228,9 +228,8 @@ object TextAnalysis {
       df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       dim: Int): org.apache.spark.sql.DataFrame = {
     require(dim > 0, s"dim=$dim must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
-      call_function("graft_hash_embed", col(textCol), lit(dim)).as("embedding"))
+      GraftFunctions.hashEmbed(col(textCol), dim).as("embedding"))
   }
 
   /** Canonical text normalization for dedup/training pipelines:
@@ -439,7 +438,6 @@ object TextAnalysis {
       df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       dim: Int): org.apache.spark.sql.DataFrame = {
     require(dim > 0, s"dim=$dim must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashed = df
       .select(col(idCol), explode(tokens(col(textCol))).as("__tok"))
       .filter(col("__tok") =!= "")

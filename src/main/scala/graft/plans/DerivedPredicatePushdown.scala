@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * and conjoins the implied raw-column bound (keeping the original
   * predicate — the rewrite is an implication, not an equivalence), which
   * the scan-pushdown phase then picks up as a native long or timestamp
-  * filter. Registered via
-  * [[graft.functions.GraftFunctions.installOptimizations]] (runtime) or
+  * filter. Installed where a session is built:
+  * [[graft.functions.GraftFunctions.installAll]] (runtime, as
+  * `graft.GraftSession.start` does) or
   * `spark.sql.extensions=graft.functions.GraftExtensions` (deploy-time).
   */
 object DerivedPredicatePushdown extends Rule[LogicalPlan] {

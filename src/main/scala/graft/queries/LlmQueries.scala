@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import graft.operators.{Binning, Curation, Dedup, Multimodal, Retrieval, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -3859,11 +3860,10 @@ object LlmQueries {
     // integer DCT → 63 AC sign bits, one codegen projection. The
     // stride-sampling stand-in remains the path for opaque payloads.
     "multimodal_phash_bmp" -> q { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Multimodal.synthesizeBmpPayloads(
           Tables.load(s, dir, "documents").select("doc_id"), "doc_id")
         .select(col("doc_id"),
-          call_function("graft_phash_bmp", col("payload")).as("phash"))
+          GraftFunctions.phashBmp(col("payload")).as("phash"))
         .filter(col("phash").isNotNull)
         .orderBy("doc_id")
     },

@@ -9,6 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -21,6 +22,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 `format("graft-oplog")`: the change feed (reference S2,
   * the tailable oplog cursor `mongo.go:456-539`) as a first-class Spark
@@ -95,20 +97,22 @@ class OplogScan(
     pushed: Array[sources.Filter],
     required: StructType) extends Scan {
   // The session's Hadoop configuration, captured at scan build (driver):
-  // listings use it directly, readers get a serializable copy — a blank
-  // `new Configuration()` on an executor would drop every spark.hadoop.*
-  // setting (object-store credentials, endpoints) and break any
-  // non-local segments path.
-  private val hadoopConf = OplogFiles.sessionHadoopConf()
-  private val confMap: Map[String, String] =
-    OplogFiles.toMap(hadoopConf)
+  // listings use it directly, readers read ONE broadcast copy per scan
+  // (as Spark's own file scans do) — a blank `new Configuration()` on an
+  // executor would drop every spark.hadoop.* and session-level Hadoop
+  // setting (object-store credentials, endpoints, `fs.<scheme>.impl`)
+  // and break any non-local segments path.
+  private val spark = SparkSession.active
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private lazy val readerConf =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
   override def readSchema(): StructType = required
   override def description(): String =
     s"GraftOplogScan PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
       s"ReadSchema: ${required.map(_.name).mkString("[", ",", "]")}"
-  override def toBatch: Batch = new OplogBatch(path, pushed, required, hadoopConf, confMap)
+  override def toBatch: Batch = new OplogBatch(path, pushed, required, hadoopConf, readerConf)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new OplogMicroBatchStream(path, pushed, required, hadoopConf, confMap)
+    new OplogMicroBatchStream(path, pushed, required, hadoopConf, readerConf)
 }
 
 /** One split per `maxPartitionBytes` byte range with classic Hadoop
@@ -120,7 +124,7 @@ class OplogBatch(
     pushed: Array[sources.Filter],
     required: StructType,
     hadoopConf: Configuration,
-    confMap: Map[String, String]) extends Batch {
+    readerConf: Broadcast[SerializableConfiguration]) extends Batch {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val maxSplit = OplogFiles.maxSplitBytes()
@@ -137,7 +141,7 @@ class OplogBatch(
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new OplogReaderFactory(pushed, required, confMap)
+    new OplogReaderFactory(pushed, required, readerConf)
 }
 
 /** Streaming offset: every known segment file → its observed length. */
@@ -161,7 +165,7 @@ class OplogMicroBatchStream(
     pushed: Array[sources.Filter],
     required: StructType,
     hadoopConf: Configuration,
-    confMap: Map[String, String]) extends MicroBatchStream {
+    readerConf: Broadcast[SerializableConfiguration]) extends MicroBatchStream {
 
   override def initialOffset(): Offset = OplogOffset(Map.empty)
   override def latestOffset(): Offset =
@@ -186,7 +190,7 @@ class OplogMicroBatchStream(
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new OplogReaderFactory(pushed, required, confMap)
+    new OplogReaderFactory(pushed, required, readerConf)
 }
 
 case class OplogInputPartition(
@@ -199,19 +203,19 @@ case class OplogInputPartition(
 class OplogReaderFactory(
     pushed: Array[sources.Filter],
     required: StructType,
-    confMap: Map[String, String]) extends PartitionReaderFactory {
+    readerConf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new OplogPartitionReader(
-      partition.asInstanceOf[OplogInputPartition], pushed, required, confMap)
+      partition.asInstanceOf[OplogInputPartition], pushed, required, readerConf.value.value)
 }
 
 class OplogPartitionReader(
     part: OplogInputPartition,
     pushed: Array[sources.Filter],
     required: StructType,
-    confMap: Map[String, String]) extends PartitionReader[InternalRow] {
+    hadoopConf: Configuration) extends PartitionReader[InternalRow] {
 
-  private val fs = new Path(part.file).getFileSystem(OplogFiles.fromMap(confMap))
+  private val fs = new Path(part.file).getFileSystem(hadoopConf)
   private val in = fs.open(new Path(part.file))
   private val reader = new LineReader(in)
   private val end = part.start + part.length
@@ -243,25 +247,6 @@ class OplogPartitionReader(
 }
 
 private[sources] object OplogFiles {
-
-  /** The active session's Hadoop conf (spark.hadoop.* applied); falls
-    * back to defaults off-session (tests constructing scans directly). */
-  def sessionHadoopConf(): Configuration =
-    SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
-
-  def toMap(conf: Configuration): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    conf.iterator().forEachRemaining(e => b += e.getKey -> e.getValue)
-    b.result()
-  }
-
-  def fromMap(m: Map[String, String]): Configuration = {
-    val conf = new Configuration(false) // the map carries the full view
-    m.foreach { case (k, v) => conf.set(k, v) }
-    conf
-  }
 
   /** Deterministic (path-sorted) listing of visible segment files. */
   def list(path: String, conf: Configuration): Seq[(String, Long)] = {

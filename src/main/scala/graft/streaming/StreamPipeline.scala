@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -321,13 +322,12 @@ object StreamPipeline {
     * stream-static joined against the given corpus index frame. */
   private def semanticDedupAgainst(
       spark: SparkSession, dir: String, corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val arrivals = spark.readStream
       .schema(DocumentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select(col("doc_id"),
-        call_function("graft_hash_embed", col("text"), lit(SemDim)).as("__sv"))
+        GraftFunctions.hashEmbed(col("text"), SemDim).as("__sv"))
       .withColumn("bucket",
         graft.operators.Similarity.signBucket(col("__sv"), SemSignBits))
     val flagged = arrivals.join(corpus, Seq("bucket"))
@@ -387,7 +387,6 @@ object StreamPipeline {
     * list to later micro-batches. */
   def streamingSpanDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.LlmQueries.SpanGramChars
-    graft.functions.GraftFunctions.register(spark)
     val indexDir = Files.createTempDirectory("graft_gramidx_stream")
     try {
       graft.operators.Dedup.buildGramIndexM(
@@ -401,7 +400,7 @@ object StreamPipeline {
         .filter(col("doc_id") % 10 >= 8 && col("text").isNotNull &&
           length(col("text")) >= SpanGramChars)
         .select(col("doc_id"), posexplode(
-            call_function("graft_gram_digests", col("text"), lit(SpanGramChars)))
+            GraftFunctions.gramDigests(col("text"), SpanGramChars))
           .as(Seq("__p0", "__h")))
       val marked = arrivals
         .join(index.select(col("h").as("__h")), Seq("__h"))
@@ -660,7 +659,6 @@ object StreamPipeline {
 
   def streamingSpanDedupGrowing(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.LlmQueries.SpanGramChars
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val root = Files.createTempDirectory("graft_sgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_sgrow_in").toString
@@ -690,7 +688,6 @@ object StreamPipeline {
     * knows only the id arithmetic the bytes were generated from, so the
     * in-stream parse must recover the numbers from the actual bytes. */
   def streamingMediaHeaders(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val arrivals = spark.readStream
       .schema(DocumentsSchema)
       .option("pathGlobFilter", "documents.parquet")
@@ -711,7 +708,6 @@ object StreamPipeline {
     * `multimodal_phash`'s oracle (per-row independence ⇒ batch union ≡
     * one-shot). */
   def streamingPhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val arrivals = spark.readStream
       .schema(DocumentsSchema)
       .option("pathGlobFilter", "documents.parquet")
@@ -728,7 +724,6 @@ object StreamPipeline {
     * channels / rate / duration) is extracted AT INGEST and sample
     * decode stays downstream. */
   def streamingAvHeaders(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val arrivals = spark.readStream
       .schema(DocumentsSchema)
       .option("pathGlobFilter", "documents.parquet")
@@ -756,7 +751,6 @@ object StreamPipeline {
     * oracle (`curation_importance_weights`) — same corpus, same
     * arithmetic, same 6-decimal rounding. */
   def streamingDsirScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val lrRows = graft.operators.Curation.importanceLogRatios(
       docs, "text", col("source") === "src0", buckets = 64).collect()
@@ -797,7 +791,6 @@ object StreamPipeline {
     * expressions and replays the batch oracle minus the corpus-global
     * columns. */
   def streamingCurationAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val bench = graft.operators.Curation.benchDigests(
       docs.filter(col("doc_id") % ContamBenchMod === 0),
@@ -844,7 +837,6 @@ object StreamPipeline {
     * the registry row shares the batch assignment arithmetic and
     * replays exactly in the oracle's assignment CTE. */
   def streamingPrototypeScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") % 100 === 0)
     val arrivals = spark.readStream
@@ -868,7 +860,6 @@ object StreamPipeline {
     * the result-sized hit rows; batch-equivalent by per-doc
     * independence, so it shares `curation_contamination`'s oracle. */
   def streamingContamination(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val bench = graft.operators.Curation.benchDigests(
       docs.filter(col("doc_id") % ContamBenchMod === 0),
@@ -949,7 +940,6 @@ object StreamPipeline {
     * replayable by the DuckDB oracle: doc_id in batch b pairs with the
     * lake or any batch < b, never its own batch. */
   def streamingSemanticDedupGrowing(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val root = Files.createTempDirectory("graft_mgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_mgrow_in").toString
@@ -1037,7 +1027,6 @@ object StreamPipeline {
   def streamingLshDedupGrowing(
       spark: SparkSession, dir: String,
       shingleN: Int, k: Int, bands: Int, maxBucket: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val root = Files.createTempDirectory("graft_lgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_lgrow_in").toString
@@ -1128,7 +1117,6 @@ object StreamPipeline {
   def streamingAnnJlGrowing(
       spark: SparkSession, dir: String,
       k: Int, m: Int, d: Int, refine: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val root = Files.createTempDirectory("graft_jgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_jgrow_in").toString
@@ -1207,7 +1195,6 @@ object StreamPipeline {
   def streamingAnnPqGrowing(
       spark: SparkSession, dir: String,
       k: Int, m: Int, dsub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val root = Files.createTempDirectory("graft_pgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_pgrow_in").toString
@@ -1296,7 +1283,6 @@ object StreamPipeline {
     * share its probed clusters. */
   def streamingAnnIvfGrowing(
       spark: SparkSession, dir: String, k: Int, nProbe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val root = Files.createTempDirectory("graft_igrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_igrow_in").toString
@@ -1388,7 +1374,6 @@ object StreamPipeline {
   def streamingAnnIvfPqGrowing(
       spark: SparkSession, dir: String,
       k: Int, m: Int, dsub: Int, nProbe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val sample = emb.filter(col("vec_id") % 100 === 0)
     val root = Files.createTempDirectory("graft_ipqgrow_idx").toString
@@ -1481,7 +1466,6 @@ object StreamPipeline {
   def streamingPhraseScreenGrowing(
       spark: SparkSession, dir: String,
       phrases: Seq[(Int, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val root = Files.createTempDirectory("graft_pgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_pgrow_in").toString
@@ -1566,7 +1550,6 @@ object StreamPipeline {
     * same cut. */
   def streamingBm25NegativesGrowing(
       spark: SparkSession, dir: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val root = Files.createTempDirectory("graft_bgrow_idx").toString
     val streamIn = Files.createTempDirectory("graft_bgrow_in").toString
@@ -1612,7 +1595,6 @@ object StreamPipeline {
   def streamingBm25Negatives(
       spark: SparkSession, dir: String,
       anchorIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Files.createTempDirectory("graft_bm25idx_stream").toString
     try {
       graft.operators.Retrieval.buildIndexM(
@@ -1688,7 +1670,6 @@ object StreamPipeline {
       spark: SparkSession, dir: String,
       queries: Seq[(Int, String)], k: Int,
       fbDocs: Int = 3, fbTerms: Int = 8, alpha: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val root = Files.createTempDirectory("graft_rm3idx_stream").toString
     val qIn = Files.createTempDirectory("graft_rm3q_in").toString
     val outDir = Files.createTempDirectory("graft_rm3_out").toString
@@ -1902,7 +1883,6 @@ object StreamPipeline {
   def streamingBpeTokenize(
       spark: SparkSession, dir: String, nMerges: Int,
       maxWords: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val merges = graft.operators.Bpe
       .learnedMerges(docs, "text", nMerges, maxWords)
@@ -1939,7 +1919,6 @@ object StreamPipeline {
   def streamingBpeBytesTokenize(
       spark: SparkSession, dir: String, nMerges: Int,
       maxWords: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val merges = graft.operators.Bpe
       .learnedMergesBytes(docs, "text", nMerges, maxWords)
@@ -1982,7 +1961,6 @@ object StreamPipeline {
   def streamingUnigramTokenize(
       spark: SparkSession, dir: String, maxWords: Int, maxPieceLen: Int,
       seedMulti: Int, vocabMulti: Int, emIters: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val model = graft.operators.Unigram.learn(docs, "text", maxWords,
       maxPieceLen, seedMulti, vocabMulti, emIters)
@@ -2065,7 +2043,6 @@ object StreamPipeline {
   def streamingCrossCorpusDedup(
       spark: SparkSession, dir: String,
       shingleN: Int, k: Int, bands: Int, maxBucket: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val root = Files.createTempDirectory("graft_lshidx_stream").toString
     val outDir = Files.createTempDirectory("graft_slsh_out").toString
@@ -2184,7 +2161,6 @@ object StreamPipeline {
     * index (shared oracle). */
   def streamingPqProbe(
       spark: SparkSession, dir: String, k: Int, m: Int, dsub: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val cb = graft.operators.Similarity.pqCodebook(
       emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", m, dsub)
@@ -2244,7 +2220,6 @@ object StreamPipeline {
     * the inline multi-probe search (shared oracle). */
   def streamingIvfProbe(
       spark: SparkSession, dir: String, k: Int, nProbe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val root = Files.createTempDirectory("graft_ivfidx_stream").toString
     val outDir = Files.createTempDirectory("graft_sivf_out").toString
@@ -2288,7 +2263,6 @@ object StreamPipeline {
   def streamingIvfPqProbe(
       spark: SparkSession, dir: String,
       k: Int, m: Int, dsub: Int, nProbe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val sample = emb.filter(col("vec_id") % 100 === 0)
     val root = Files.createTempDirectory("graft_ivfpqidx_stream").toString
@@ -2340,7 +2314,6 @@ object StreamPipeline {
   def streamingJlProbe(
       spark: SparkSession, dir: String,
       k: Int, m: Int, d: Int, refine: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val outDir = Files.createTempDirectory("graft_sjl_out").toString
     val ckptDir = Files.createTempDirectory("graft_sjl_ckpt").toString

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * session creation dominates test wall-clock otherwise). */
+  * session creation dominates test wall-clock otherwise), with graft's SQL
+  * names, optimizer rule and planner strategy installed the way
+  * `GraftSession.start` installs them. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -15,6 +17,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.installAll(s)
     s
   }
 }

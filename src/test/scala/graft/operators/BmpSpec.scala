@@ -129,7 +129,6 @@ class BmpSpec extends SparkSpec {
       if (id % 13 == 6) assert(r.isNullAt(1), s"id=$id should be null")
       else assert(r.getSeq[Long](1) == formulaTile(id), s"id=$id")
     }
-    graft.functions.GraftFunctions.register(spark)
     val hashes = df.select(col("doc_id"),
         call_function("graft_phash_bmp", col("payload")).as("ph"))
       .orderBy("doc_id").collect()

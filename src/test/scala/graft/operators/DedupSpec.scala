@@ -741,7 +741,6 @@ class DedupSpec extends SparkSpec {
 
   test("GramDigests kernel ≡ the composed transform/substring/digest60 form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "a plain ascii document with spaces"),
       (2L, "exact"),                         // length == gramChars
@@ -766,7 +765,6 @@ class DedupSpec extends SparkSpec {
 
   test("TokenGramDigests kernel ≡ the composed split/offsets/substr/digest60 form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "a plain ascii document with several spaces in it"),
       (2L, "one two three"),                 // exactly gramTokens tokens

@@ -162,7 +162,6 @@ class KernelEdgeSpec extends SparkSpec {
   }
 
   test("JL projection: NULL vector is NULL, NaN poisons every coordinate — both twins agree") {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Seq(
       (1L, Some(Array(1.0f, Float.NaN, -0.5f))),   // NaN folds into every coord
       (2L, None: Option[Array[Float]]),            // NULL in, NULL out

@@ -109,6 +109,21 @@ class RetrievalSpec extends SparkSpec {
       "alpha=1 zeroes the feedback leg: same docs, same order")
   }
 
+  test("rm3 expansion with all-zero feedback (s = 0) keeps the original query at alpha/|q|") {
+    // every selected feedback weight is 0, so fbw/s is NaN: a feedback-only
+    // term weighs 0 and an original term keeps exactly its alpha/|q| share
+    // (an original term that is also a feedback term included); a query
+    // with nonzero feedback is interpolated as usual beside it
+    val fb = Seq((0, "agg", 0.0), (0, "window", 0.0), (0, "spark", 0.0),
+      (1, "hash", 0.3), (1, "table", 0.1))
+    val w = Retrieval.rm3Expansion(fb, Seq(0 -> "spark agg join", 1 -> "hash"), alpha = 0.5)
+      .map { case (q, t, v) => (q, t) -> v.doubleValue }.toMap
+    assert(w == Map(
+      (0, "agg") -> 0.166667, (0, "join") -> 0.166667, (0, "spark") -> 0.166667,
+      (0, "window") -> 0.0,
+      (1, "hash") -> 0.875, (1, "table") -> 0.125))
+  }
+
   test("indexed probe reproduces inline retrieval exactly") {
     val qs = Seq(0 -> "spark window agg", 1 -> "hash join")
     val p = tmp("bm25_idx_eq")

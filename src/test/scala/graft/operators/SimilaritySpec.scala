@@ -23,7 +23,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native codegen cosine is bit-identical to the composed-builtins form") {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.Tables.load(spark, Sf0001, "embeddings")
     val pairs = vecs.as("a").crossJoin(vecs.as("b"))
       .filter(col("a.vec_id") < 20 && col("b.vec_id").between(20, 40))
@@ -36,7 +35,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native SQ8 quantization is identical to the composed transform/array_max form") {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.Tables.load(spark, Sf0001, "embeddings")
       .select("vec_id", "embedding")
       .unionByName(Seq(
@@ -58,7 +56,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native int-dot is identical to the composed aggregate/zip_with form") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val codes = Seq(
       (0L, Array(127, -127, 5, 0)), (1L, Array(-1, 2, -3, 4)),
@@ -73,7 +70,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native int-dot on mismatched dimensions is NULL, like the composed form") {
-    graft.functions.GraftFunctions.register(spark)
     val uneven = Seq((0L, Array(1, 2, 3)), (1L, Array(4, 5))).toDF("id", "q")
     val pairs = uneven.as("a").crossJoin(uneven.as("b")).select(
       col("a.id").as("ai"), col("b.id").as("bi"),
@@ -91,7 +87,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_cosine resolves in SQL text after registration") {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.load(spark, Sf0001, "embeddings").createOrReplaceTempView("emb_sql")
     val c = spark.sql(
       """SELECT round(graft_cosine(a.embedding, b.embedding), 6) AS c
@@ -240,7 +235,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native float-dot is identical to the composed aggregate/zip_with form") {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.Tables.load(spark, Sf0001, "embeddings")
     val pairs = vecs.as("a").crossJoin(vecs.as("b"))
       .filter(col("a.vec_id") < 10 && col("b.vec_id").between(10, 30))
@@ -254,7 +248,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native float-dot on mismatched dimensions is NULL, like the composed form") {
-    graft.functions.GraftFunctions.register(spark)
     val uneven = Seq((0L, Array(1f, 2f, 3f)), (1L, Array(4f, 5f))).toDF("id", "v")
     val pairs = uneven.as("a").crossJoin(uneven.as("b")).select(
       call_function("graft_float_dot", col("a.v"), col("b.v")).as("native"))
@@ -279,7 +272,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_pq_adc: subspace-major LUT lookups; malformed codes are NULL") {
-    graft.functions.GraftFunctions.register(spark)
     // m=2, K=2: lut = [q0·cw00, q0·cw01, q1·cw10, q1·cw11]
     val rows = Seq(
       (Array(1.0, 2.0, 10.0, 20.0), Array(1, 0)),  // 2.0 + 10.0
@@ -682,9 +674,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopK self-registers: works on a session with a fresh function registry") {
-    // regression: the kernel assignClusters dropped the register() call
-    // the composed form carried, leaving ivfTopK's cosineNative
-    // unresolved on any session no other graft operator had touched
+    // regression: ivfTopK's cosineNative once resolved by function name,
+    // so it failed on any session no graft operator had registered on;
+    // kernels are typed columns now and need no registration
     val fresh = spark.newSession()
     val emb = fresh.read.parquet(s"$Sf0001/embeddings.parquet").select("vec_id", "embedding")
     val out = Similarity.ivfTopK(
@@ -771,7 +763,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("kernel JL projection is bit-identical to the composed digest60 twin") {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.Tables.load(spark, Sf0001, "embeddings")
       .select("vec_id", "embedding")
       .unionByName(Seq(
@@ -801,7 +792,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native double-cosine kernel is bit-identical to the composed form on projections") {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.Tables.load(spark, Sf0001, "embeddings")
       .select(Similarity.jlProjectKernel("embedding", m = 8, d = 64).as("pv"),
         col("vec_id"))

@@ -26,7 +26,6 @@ class TextAnalysisSpec extends SparkSpec {
   test("native digest60 is bit-identical to the composed md5/conv form") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // varied lengths, unicode, empty string, hex-edge digests
     val rows = (0 until 500).map(i => s"tok$i ${"x" * (i % 23)} π∂-$i") :+ ""
     val bad = rows.toDF("s")

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class DerivedPredicatePushdownSpec extends SparkSpec {
 
   test("a `ts div 1000 > v` filter gains a pushed raw-ts scan predicate") {
-    GraftOptimizations.install(spark)
     val ckptUs = 1704412800000000L
     val df = Tables.load(spark, Sf0001, "events")
       .filter(expr("ts div 1000") > lit(ckptUs))
@@ -27,7 +26,6 @@ class DerivedPredicatePushdownSpec extends SparkSpec {
   }
 
   test("rule is an implication, not a rewrite: boundary rows stay correct") {
-    GraftOptimizations.install(spark)
     import spark.implicits._
     val df = Seq(999L, 1000L, 1999L, 2000L, 2001L).toDF("x")
     // x div 1000 > 1 keeps exactly 2000, 2001
@@ -39,7 +37,6 @@ class DerivedPredicatePushdownSpec extends SparkSpec {
   }
 
   test("rule reaches fixpoint (no repeated conjuncts, plan stays analyzable)") {
-    GraftOptimizations.install(spark)
     import spark.implicits._
     val df = Seq(5000L).toDF("x").filter(expr("x div 10") > lit(3L))
     // optimizer runs batches to fixpoint; a non-idempotent rule would loop

@@ -114,4 +114,54 @@ class OplogSourceSpec extends SparkSpec {
     assert(ok.o == """{"a":[1,{"b":"}"}]}""") // raw slice, brace-in-string safe
     assert(ok.o2 == "s" && ok.ts == 7L && ok.corrupt == null)
   }
+
+  test("a session-level Hadoop setting reaches the readers of batch and stream reads") {
+    // `oplogtest://` resolves only through the session's `fs.oplogtest.impl`,
+    // which the shared SparkContext's Hadoop configuration does not carry
+    val dir = writeDir(segments.take(3))
+    val uri = s"${OplogTestFs.Scheme}://$dir"
+    assert(spark.sparkContext.hadoopConfiguration.get(OplogTestFs.ImplKey) == null)
+    spark.conf.set(OplogTestFs.ImplKey, classOf[OplogTestFs].getName)
+    spark.conf.set(s"fs.${OplogTestFs.Scheme}.impl.disable.cache", "true")
+    try {
+      OplogTestFs.opens.set(0)
+      val batch = spark.read.format("graft-oplog").load(uri)
+        .select("ts").collect().map(_.getLong(0)).sorted.toSeq
+      assert(batch == Seq(10L, 11L, 12L))
+      assert(OplogTestFs.opens.get() > 0) // the reader opened through it
+      OplogTestFs.opens.set(0)
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      spark.readStream.format("graft-oplog").load(uri)
+        .writeStream
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft_oplog_fs_ckpt").toString)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.synchronized { seen ++= df.collect().map(_.getAs[Long]("ts")) }; ()
+        }
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      assert(seen.sorted.toSeq == Seq(10L, 11L, 12L))
+      assert(OplogTestFs.opens.get() > 0)
+    } finally {
+      spark.conf.unset(OplogTestFs.ImplKey)
+      spark.conf.unset(s"fs.${OplogTestFs.Scheme}.impl.disable.cache")
+    }
+  }
+}
+
+/** The local file system under its own scheme, counting the files it
+  * opens: a stand-in for an object store whose file system class only a
+  * session setting names. */
+class OplogTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${OplogTestFs.Scheme}:///")
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    OplogTestFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object OplogTestFs {
+  val Scheme = "oplogtest"
+  val ImplKey = s"fs.$Scheme.impl"
+  val opens = new java.util.concurrent.atomic.AtomicInteger()
 }

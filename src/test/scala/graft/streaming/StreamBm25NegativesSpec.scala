@@ -9,7 +9,6 @@ import graft.SparkSpec
 class StreamBm25NegativesSpec extends SparkSpec {
 
   test("streaming negatives ≡ batch hardNegatives, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     val anchors = Seq(0L, 1L, 2L, 3L)
     val got = StreamPipeline
       .streamingBm25Negatives(spark, Sf0001, anchors, 10)

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class StreamCrossCorpusSpec extends SparkSpec {
 
   test("streaming cross-corpus LSH ≡ inline operator, pair for pair") {
-    graft.functions.GraftFunctions.installAll(spark)
     val docs = graft.Tables.load(spark, Sf0001, "documents")
     def sh(f: org.apache.spark.sql.DataFrame) =
       graft.operators.Dedup.rawShingles(f, "text", "doc_id", 5)

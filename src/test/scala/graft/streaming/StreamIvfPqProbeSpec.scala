@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class StreamIvfPqProbeSpec extends SparkSpec {
 
   test("streaming IVF-PQ probe ≡ inline ivfPqTopK, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     val emb = graft.Tables.load(spark, Sf0001, "embeddings")
     val sample = emb.filter(col("vec_id") % 100 === 0)
     val got = StreamPipeline.streamingIvfPqProbe(

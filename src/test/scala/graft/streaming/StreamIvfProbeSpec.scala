@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class StreamIvfProbeSpec extends SparkSpec {
 
   test("streaming IVF probe ≡ inline ivfTopKProbed, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     val emb = graft.Tables.load(spark, Sf0001, "embeddings")
     val got = StreamPipeline.streamingIvfProbe(spark, Sf0001, k = 5, nProbe = 2)
       .collect()

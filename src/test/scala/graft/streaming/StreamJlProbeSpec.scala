@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class StreamJlProbeSpec extends SparkSpec {
 
   test("streaming JL probe ≡ inline jlRerankTopK, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     val emb = graft.Tables.load(spark, Sf0001, "embeddings")
     val got = StreamPipeline.streamingJlProbe(spark, Sf0001,
         k = 5, m = 16, d = 64, refine = 4)

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class StreamPqProbeSpec extends SparkSpec {
 
   test("streaming PQ probe ≡ batch pqSearchEncoded, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     val emb = graft.Tables.load(spark, Sf0001, "embeddings")
     val cb = graft.operators.Similarity.pqCodebook(
       emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", 4, 16)

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class StreamPrototypeScoreSpec extends SparkSpec {
 
   test("streaming prototype score ≡ batch assignClustersWithSim, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     val emb = graft.Tables.load(spark, Sf0001, "embeddings")
     val got = StreamPipeline.streamingPrototypeScore(spark, Sf0001)
       .collect()

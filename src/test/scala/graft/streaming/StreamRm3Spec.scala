@@ -12,7 +12,6 @@ import graft.SparkSpec
 class StreamRm3Spec extends SparkSpec {
 
   test("streaming RM3 ≡ one-shot rm3TopK over the full query set, row for row") {
-    graft.functions.GraftFunctions.installAll(spark)
     // corpus-vocabulary terms (the registry's Bm25Queries shape) so
     // stage-1 candidates are non-empty at sf0.001
     val queries = Seq((1, "spark window agg"), (2, "hash join table"),
