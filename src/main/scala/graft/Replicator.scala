@@ -7,7 +7,7 @@ import graft.operators.Transforms
 import graft.sink.{MySqlDialect, SchemaSync, SinkStatement, SqlDialect, UpsertWriter}
 import graft.sink.UpsertWriter.{inTransaction, withConnection}
 import graft.sources.{ChangeFeed, Json}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -182,8 +182,9 @@ class Replicator(
   }
 
   /** Entry point C: continuous replication from an oplog-segment directory.
-    * Each micro-batch: decode → repartition by (table, key) → apply each
-    * key's ops in ts order on the executor → co-commit the max offset. */
+    * Each micro-batch: decode → repartition by (table, key) → fold each
+    * key's ops in ts order to one net write on the executor → co-commit
+    * the max offset. */
   def startStream(segmentsDir: String, checkpointDir: String, afterTs: Long = 0L,
       quarantineRule: Option[org.apache.spark.sql.Column] = None): StreamingQuery =
     startStream(
@@ -265,10 +266,14 @@ object Replicator {
     * named columns. Returns the max applied or quarantined ts.
     *
     * Rows are repartitioned by (tbl, id) and sorted by (tbl, id, ts, seq),
-    * so each key's ops reach the writer contiguous and in order; its
-    * statement shape, rendered once, is (table, present-column-set) for
-    * upserts and the table for deletes. Each write task also reports its
-    * partition's max ts and dead letters: no pass of its own for either.
+    * so each key's ops reach the writer contiguous and in order. The
+    * replay guard, the quarantine skip, the offset max and the dead-letter
+    * count run per op; then each key's run folds to ONE net write
+    * ([[KeyFold]]): a DELETE, or an upsert whose statement shape, rendered
+    * once per partition, is (table, present-column set). One write per key
+    * makes a partition's writes commute, which lets the writer batch them
+    * by statement. Each write task also reports its partition's max ts and
+    * dead letters: no pass of its own for either.
     *
     * `skipBelowTs`: replay guard — the writer skips ops with ts STRICTLY
     * below this (the durably stored offset); as a plan literal, new each
@@ -325,51 +330,28 @@ object Replicator {
     val parts = UpsertWriter.writeRows(relevant, url, props, dialect) { rows =>
       var maxTs = Long.MinValue // below every in-scope ts: none seen yet
       var deadLetters = 0L
-      val upserts = mutable.HashMap.empty[(String, Seq[String]), SinkStatement]
-      val writes = rows.flatMap { r =>
-        val ts = r.getLong(2)
+      // per op, before the fold: the dead-letter count, the replay guard and
+      // the offset max (quarantined rows too: they were stored above)
+      val ops = rows.filter { r =>
         r.getString(0) match {
-          case "dead_letter" => deadLetters += 1; None
-          case _ if ts < skipBelowTs => None
-          case kind =>
-            maxTs = math.max(maxTs, ts) // quarantined rows too: they were stored above
-            val spec = specByName(r.getString(1))
-            kind match {
-              case "quarantined" => None
-              case "delete" => Some((deletes(spec.name), (_: String) => r.getString(3)))
-              case "upsert" =>
-                val fields = Json.parseObject(r.getString(4))
-                val partial = r.getBoolean(5)
-                // removal paths arrive DOTTED (source-path form, ChangeEvent
-                // doc). A path covers a declared column iff it equals the
-                // column's dotted sourceName or is a dotted ANCESTOR: `$unset:
-                // {cfg: 1}` (whole-subdoc unset) nulls cfg.pub / cfg.deep.y
-                // (sink cfg_pub, cfg_deep_y) — while `$unset` of a SCALAR
-                // `status` leaves a distinct source field `status_code` alone,
-                // which a flattened-prefix match would corrupt.
-                val removedPaths = r.getSeq[String](6).toSet
-                val removedCols: Set[String] = spec.columns.iterator
-                  .filter(c => removedPaths.contains(c.sourceName) ||
-                    removedPaths.exists(p => c.sourceName.startsWith(p + ".")))
-                  .map(_.sinkName).toSet
-                val declared = spec.columns.map(_.sinkName)
-                val present =
-                  if (partial) declared.filter(c => fields.contains(c) || removedCols.contains(c))
-                  else declared
-                val valueOf: String => Any = {
-                  case spec.pk => r.getString(3)
-                  case c =>
-                    // P4 at the bind boundary: composite values become JSON
-                    // text, exactly like the snapshot path (mysql.go:402-404)
-                    if (removedCols.contains(c)) null
-                    else fields.getOrElse(c, null) match {
-                      case v @ (_: Seq[_] | _: Map[_, _]) => Json.render(v)
-                      case other                          => other
-                    }
-                }
-                val stmt = upserts.getOrElseUpdate((spec.name, present), dialect.upsert(spec, present))
-                Some((stmt, valueOf))
-            }
+          case "dead_letter" => deadLetters += 1; false
+          case _ if r.getLong(2) < skipBelowTs => false
+          case kind => maxTs = math.max(maxTs, r.getLong(2)); kind != "quarantined"
+        }
+      }.buffered
+      val upserts = mutable.HashMap.empty[(String, Seq[String]), SinkStatement]
+      // a key's ops arrive contiguous and in order: each run folds to one write
+      val writes = new Iterator[(SinkStatement, String => Any)] {
+        override def hasNext: Boolean = ops.hasNext
+        override def next(): (SinkStatement, String => Any) = {
+          val key = new KeyFold(specByName(ops.head.getString(1)), ops.head.getString(3))
+          while (ops.hasNext && key.owns(ops.head)) key.add(ops.next())
+          if (key.deleted) (deletes(key.spec.name), _ => key.id)
+          else {
+            val present = key.present
+            (upserts.getOrElseUpdate((key.spec.name, present), dialect.upsert(key.spec, present)),
+              key.valueOf)
+          }
         }
       }
       (writes, () => (maxTs, deadLetters))
@@ -384,5 +366,59 @@ object Replicator {
         .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
     }
     parts.iterator.map(_._1).filter(_ != Long.MinValue).maxOption
+  }
+
+  /** One key's net write, folded from its (ts, seq)-ordered run of ops by
+    * the rules of [[sink.MergeApply.foldChanges]]: a full image or a delete
+    * resets the key; a partial touches only its present columns, and an
+    * unset nulls one; a trailing delete is one DELETE. Without a reset the
+    * write is the partial upsert of every touched column (none touched: the
+    * key-only upsert, which creates an absent row). After a reset it is a
+    * full image whose untouched columns are NULL — for a partial after a
+    * delete, the row that partial's upsert re-creates, since the sink table
+    * holds only the pk and the declared columns. */
+  private final class KeyFold(val spec: TableSpec, val id: String) {
+    private val declared = spec.columns.map(_.sinkName)
+    private val values = mutable.HashMap.empty[String, Any] // touched column → last value
+    private var reset = false
+    var deleted = false
+
+    def owns(r: Row): Boolean = r.getString(3) == id && r.getString(1) == spec.name
+
+    def add(r: Row): Unit =
+      if (r.getString(0) == "delete") { values.clear(); reset = true; deleted = true }
+      else {
+        val fields = Json.parseObject(r.getString(4))
+        val partial = r.getBoolean(5)
+        // removal paths arrive DOTTED (source-path form, ChangeEvent doc). A
+        // path covers a declared column iff it equals the column's dotted
+        // sourceName or is a dotted ANCESTOR: `$unset: {cfg: 1}` (whole-subdoc
+        // unset) nulls cfg.pub / cfg.deep.y (sink cfg_pub, cfg_deep_y) — while
+        // `$unset` of a SCALAR `status` leaves a distinct source field
+        // `status_code` alone, which a flattened-prefix match would corrupt.
+        val removedPaths = r.getSeq[String](6).toSet
+        val removedCols: Set[String] = spec.columns.iterator
+          .filter(c => removedPaths.contains(c.sourceName) ||
+            removedPaths.exists(p => c.sourceName.startsWith(p + ".")))
+          .map(_.sinkName).toSet
+        if (!partial) { values.clear(); reset = true }
+        deleted = false
+        declared.foreach { c =>
+          if (removedCols.contains(c)) values(c) = null
+          else if (!partial || fields.contains(c)) values(c) = fields.getOrElse(c, null)
+        }
+      }
+
+    def present: Seq[String] = if (reset) declared else declared.filter(values.contains)
+
+    val valueOf: String => Any = {
+      case spec.pk => id
+      // P4 at the bind boundary: composite values become JSON text, exactly
+      // like the snapshot path (mysql.go:402-404)
+      case c => values.getOrElse(c, null) match {
+        case v @ (_: Seq[_] | _: Map[_, _]) => Json.render(v)
+        case other                          => other
+      }
+    }
   }
 }

@@ -639,7 +639,9 @@ object IndexManifest {
     if (fs.exists(mdir)) {
       for (f <- fs.listStatus(mdir)) {
         val name = f.getPath.getName
-        val staleTmp = name.startsWith(".tmp-") && f.getModificationTime < cutoff
+        // `<=`: mtimes are whole milliseconds, so a crashed writer's .tmp
+        // stamped in the millisecond vacuum started has aged past a zero grace
+        val staleTmp = name.startsWith(".tmp-") && f.getModificationTime <= cutoff
         // claim locks — tombstones and orphans alike — only go once
         // older than the grace window (see the scaladoc above): a
         // still-warm tombstone may be the version a racing committer is

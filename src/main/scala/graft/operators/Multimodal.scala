@@ -121,7 +121,6 @@ object Multimodal {
     * the oracle floors identically). */
   def synthesizeAvPayloads(df: DataFrame, idCol: String): DataFrame = {
     def b1(v: Column) = unhex(lpad(hex(v), 2, "0"))
-    def be16(v: Column) = unhex(lpad(hex(v), 4, "0"))
     def be32(v: Column) = unhex(lpad(hex(v), 8, "0"))
     def be64(v: Column) = unhex(lpad(hex(v), 16, "0"))
     def le16(v: Column) = {
@@ -155,7 +154,6 @@ object Multimodal {
     // (bitrate idx 9, sample-rate idx from id, mono/stereo from id),
     // side info, then Xing with the frame count
     val srIdx = (id % 3).cast("int") // 0→44100 1→48000 2→32000
-    val mp3Sr = when(srIdx === 0, 44100).when(srIdx === 1, 48000).otherwise(32000)
     val frames = (id % 200 + 1).cast("int")
     val sideInfo = when(ch === 1, unhex(lit("00" * 17))).otherwise(unhex(lit("00" * 32)))
     val mp3 = concat(

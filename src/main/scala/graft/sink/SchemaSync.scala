@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.config.{MappingConfig, TableSpec}
+import graft.config.MappingConfig
 
 /** D1: schema reconciliation (reference `SyncTablesConfig`,
   * `mysql.go:146-290`) as a PURE planner: observed catalog + declared

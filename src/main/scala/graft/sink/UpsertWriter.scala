@@ -3,7 +3,7 @@ package graft.sink
 import graft.config.TableSpec
 import org.apache.spark.sql.{DataFrame, Row}
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Types}
 import java.util.Properties
 
 import scala.collection.mutable
@@ -103,8 +103,8 @@ object UpsertWriter {
     s"CREATE TABLE IF NOT EXISTS `$StateTable` (`name` varchar(100) NOT NULL, " +
       "`value` blob, PRIMARY KEY (`name`))"
 
-  /** Rows per JDBC batch: a run of same-shape statements is flushed at
-    * this size (≈ `rewriteBatchedStatements`). */
+  /** Rows per JDBC batch: each statement's open batch is flushed at this
+    * size (≈ `rewriteBatchedStatements`). */
   private[graft] val applyBatchSize = 1000
 
   /** One connection for `f`, closed after it (auto-commit left on). */
@@ -138,41 +138,70 @@ object UpsertWriter {
     * a summary, read once the rows are consumed and returned from the
     * same job. A partition that writes (capped at
     * `dialect.maxWriteConnections`) applies its writes in ONE transaction
-    * on one connection. Prepared statements are cached per SQL text, and
-    * consecutive writes sharing a statement accumulate into one JDBC
-    * batch, flushed when the statement changes — batches execute in add
-    * order, so per-key op order holds — or at [[applyBatchSize]]: ~one
-    * round trip per [[applyBatchSize]] uniform rows, not one per row (the
-    * reference round-trips per op and reuses statements, `mysql.go:410-415`). */
+    * on one connection.
+    *
+    * Caller contract: the writes of one partition COMMUTE. Each prepared
+    * statement (cached per SQL text) keeps its own open JDBC batch, flushed
+    * at [[applyBatchSize]] rows and at partition end, so writes run grouped
+    * by statement, not in the order they were made. The snapshot and the
+    * orphan delete make one statement each; the streamed apply folds each
+    * key's ops to one net write first (`Replicator.applyBatch`). About one
+    * round trip per statement per [[applyBatchSize]] rows, not one per row
+    * (the reference round-trips per op, `mysql.go:410-415`). */
   private[graft] def writeRows[A: ClassTag](df: DataFrame, url: String, props: Properties,
       dialect: SqlDialect)(
       partition: Iterator[Row] => (Iterator[(SinkStatement, String => Any)], () => A)): Array[A] = {
     // coalesce concatenates whole parent partitions, so a key's sorted run
-    // stays contiguous — per-key order (O1) holds at any connection cap
+    // stays contiguous at any connection cap
     val bounded = dialect.maxWriteConnections.fold(df)(df.coalesce)
     bounded.rdd.mapPartitions { rows =>
       val (writes, summary) = partition(rows)
       if (writes.hasNext) inTransaction(url, props) { conn =>
-        val cache = mutable.Map.empty[String, PreparedStatement]
-        var current: PreparedStatement = null
-        var pending = 0
-        def flush(): Unit = if (pending > 0) { current.executeBatch(); pending = 0 }
+        // first-use order, so the end-of-partition flushes are deterministic
+        val open = mutable.LinkedHashMap.empty[String, OpenBatch]
         writes.foreach { case (stmt, valueOf) =>
-          val st = cache.getOrElseUpdate(stmt.sql, conn.prepareStatement(stmt.sql))
-          if (st ne current) { flush(); current = st }
-          // bind order is the dialect's declared param order, so the same
-          // loop drives ODKU (pk + present) and MERGE (pk twice)
-          stmt.params.zipWithIndex.foreach { case (name, i) =>
-            bindValue(st, i + 1, valueOf(name))
-          }
-          st.addBatch()
-          pending += 1
-          if (pending >= applyBatchSize) flush()
+          val batch = open.getOrElseUpdate(stmt.sql,
+            new OpenBatch(conn.prepareStatement(stmt.sql), stmt.params.length))
+          batch.add(stmt.params, valueOf)
+          if (batch.pending >= applyBatchSize) batch.flush()
         }
-        flush()
+        open.valuesIterator.foreach(_.flush())
       }
       Iterator.single(summary())
     }.collect()
+  }
+
+  /** A prepared statement and its open JDBC batch. Derby (and other strict
+    * engines) reject `setObject(i, null)` without a type, so each param's
+    * NULL type is read from the statement's metadata once, here — VARCHAR
+    * where the JDBC driver reports none; MySQL and the test double accept
+    * either form. */
+  private final class OpenBatch(st: PreparedStatement, params: Int) {
+    private val nullTypes: Array[Int] = {
+      val md = try Option(st.getParameterMetaData) catch { case _: SQLException => None }
+      Array.tabulate(params) { i =>
+        try md.fold(Types.VARCHAR)(_.getParameterType(i + 1))
+        catch { case _: SQLException => Types.VARCHAR }
+      }
+    }
+    var pending = 0
+
+    /** Bind in the dialect's declared param order, so the same loop drives
+      * ODKU (pk + present) and MERGE (pk twice). */
+    def add(params: Seq[String], valueOf: String => Any): Unit = {
+      var i = 0
+      params.foreach { name =>
+        valueOf(name) match {
+          case null => st.setNull(i + 1, nullTypes(i))
+          case v    => st.setObject(i + 1, v)
+        }
+        i += 1
+      }
+      st.addBatch()
+      pending += 1
+    }
+
+    def flush(): Unit = if (pending > 0) { st.executeBatch(); pending = 0 }
   }
 
   /** W3 snapshot side: full-image upsert of every row of `df`, one
@@ -191,18 +220,6 @@ object UpsertWriter {
     require(idxBySink.values.forall(_ >= 0), s"batch is missing declared columns for ${spec.name}")
     writeRows(df, url, props, dialect)(rows => (rows.map(r => (stmt, (c: String) => r.get(idxBySink(c)))), () => ()))
   }
-
-  /** Null-safe bind: Derby (and other strict engines) reject
-    * `setObject(i, null)` without a type — resolve it from the statement's
-    * parameter metadata; MySQL/the test double accept either form. */
-  def bindValue(st: PreparedStatement, idx: Int, v: Any): Unit =
-    if (v == null) {
-      val t = try {
-        Option(st.getParameterMetaData).map(_.getParameterType(idx))
-          .getOrElse(java.sql.Types.VARCHAR)
-      } catch { case _: java.sql.SQLException => java.sql.Types.VARCHAR }
-      st.setNull(idx, t)
-    } else st.setObject(idx, v)
 
   /** Driver-side offset co-commit for a completed micro-batch (C1). */
   def commitOffset(conn: Connection, offset: Long,

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.changelog.{Change, DeadLetter, Delete, OplogDecoder, RawOplog, Upsert}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

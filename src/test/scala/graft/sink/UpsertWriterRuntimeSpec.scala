@@ -180,10 +180,41 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     graft.Replicator.applyBatch(decodedDf(ops), Seq(spec), url, new Properties())
     val st = MemJdbc.stats("db5")
     assert(MemJdbc.table("db5", "users").isEmpty, "trailing delete wins → key absent")
-    // 3 distinct shapes prepared once each, despite 4 ops (reuse across the
-    // name-partial recurrence); order preserved via flush-on-switch
-    assert(st("prepare") == 3, s"prepared ${st("prepare")}, want 3 shapes")
-    assert(st("addBatch") == 4)
+    // the key's four ops fold to its one net write, the DELETE
+    assert(st("prepare") == 1, s"prepared ${st("prepare")}, want 1")
+    assert(st("addBatch") == 1)
+  }
+
+  test("applyBatch batches by statement: interleaved shapes flush once per statement per applyBatchSize rows") {
+    MemJdbc.reset("db13")
+    val url = MemJdbc.UrlPrefix + "db13"
+    // 5000 keys, sorted so that consecutive keys take different net shapes:
+    // partial(name), partial(visits), full image, delete
+    val n = 5000
+    val ops = (0 until n).flatMap { i =>
+      val id = f"k$i%05d"
+      def op(ts: Long, kind: String, json: String, partial: Boolean) =
+        (kind, "users", ts, id, json, partial, Seq.empty[String], null: String, 0)
+      i % 4 match {
+        case 0 => Seq(op(1, "upsert", """{"name":"a"}""", true), op(2, "upsert", """{"name":"b"}""", true))
+        case 1 => Seq(op(1, "upsert", """{"visits":1}""", true), op(2, "upsert", """{"visits":2}""", true))
+        case 2 => Seq(op(1, "upsert", """{"name":"a","visits":1}""", false),
+          op(2, "upsert", """{"visits":3}""", true))
+        case _ => Seq(op(1, "upsert", """{"name":"a"}""", false), op(2, "delete", null, false))
+      }
+    }
+    graft.Replicator.applyBatch(decodedDf(ops), Seq(spec), url, new Properties(),
+      dialect = OneWriterDialect)
+    val st = MemJdbc.stats("db13")
+    val perStatement = n / 4
+    assert(st("prepare") == 4, "one prepared statement per net shape")
+    assert(st("addBatch") == n, "one net write per key")
+    val bound = 4 * math.ceil(perStatement.toDouble / UpsertWriter.applyBatchSize).toInt
+    assert(st("executeBatch") <= bound, s"${st("executeBatch")} flushes, want at most $bound")
+    val t = MemJdbc.table("db13", "users")
+    assert(t.size == 3 * perStatement)
+    assert(t("k00000")("name") == "b" && t("k00001")("visits") == 2L && t("k00002")("visits") == 3L)
+    assert(!t.contains("k00003"))
   }
 
   test("applyBatch skipBelowTs drops strictly-older ops; boundary ts re-applies") {
@@ -371,4 +402,18 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
           "ddl-drop-column", "ddl-reorder-column"))
     } finally conn.close()
   }
+}
+
+/** [[MySqlDialect]] over a single writer connection, as Derby's cap makes it:
+  * the whole batch is one partition, so its flushes can be counted. */
+private object OneWriterDialect extends SqlDialect {
+  override def name: String = "mysql-one-writer"
+  override def upsert(spec: TableSpec, present: Seq[String]): SinkStatement =
+    MySqlDialect.upsert(spec, present)
+  override def delete(spec: TableSpec): SinkStatement = MySqlDialect.delete(spec)
+  override def offsetUpsert: SinkStatement = MySqlDialect.offsetUpsert
+  override def readOffsetSql: String = MySqlDialect.readOffsetSql
+  override def ensureStateTable(conn: java.sql.Connection): Unit = MySqlDialect.ensureStateTable(conn)
+  override def renderDdl(ddl: SchemaSync.Ddl): Option[String] = MySqlDialect.renderDdl(ddl)
+  override def maxWriteConnections: Option[Int] = Some(1)
 }
