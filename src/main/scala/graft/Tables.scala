@@ -28,11 +28,23 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Session-level runtime conf: harmless for non-nanos files, required
-    // for nanos-generation events.parquet. Set once per session, idempotent.
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    canonicalTs(raw(spark, dir, name))
+
+  /** The table's parquet file as stored, `ts` in the file's own type.
+    * Sets the session-level runtime conf that reads nanosecond INT64
+    * timestamps as longs: harmless for non-nanos files, required for
+    * nanos-generation events.parquet, idempotent. */
+  private[graft] def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(s"$dir/$name.parquet")
+  }
+
+  /** `df` with its `ts` column (if any) as the canonical nanos-long:
+    * microsecond TIMESTAMP/TIMESTAMP_NTZ converts, a LongType (nanos
+    * read under `nanosAsLong`) passes through. A stateless projection,
+    * so it normalizes a streaming frame exactly like a batch one. */
+  def canonicalTs(df: DataFrame): DataFrame =
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(TimestampNTZType) =>
         df.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
@@ -40,7 +52,6 @@ object Tables {
         df.withColumn("ts", unix_micros(col("ts")) * 1000L)
       case _ => df // LongType nanos (or no ts column): already canonical
     }
-  }
 
   /** Register every table as a temp view so queries can use spark.sql. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -23,8 +23,6 @@ object GraftFunctions {
   def cosine(a: Column, b: Column): Column = kernel(CosineSimilarity(arg(a), arg(b)))
   def cosineD(a: Column, b: Column): Column = kernel(CosineSimilarityD(arg(a), arg(b)))
   def digest60(s: Column): Column = kernel(Digest60(arg(s)))
-  def shingleDigests(tokens: Column, text: Column, n: Int): Column =
-    kernel(ShingleDigests(arg(tokens), arg(text), n))
   def quantizeSq8(v: Column): Column = kernel(QuantizeSq8(arg(v)))
   def intDot(a: Column, b: Column): Column = kernel(IntDotProduct(arg(a), arg(b)))
   def floatDot(a: Column, b: Column): Column = kernel(FloatDotProduct(arg(a), arg(b)))
@@ -69,9 +67,6 @@ object GraftFunctions {
       case Seq(a, b) => CosineSimilarityD(a, b) },
     entry("graft_digest60", classOf[Digest60], "(s) takes one string argument") {
       case Seq(s) => Digest60(s) },
-    entry("graft_shingle_digests", classOf[ShingleDigests],
-        "(tokens, text, n) takes tokens, text and an int literal n") {
-      case Seq(t, s, IntLit(n)) => ShingleDigests(t, s, n) },
     entry("graft_quantize_sq8", classOf[QuantizeSq8], "(v) takes one array<float> argument") {
       case Seq(v) => QuantizeSq8(v) },
     entry("graft_int_dot", classOf[IntDotProduct], "(a, b) takes two array<int> arguments") {

@@ -3,8 +3,9 @@ package graft.streaming
 import graft.functions.GraftFunctions
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Structured Streaming leg of the engine (reference entry point C,
@@ -30,7 +31,7 @@ object StreamPipeline {
       .queryName(tableName)
       .outputMode(mode)
       .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     // hand back a MATERIALIZED result and release the run's plumbing:
@@ -54,28 +55,30 @@ object StreamPipeline {
     StructField("props", StringType)))
 
   /** File-stream source over the events table, normalized to the canonical
-    * nanos-long `ts` exactly like [[graft.Tables.load]]. A streaming source
-    * needs its schema up front, and the testdata generations have encoded
-    * `ts` either as nanosecond INT64 (long under nanosAsLong) or as
-    * microsecond TIMESTAMP/TIMESTAMP_NTZ — so peek the file's batch schema
-    * once (driver-side metadata read, no data scan) and stream with the
-    * file's own type, converting to nanos in a stateless projection. */
+    * nanos-long `ts` by [[graft.Tables.canonicalTs]], exactly like
+    * [[graft.Tables.load]]. A streaming source needs its schema up front,
+    * and the testdata generations have encoded `ts` either as nanosecond
+    * INT64 (long under nanosAsLong) or as microsecond
+    * TIMESTAMP/TIMESTAMP_NTZ — so peek the file's batch schema once
+    * (driver-side metadata read, no data scan) and stream with the file's
+    * own type. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileTs = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-    val schema = StructType(EventsSchema.map(f =>
-      if (f.name == "ts") f.copy(dataType = fileTs) else f))
-    val raw = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    fileTs match {
-      case TimestampNTZType =>
-        raw.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
-      case TimestampType => raw.withColumn("ts", unix_micros(col("ts")) * 1000L)
-      case _             => raw
-    }
+    val fileTs = graft.Tables.raw(spark, dir, "events").schema("ts").dataType
+    graft.Tables.canonicalTs(tableStream(spark, dir, "events",
+      StructType(EventsSchema.map(f =>
+        if (f.name == "ts") f.copy(dataType = fileTs) else f))))
   }
+
+  /** File-stream source over one testdata table. The source requires a
+    * directory and each table is a single file, so a glob scopes the
+    * directory scan to it. */
+  private def tableStream(
+      spark: SparkSession, dir: String, table: String,
+      schema: StructType): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
 
   /** Event-time hourly windowed aggregation over the change feed, run as a
     * real Structured Streaming query with an `availableNow` trigger into a
@@ -84,8 +87,6 @@ object StreamPipeline {
     * windows at end-of-input; watermark/late-data behavior is exercised in
     * the streaming spec instead). */
   def windowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    // The file-stream source requires a directory; the testdata table is a
-    // single file, so the helper scopes the directory scan with a glob.
     val stream = eventsStream(spark, dir)
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
     val agg = stream
@@ -232,11 +233,10 @@ object StreamPipeline {
   private val SemDim = 64
   private val SemSignBits = 8
 
-  /** The bucketed corpus index frame: (corpus_id, embedding, sign-LSH
-    * bucket) — one hash-embed scan of the documents table. */
   /** One document frame embedded + sign-bucketed into the semantic
-    * index's row shape — shared by the build, the append, and the
-    * growing ingest, so every segment of the `embeds` table carries the
+    * index's row shape (corpus_id, embedding, sign-LSH bucket) — one
+    * hash-embed scan, shared by the build, the append, and the growing
+    * ingest, so every segment of the `embeds` table carries the
     * identical (corpus_id, __cv, bucket) layout. */
   private def semanticRowsOf(
       df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -322,10 +322,7 @@ object StreamPipeline {
     * stream-static joined against the given corpus index frame. */
   private def semanticDedupAgainst(
       spark: SparkSession, dir: String, corpus: DataFrame): DataFrame = {
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
       .select(col("doc_id"),
         GraftFunctions.hashEmbed(col("text"), SemDim).as("__sv"))
       .withColumn("bucket",
@@ -393,10 +390,7 @@ object StreamPipeline {
         graft.Tables.load(spark, dir, "documents").filter(col("doc_id") % 10 < 8),
         "doc_id", "text", SpanGramChars, indexDir.toString)
       val index = graft.operators.Dedup.readGramIndexM(spark, indexDir.toString)
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
+      val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
         .filter(col("doc_id") % 10 >= 8 && col("text").isNotNull &&
           length(col("text")) >= SpanGramChars)
         .select(col("doc_id"), posexplode(
@@ -432,30 +426,49 @@ object StreamPipeline {
     StructField("span_start", IntegerType),
     StructField("span_end", IntegerType)))
 
-  /** One micro-batch of the GROWING span-dedup ingest — the body
-    * `foreachBatch` runs, factored out so the replay spec can drive the
-    * exact crash windows. Replay-safe end to end:
+  /** One micro-batch of a GROWING index ingest — the one home of the
+    * growth protocol: a family's `*GrowingBatch` supplies only its
+    * `probe` and its stamped `append`. Growth is the point: batch b
+    * probes an index that already holds batches 0..b-1, so a
+    * cross-arrival repeat is caught the moment its second copy arrives.
+    * Replay-safe end to end:
     *
-    *  1. The probe resolves the index as of BEFORE this batch's own
-    *     append: walk down from HEAD past any version whose
-    *     [[StreamBatchKey]] stamp is >= this batchId. On the first
-    *     attempt that is simply HEAD; on a replay AFTER the append
-    *     committed, it is the pre-append version — without the walk,
-    *     every gram of the replayed batch would self-match against its
-    *     own committed copy and the whole batch would be marked.
-    *  2. Spans land via [[writeBatchIdempotent]] (overwrite-own-subdir).
-    *  3. The append commits with the batchId stamped in the manifest
-    *     metadata and is SKIPPED when HEAD already carries a stamp >=
-    *     batchId — the grown index and the applied-batch watermark move
+    *  1. The batch is SKIPPED when its output landed completely (the
+    *     committer's `_SUCCESS` marker under `batch-<batchId>`: an
+    *     interrupted overwrite deletes it first and re-creates it last)
+    *     and HEAD already carries a [[StreamBatchKey]] stamp >= batchId.
+    *     The output is written before the append commits, so the two
+    *     together prove the whole batch is done: no recompute, and no
+    *     dependence on the pre-append version still being readable,
+    *     which concurrent maintenance may have vacuumed by the time a
+    *     delayed replay arrives. A replay whose own overwrite crashed
+    *     midway (marker gone, rows partial) recomputes.
+    *  2. `probe` reads the index as of BEFORE this batch's own append
+    *     ([[preBatchSnapshot]]); its rows land via
+    *     [[writeBatchIdempotent]] (overwrite-own-subdir).
+    *  3. `append` commits the batch's rows with the stamp metadata it is
+    *     given, and is skipped when HEAD already carries a stamp >=
+    *     batchId: the grown index and the applied-batch watermark move
     *     in one atomic publish, so every crash window (before the write,
     *     between write and append, after the append but before the
-    *     checkpoint commit) replays to the same final state.
-    *
-    * Growth is the point: batch b's grams probe an index that already
-    * contains batches 0..b-1, so cross-arrival repeats are caught the
-    * moment the second copy arrives — keep-first across arrival order,
-    * with intra-batch repeats handled by [[graft.operators.Dedup
-    * .incrementalSpans]]'s ≥2-distinct-docs clause. */
+    *     checkpoint commit) replays to the same final state. */
+  private def growStep(
+      batch: DataFrame, batchId: Long, root: String, outDir: String)(
+      probe: graft.index.IndexManifest.Snapshot => DataFrame)(
+      append: Map[String, String] => Unit): Unit = {
+    val spark = batch.sparkSession
+    val marker = new org.apache.hadoop.fs.Path(s"$outDir/batch-$batchId", "_SUCCESS")
+    val done =
+      marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker) &&
+        graft.index.IndexManifest.snapshot(spark, root).meta
+          .get(StreamBatchKey).exists(_.toLong >= batchId)
+    if (!done) {
+      val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
+      writeBatchIdempotent(probe(snap), outDir, batchId)
+      if (!alreadyCommitted) append(Map(StreamBatchKey -> batchId.toString))
+    }
+  }
+
   /** Resolve the index AS OF BEFORE `batchId`'s own append: walk down
     * from HEAD past any version whose [[StreamBatchKey]] stamp is >=
     * batchId. On the first attempt that is simply HEAD; on a replay
@@ -464,24 +477,7 @@ object StreamPipeline {
     * its own committed copy. Returns the resolved snapshot plus whether
     * HEAD already carries this batch's append (replay → skip commit).
     * Family-agnostic: the walk reads only manifest metadata, so every
-    * growing-index family (gram, LSH, …) shares it. */
-  /** True iff `batchId`'s idempotent output landed COMPLETELY (the
-    * committer's `_SUCCESS` marker — an interrupted overwrite deletes
-    * it first and re-creates it last). Growth batches write their
-    * output BEFORE their append commits, so `alreadyCommitted &&
-    * batchOutputComplete` proves the whole batch is done and the
-    * replay can short-circuit: no recompute, and — the real point — no
-    * dependence on the pre-append index version still being readable,
-    * which concurrent maintenance may have vacuumed by the time a
-    * delayed replay arrives. Without the marker check a replay whose
-    * own overwrite crashed midway (dir cleared, rows partial) would
-    * wrongly skip; with it, that replay recomputes. */
-  private[graft] def batchOutputComplete(
-      spark: SparkSession, outDir: String, batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/batch-$batchId", "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
+    * growing-index family shares it. */
   private[graft] def preBatchSnapshot(
       spark: SparkSession, root: String,
       batchId: Long): (graft.index.IndexManifest.Snapshot, Boolean) = {
@@ -569,25 +565,23 @@ object StreamPipeline {
       head.version, tables, head.meta, head.explicitKeys)
   }
 
+  /** One micro-batch of the GROWING span-dedup ingest ([[growStep]]):
+    * the arrivals' spans against the gram index as of the previous
+    * batch — keep-first across arrival order, with intra-batch repeats
+    * handled by [[graft.operators.Dedup.incrementalSpans]]'s
+    * ≥2-distinct-docs clause — then the batch's grams append. */
   private[graft] def spanGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      gramChars: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val index = graft.operators.Dedup.readGramIndexAt(spark, root, snap)
-    val spans = graft.operators.Dedup.incrementalSpans(
-      index, batch, "doc_id", "text", gramChars)
-    writeBatchIdempotent(
-      spans.select(col("doc_id"), col("span_start"), col("span_end")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      gramChars: Int): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      graft.operators.Dedup.incrementalSpans(
+          graft.operators.Dedup.readGramIndexAt(batch.sparkSession, root, snap),
+          batch, "doc_id", "text", gramChars)
+        .select(col("doc_id"), col("span_start"), col("span_end"))
+    } { meta =>
       graft.operators.Dedup.appendGramIndexM(
-        batch, "doc_id", "text", gramChars, root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "doc_id", "text", gramChars, root, extraMeta = meta)
+    }
 
   /** Stage `arrivals` as `nBatches` single-file parquet drops (batch b =
     * docs with `(doc_id mod 10*nBatches) div 10 == b`) with ascending
@@ -599,23 +593,58 @@ object StreamPipeline {
       idCol: String = "doc_id"): Unit = {
     val stage = Files.createTempDirectory("graft_sgrow_stage").toString
     try {
-      for (b <- 0 until nBatches) {
-        val dirB = s"$stage/b$b"
-        arrivals
-          .filter(expr(s"($idCol % ${10 * nBatches}) div 10") === b)
-          .coalesce(1).write.mode("overwrite").parquet(dirB)
-        val part = Option(new java.io.File(dirB).listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $dirB"))
-        val dst = java.nio.file.Paths.get(streamIn, f"arrivals-$b%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(
-          java.lang.System.currentTimeMillis() - (nBatches - b) * 60000L): Unit
-      }
+      for (b <- 0 until nBatches)
+        dropFile(
+          arrivals.filter(expr(s"($idCol % ${10 * nBatches}) div 10") === b),
+          s"$stage/b$b", java.nio.file.Paths.get(streamIn, f"arrivals-$b%03d.parquet"),
+          minutesAgo = nBatches - b)
     } finally rmTree(stage)
   }
+
+  /** Write `df` as ONE parquet file at `dst` (through `stageDir`) with
+    * its mtime set `minutesAgo` back, so a file stream reading one file
+    * per trigger consumes the drops oldest first. */
+  private def dropFile(
+      df: DataFrame, stageDir: String, dst: java.nio.file.Path,
+      minutesAgo: Int): Unit = {
+    df.coalesce(1).write.mode("overwrite").parquet(stageDir)
+    val part = Option(new java.io.File(stageDir).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(s"no part file in $stageDir"))
+    Files.move(part.toPath, dst)
+    dst.toFile.setLastModified(
+      java.lang.System.currentTimeMillis() - minutesAgo * 60000L): Unit
+  }
+
+  /** The one driver of the nine GROWING ingests: the index is built
+    * over the lake part of `lake` (`id % 10 < 8`) by `build(part,
+    * root)`, the rest is staged as 3 arrival batches
+    * ([[writeArrivalBatches]]), and [[drain]] runs them one file per
+    * trigger through `step(batch, batchId, root, outDir)` — a family's
+    * `*GrowingBatch`. `arrival` is the file stream's schema; its first
+    * column is the id the lake/arrival split keys on. */
+  private def growingDrain(
+      spark: SparkSession, prefix: String, lake: DataFrame,
+      arrival: StructType, outSchema: StructType)(
+      build: (DataFrame, String) => Unit)(
+      step: (DataFrame, Long, String, String) => Unit): DataFrame =
+    drain(spark, prefix) { scratch =>
+      val idCol = arrival.head.name
+      val root = scratch(s"${prefix}_idx")
+      val streamIn = scratch(s"${prefix}_in")
+      build(lake.filter(col(idCol) % 10 < 8), root)
+      writeArrivalBatches(
+        lake.filter(col(idCol) % 10 >= 8), streamIn, nBatches = 3, idCol = idCol)
+      val arrivals = spark.readStream
+        .schema(arrival)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(streamIn)
+      Drain(arrivals, outSchema) { (batch, batchId, outDir) =>
+        step(batch, batchId, root, outDir)
+      }
+    }
 
   /** Ingest-time repeated-span marking where the persisted gram index
     * GROWS with the stream — the missing half of [[streamingSpanDedup]]
@@ -632,48 +661,14 @@ object StreamPipeline {
     * (kill-and-replay spec-proven). Deterministic batch order (staged
     * files, ascending mtimes) makes the result exactly replayable by the
     * shared DuckDB oracle. */
-  /** The RUN phase of the growing span ingest, over already-staged
-    * arrivals and an already-built lake index — factored out of
-    * [[streamingSpanDedupGrowing]] so the scale soak can time exactly
-    * the per-batch probe+append loop (the production steady state)
-    * without the one-off lake build and arrival staging inside the
-    * measured region. */
-  private[graft] def spanGrowingStream(
-      spark: SparkSession, root: String, streamIn: String,
-      outDir: String, ckptDir: String, gramChars: Int): DataFrame = {
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamIn)
-    val q = arrivals.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        spanGrowingBatch(batch.toDF(), batchId, root, outDir, gramChars)
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    readBatchDirs(spark, outDir, SpanSchema).localCheckpoint(true)
-      .orderBy("doc_id", "span_start")
-  }
-
   def streamingSpanDedupGrowing(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.LlmQueries.SpanGramChars
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val root = Files.createTempDirectory("graft_sgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_sgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_sgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_sgrow_ckpt").toString
-    try {
-      graft.operators.Dedup.buildGramIndexM(
-        docs.filter(col("doc_id") % 10 < 8),
-        "doc_id", "text", SpanGramChars, root)
-      writeArrivalBatches(
-        docs.filter(col("doc_id") % 10 >= 8), streamIn, nBatches = 3)
-      spanGrowingStream(spark, root, streamIn, outDir, ckptDir, SpanGramChars)
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
+    growingDrain(spark, "graft_sgrow", graft.Tables.load(spark, dir, "documents"),
+        DocumentsSchema, SpanSchema) { (part, root) =>
+      graft.operators.Dedup.buildGramIndexM(part, "doc_id", "text", SpanGramChars, root)
+    } { (batch, batchId, root, outDir) =>
+      spanGrowingBatch(batch, batchId, root, outDir, SpanGramChars)
+    }.orderBy("doc_id", "span_start")
   }
 
   /** Multimodal metadata extraction AT INGEST — the crawl-pipeline shape
@@ -688,10 +683,7 @@ object StreamPipeline {
     * knows only the id arithmetic the bytes were generated from, so the
     * in-stream parse must recover the numbers from the actual bytes. */
   def streamingMediaHeaders(spark: SparkSession, dir: String): DataFrame = {
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
     val parsed = graft.operators.Multimodal.headerMeta(
       graft.operators.Multimodal.synthesizeImagePayloads(arrivals, "doc_id"),
       "doc_id")
@@ -708,10 +700,7 @@ object StreamPipeline {
     * `multimodal_phash`'s oracle (per-row independence ⇒ batch union ≡
     * one-shot). */
   def streamingPhash(spark: SparkSession, dir: String): DataFrame = {
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
     val hashed = graft.operators.Dedup.phashSigs(
       graft.operators.Multimodal.attachPayload(arrivals, "text", "doc_id"),
       "payload", "doc_id")
@@ -724,10 +713,7 @@ object StreamPipeline {
     * channels / rate / duration) is extracted AT INGEST and sample
     * decode stays downstream. */
   def streamingAvHeaders(spark: SparkSession, dir: String): DataFrame = {
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
     val parsed = graft.operators.Multimodal.avHeaderMeta(
       graft.operators.Multimodal.synthesizeAvPayloads(arrivals, "doc_id"),
       "doc_id")
@@ -762,10 +748,7 @@ object StreamPipeline {
       if (lrRows.isEmpty) (0L, 0L)
       else (lrRows.head.getLong(2), lrRows.head.getLong(3))
     val floor = graft.operators.Curation.importanceUnseenFloor(tt, rt, buckets = 64)
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
     val (nToks, logweight) = graft.operators.Curation.importanceScore(
       col("text"), lr, floor, buckets = 64)
     val scored = arrivals.filter(col("source") =!= "src0")
@@ -795,10 +778,7 @@ object StreamPipeline {
     val bench = graft.operators.Curation.benchDigests(
       docs.filter(col("doc_id") % ContamBenchMod === 0),
       "text", "doc_id", ContamShingleN)
-    def arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    def arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
     val toks = split(col("text"), " ")
     val rates = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25)
     val gates = runToMemory(arrivals.select(
@@ -839,10 +819,7 @@ object StreamPipeline {
   def streamingPrototypeScore(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") % 100 === 0)
-    val arrivals = spark.readStream
-      .schema(EmbeddingsSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "embeddings", EmbeddingsSchema)
     val scored = graft.operators.Similarity.assignClustersWithSim(
         arrivals.select(col("vec_id"), col("embedding")),
         centroids, "vec_id", "embedding")
@@ -864,10 +841,7 @@ object StreamPipeline {
     val bench = graft.operators.Curation.benchDigests(
       docs.filter(col("doc_id") % ContamBenchMod === 0),
       "text", "doc_id", ContamShingleN)
-    val arrivals = spark.readStream
-      .schema(DocumentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
       .filter(col("doc_id") % ContamBenchMod =!= 0)
     val hits = graft.operators.Curation.contaminationHits(
       arrivals, bench, "doc_id", "text", ContamShingleN)
@@ -899,29 +873,23 @@ object StreamPipeline {
     * shuffles), mirroring the batch [[graft.operators.Dedup
     * .embeddingDupPairs]] bucket-join shape. */
   private[graft] def semGrowingBatch(
-      batch: DataFrame, batchId: Long, root: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val corpus = graft.index.IndexManifest.readAt(spark, root, snap, SemTable)
-    val probe = graft.operators.TextAnalysis
-      .hashEmbed(batch, "doc_id", "text", SemDim)
-      .select(col("doc_id"), col("embedding").as("__sv"),
-        graft.operators.Similarity.signBucket(col("embedding"), SemSignBits)
-          .as("bucket"))
-    val flagged = corpus.join(broadcast(probe), Seq("bucket"))
-      .filter(col("doc_id") =!= col("corpus_id"))
-      .withColumn("__c",
-        graft.operators.Similarity.cosineNative(col("__sv"), col("__cv")))
-      .filter(col("__c") >= 0.9) // threshold on the RAW cosine (dedup contract)
-      .select(col("doc_id"), col("corpus_id"), round(col("__c"), 6).as("cosine"))
-    writeBatchIdempotent(flagged, outDir, batchId)
-    if (!alreadyCommitted)
-      appendSemanticIndexM(batch, "doc_id", "text", root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+      batch: DataFrame, batchId: Long, root: String, outDir: String): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      val corpus = graft.index.IndexManifest.readAt(batch.sparkSession, root, snap, SemTable)
+      val probe = graft.operators.TextAnalysis
+        .hashEmbed(batch, "doc_id", "text", SemDim)
+        .select(col("doc_id"), col("embedding").as("__sv"),
+          graft.operators.Similarity.signBucket(col("embedding"), SemSignBits)
+            .as("bucket"))
+      corpus.join(broadcast(probe), Seq("bucket"))
+        .filter(col("doc_id") =!= col("corpus_id"))
+        .withColumn("__c",
+          graft.operators.Similarity.cosineNative(col("__sv"), col("__cv")))
+        .filter(col("__c") >= 0.9) // threshold on the RAW cosine (dedup contract)
+        .select(col("doc_id"), col("corpus_id"), round(col("__c"), 6).as("cosine"))
+    } { meta =>
+      appendSemanticIndexM(batch, "doc_id", "text", root, extraMeta = meta)
+    }
 
   /** Semantic dedup AT INGEST where the embed table GROWS with the
     * stream — the missing half of [[streamingSemanticDedup]] (which
@@ -939,35 +907,13 @@ object StreamPipeline {
     * commits). Deterministic batch staging makes the pair set exactly
     * replayable by the DuckDB oracle: doc_id in batch b pairs with the
     * lake or any batch < b, never its own batch. */
-  def streamingSemanticDedupGrowing(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val root = Files.createTempDirectory("graft_mgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_mgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_mgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_mgrow_ckpt").toString
-    try {
-      buildSemanticIndexDfM(
-        docs.filter(col("doc_id") % 10 < 8), "doc_id", "text", root)
-      writeArrivalBatches(
-        docs.filter(col("doc_id") % 10 >= 8), streamIn, nBatches = 3)
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          semGrowingBatch(batch.toDF(), batchId, root, outDir)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, SemGrowSchema).localCheckpoint(true)
-        .orderBy("doc_id", "corpus_id")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
-  }
+  def streamingSemanticDedupGrowing(spark: SparkSession, dir: String): DataFrame =
+    growingDrain(spark, "graft_mgrow", graft.Tables.load(spark, dir, "documents"),
+        DocumentsSchema, SemGrowSchema) { (part, root) =>
+      buildSemanticIndexDfM(part, "doc_id", "text", root)
+    } { (batch, batchId, root, outDir) =>
+      semGrowingBatch(batch, batchId, root, outDir)
+    }.orderBy("doc_id", "corpus_id")
 
   /** Output schema of [[lshGrowingBatch]]'s per-batch pair frames. */
   private[graft] val PairSchema: StructType = StructType(Seq(
@@ -987,25 +933,19 @@ object StreamPipeline {
   private[graft] def lshGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
       shingleN: Int, k: Int, bands: Int, maxBucket: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val (bandsDf, sigsDf) =
-      graft.operators.Dedup.readLshIndexAt(spark, root, snap)
-    val shingled = graft.operators.Dedup.rawShingles(
+    lazy val shingled = graft.operators.Dedup.rawShingles(
       batch, "text", "doc_id", shingleN)
-    val pairs = graft.operators.Dedup.indexedCrossCorpusPairs(
-      bandsDf, sigsDf, shingled, "doc_id", k, bands, maxBucket,
-      staleCounts = true)
-    writeBatchIdempotent(
-      pairs.select(col("id_new"), col("id_base"), col("est_jaccard")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+    growStep(batch, batchId, root, outDir) { snap =>
+      val (bandsDf, sigsDf) =
+        graft.operators.Dedup.readLshIndexAt(batch.sparkSession, root, snap)
+      graft.operators.Dedup.indexedCrossCorpusPairs(
+          bandsDf, sigsDf, shingled, "doc_id", k, bands, maxBucket,
+          staleCounts = true)
+        .select(col("id_new"), col("id_base"), col("est_jaccard"))
+    } { meta =>
       graft.operators.Dedup.appendLshIndexM(
-        shingled, "doc_id", k, bands, root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
+        shingled, "doc_id", k, bands, root, extraMeta = meta)
+    }
   }
 
   /** Near-dup screening at ingest where the persisted LSH index GROWS
@@ -1026,38 +966,15 @@ object StreamPipeline {
     * the lake or any batch < b, never its own batch. */
   def streamingLshDedupGrowing(
       spark: SparkSession, dir: String,
-      shingleN: Int, k: Int, bands: Int, maxBucket: Int): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val root = Files.createTempDirectory("graft_lgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_lgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_lgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_lgrow_ckpt").toString
-    try {
+      shingleN: Int, k: Int, bands: Int, maxBucket: Int): DataFrame =
+    growingDrain(spark, "graft_lgrow", graft.Tables.load(spark, dir, "documents"),
+        DocumentsSchema, PairSchema) { (part, root) =>
       graft.operators.Dedup.buildLshIndexM(
-        graft.operators.Dedup.rawShingles(
-          docs.filter(col("doc_id") % 10 < 8), "text", "doc_id", shingleN),
+        graft.operators.Dedup.rawShingles(part, "text", "doc_id", shingleN),
         "doc_id", k, bands, root)
-      writeArrivalBatches(
-        docs.filter(col("doc_id") % 10 >= 8), streamIn, nBatches = 3)
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          lshGrowingBatch(batch.toDF(), batchId, root, outDir,
-            shingleN, k, bands, maxBucket)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, PairSchema).localCheckpoint(true)
-        .orderBy("id_new", "id_base")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
-  }
+    } { (batch, batchId, root, outDir) =>
+      lshGrowingBatch(batch, batchId, root, outDir, shingleN, k, bands, maxBucket)
+    }.orderBy("id_new", "id_base")
 
   /** Output schema of [[pqGrowingBatch]]'s per-batch top-k frames. */
   private[graft] val PqGrowSchema: StructType = StructType(Seq(
@@ -1083,23 +1000,16 @@ object StreamPipeline {
     * own projections append through the batchId-stamped atomic commit. */
   private[graft] def jlGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      corpus: DataFrame, k: Int, refine: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val topk = graft.operators.Similarity.jlProbeSnapM(
-      batch, corpus, "vec_id", "embedding", k, refine, root, snap)
-    writeBatchIdempotent(
-      topk.select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank").as("rnk")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      corpus: DataFrame, k: Int, refine: Int): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      graft.operators.Similarity.jlProbeSnapM(
+          batch, corpus, "vec_id", "embedding", k, refine, root, snap)
+        .select(col("query_id"), col("neighbor_id"), col("cosine"),
+          col("rank").as("rnk"))
+    } { meta =>
       graft.operators.Similarity.appendJlIndexM(
-        batch, "vec_id", "embedding", root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "vec_id", "embedding", root, extraMeta = meta)
+    }
 
   /** ANN at ingest where the TRAINING-FREE projected index GROWS with
     * the stream — the eighth growing family, and the one whose
@@ -1118,33 +1028,13 @@ object StreamPipeline {
       spark: SparkSession, dir: String,
       k: Int, m: Int, d: Int, refine: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val root = Files.createTempDirectory("graft_jgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_jgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_jgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_jgrow_ckpt").toString
-    try {
-      graft.operators.Similarity.buildJlIndexM(
-        emb.filter(col("vec_id") % 10 < 8), "vec_id", "embedding", m, d, root)
-      writeArrivalBatches(
-        emb.filter(col("vec_id") % 10 >= 8), streamIn, nBatches = 3,
-        idCol = "vec_id")
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          jlGrowingBatch(batch.toDF(), batchId, root, outDir, emb, k, refine)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, JlGrowSchema).localCheckpoint(true)
-        .orderBy("query_id", "rnk")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
+    growingDrain(spark, "graft_jgrow", emb, EmbeddingsSchema, JlGrowSchema) {
+      (part, root) =>
+        graft.operators.Similarity.buildJlIndexM(
+          part, "vec_id", "embedding", m, d, root)
+    } { (batch, batchId, root, outDir) =>
+      jlGrowingBatch(batch, batchId, root, outDir, emb, k, refine)
+    }.orderBy("query_id", "rnk")
   }
 
   /** One micro-batch of the GROWING ANN ingest — the PQ edition of
@@ -1157,25 +1047,18 @@ object StreamPipeline {
     * batchId-stamped atomic commit. */
   private[graft] def pqGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      k: Int, m: Int, dsub: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val (codes, cb) =
-      graft.operators.Similarity.readPqIndexAt(spark, root, snap)
-    val topk = graft.operators.Similarity.pqSearchEncoded(
-      batch, codes, cb, "vec_id", "embedding", k, m, dsub)
-    writeBatchIdempotent(
-      topk.select(col("query_id"), col("neighbor_id"), col("score"),
-        col("rank").as("rnk")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      k: Int, m: Int, dsub: Int): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      val (codes, cb) =
+        graft.operators.Similarity.readPqIndexAt(batch.sparkSession, root, snap)
+      graft.operators.Similarity.pqSearchEncoded(
+          batch, codes, cb, "vec_id", "embedding", k, m, dsub)
+        .select(col("query_id"), col("neighbor_id"), col("score"),
+          col("rank").as("rnk"))
+    } { meta =>
       graft.operators.Similarity.appendPqIndexM(
-        batch, "vec_id", "embedding", m, dsub, root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "vec_id", "embedding", m, dsub, root, extraMeta = meta)
+    }
 
   /** ANN at ingest where the compressed PQ index GROWS with the stream —
     * the vector-database ingestion loop: every arriving embedding is
@@ -1196,39 +1079,18 @@ object StreamPipeline {
       spark: SparkSession, dir: String,
       k: Int, m: Int, dsub: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val root = Files.createTempDirectory("graft_pgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_pgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_pgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_pgrow_ckpt").toString
-    try {
-      // codebook sample fixed at build time from the full table — the
-      // production contract (codes are meaningless across codebooks),
-      // and what keeps the oracle's encode grid identical
-      val cb = graft.operators.Similarity.pqCodebook(
-        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", m, dsub)
-      graft.operators.Similarity.buildPqIndexM(
-        emb.filter(col("vec_id") % 10 < 8), cb,
-        "vec_id", "embedding", m, dsub, root)
-      writeArrivalBatches(
-        emb.filter(col("vec_id") % 10 >= 8), streamIn, nBatches = 3,
-        idCol = "vec_id")
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          pqGrowingBatch(batch.toDF(), batchId, root, outDir, k, m, dsub)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, PqGrowSchema).localCheckpoint(true)
-        .orderBy("query_id", "rnk")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
+    growingDrain(spark, "graft_pgrow", emb, EmbeddingsSchema, PqGrowSchema) {
+      (part, root) =>
+        // codebook sample fixed at build time from the full table — the
+        // production contract (codes are meaningless across codebooks),
+        // and what keeps the oracle's encode grid identical
+        val cb = graft.operators.Similarity.pqCodebook(
+          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", m, dsub)
+        graft.operators.Similarity.buildPqIndexM(
+          part, cb, "vec_id", "embedding", m, dsub, root)
+    } { (batch, batchId, root, outDir) =>
+      pqGrowingBatch(batch, batchId, root, outDir, k, m, dsub)
+    }.orderBy("query_id", "rnk")
   }
 
   /** Output schema of [[ivfGrowingBatch]]'s per-batch top-k frames. */
@@ -1248,26 +1110,19 @@ object StreamPipeline {
     * through the batchId-stamped atomic commit. */
   private[graft] def ivfGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      k: Int, nProbe: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    // snapshot-keyed (not version-keyed) probe: on a vacuumed-walk-back
-    // replay the resolved view is a reconstruction that exists only as
-    // a Snapshot value, not as a committed version number
-    val topk = graft.operators.Similarity.ivfProbeSnapM(
-      batch, "vec_id", "embedding", k, nProbe, root, snap)
-    writeBatchIdempotent(
-      topk.select(col("query_id"), col("cluster"), col("neighbor_id"),
-        col("cosine"), col("rank").as("rnk")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      k: Int, nProbe: Int): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      // snapshot-keyed (not version-keyed) probe: on a vacuumed-walk-back
+      // replay the resolved view is a reconstruction that exists only as
+      // a Snapshot value, not as a committed version number
+      graft.operators.Similarity.ivfProbeSnapM(
+          batch, "vec_id", "embedding", k, nProbe, root, snap)
+        .select(col("query_id"), col("cluster"), col("neighbor_id"),
+          col("cosine"), col("rank").as("rnk"))
+    } { meta =>
       graft.operators.Similarity.appendIvfIndexM(
-        batch, "vec_id", "embedding", root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "vec_id", "embedding", root, extraMeta = meta)
+    }
 
   /** Multi-probe ANN at ingest where the inverted file GROWS with the
     * stream — the uncompressed sibling of [[streamingAnnPqGrowing]]:
@@ -1284,39 +1139,18 @@ object StreamPipeline {
   def streamingAnnIvfGrowing(
       spark: SparkSession, dir: String, k: Int, nProbe: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val root = Files.createTempDirectory("graft_igrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_igrow_in").toString
-    val outDir = Files.createTempDirectory("graft_igrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_igrow_ckpt").toString
-    try {
-      // centroid sample fixed at build time from the full table — the
-      // production contract (append re-uses the stored centroids so
-      // every segment's cell geometry matches), and what keeps the
-      // oracle's assignment grid identical
-      graft.operators.Similarity.buildIvfIndexM(
-        emb.filter(col("vec_id") % 10 < 8),
-        emb.filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", root)
-      writeArrivalBatches(
-        emb.filter(col("vec_id") % 10 >= 8), streamIn, nBatches = 3,
-        idCol = "vec_id")
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          ivfGrowingBatch(batch.toDF(), batchId, root, outDir, k, nProbe)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, IvfGrowSchema).localCheckpoint(true)
-        .orderBy("query_id", "rnk")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
+    growingDrain(spark, "graft_igrow", emb, EmbeddingsSchema, IvfGrowSchema) {
+      (part, root) =>
+        // centroid sample fixed at build time from the full table — the
+        // production contract (append re-uses the stored centroids so
+        // every segment's cell geometry matches), and what keeps the
+        // oracle's assignment grid identical
+        graft.operators.Similarity.buildIvfIndexM(
+          part, emb.filter(col("vec_id") % 100 === 0),
+          "vec_id", "embedding", root)
+    } { (batch, batchId, root, outDir) =>
+      ivfGrowingBatch(batch, batchId, root, outDir, k, nProbe)
+    }.orderBy("query_id", "rnk")
   }
 
   /** Output schema of [[ivfPqGrowingBatch]]'s per-batch top-k frames. */
@@ -1341,23 +1175,16 @@ object StreamPipeline {
     * unchanged. */
   private[graft] def ivfPqGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      k: Int, m: Int, dsub: Int, nProbe: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val topk = graft.operators.Similarity.ivfPqProbeSnapM(
-      batch, "vec_id", "embedding", k, m, dsub, nProbe, root, snap)
-    writeBatchIdempotent(
-      topk.select(col("query_id"), col("cluster"), col("neighbor_id"),
-        col("score"), col("rank").as("rnk")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      k: Int, m: Int, dsub: Int, nProbe: Int): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      graft.operators.Similarity.ivfPqProbeSnapM(
+          batch, "vec_id", "embedding", k, m, dsub, nProbe, root, snap)
+        .select(col("query_id"), col("cluster"), col("neighbor_id"),
+          col("score"), col("rank").as("rnk"))
+    } { meta =>
       graft.operators.Similarity.appendIvfPqIndexM(
-        batch, "vec_id", "embedding", m, dsub, root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "vec_id", "embedding", m, dsub, root, extraMeta = meta)
+    }
 
   /** Compressed ANN at ingest where the IVF-PQ index GROWS with the
     * stream — completing the growing set ([[streamingAnnPqGrowing]] /
@@ -1375,41 +1202,20 @@ object StreamPipeline {
       spark: SparkSession, dir: String,
       k: Int, m: Int, dsub: Int, nProbe: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val sample = emb.filter(col("vec_id") % 100 === 0)
-    val root = Files.createTempDirectory("graft_ipqgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_ipqgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_ipqgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_ipqgrow_ckpt").toString
-    try {
-      // centroid + codebook samples fixed at build time from the FULL
-      // table (the production contract: appends re-use the stored
-      // geometry so every code segment is ADC-comparable) — and what
-      // keeps the oracle's assignment + codeword grids identical
-      val cb = graft.operators.Similarity.pqCodebook(
-        sample, "vec_id", "embedding", m, dsub).localCheckpoint()
-      graft.operators.Similarity.buildIvfPqIndexM(
-        emb.filter(col("vec_id") % 10 < 8), sample, cb,
-        "vec_id", "embedding", m, dsub, root)
-      writeArrivalBatches(
-        emb.filter(col("vec_id") % 10 >= 8), streamIn, nBatches = 3,
-        idCol = "vec_id")
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          ivfPqGrowingBatch(batch.toDF(), batchId, root, outDir, k, m, dsub, nProbe)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, IvfPqGrowSchema).localCheckpoint(true)
-        .orderBy("query_id", "rnk")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
+    growingDrain(spark, "graft_ipqgrow", emb, EmbeddingsSchema, IvfPqGrowSchema) {
+      (part, root) =>
+        // centroid + codebook samples fixed at build time from the FULL
+        // table (the production contract: appends re-use the stored
+        // geometry so every code segment is ADC-comparable) — and what
+        // keeps the oracle's assignment + codeword grids identical
+        val sample = emb.filter(col("vec_id") % 100 === 0)
+        val cb = graft.operators.Similarity.pqCodebook(
+          sample, "vec_id", "embedding", m, dsub).localCheckpoint()
+        graft.operators.Similarity.buildIvfPqIndexM(
+          part, sample, cb, "vec_id", "embedding", m, dsub, root)
+    } { (batch, batchId, root, outDir) =>
+      ivfPqGrowingBatch(batch, batchId, root, outDir, k, m, dsub, nProbe)
+    }.orderBy("query_id", "rnk")
   }
 
   /** Output schema of [[phraseGrowingBatch]]'s per-batch screen frames. */
@@ -1434,23 +1240,16 @@ object StreamPipeline {
     * not ceremonial. */
   private[graft] def phraseGrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      phrases: Seq[(Int, String)]): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val hits = graft.operators.Retrieval.phraseScreenGrownM(
-      batch, "doc_id", "text", phrases, root, snap)
-    writeBatchIdempotent(
-      hits.select(lit(batchId).as("as_of_batch"), col("query_id"),
-        col("doc_id"), col("n_occ")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      phrases: Seq[(Int, String)]): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      graft.operators.Retrieval.phraseScreenGrownM(
+          batch, "doc_id", "text", phrases, root, snap)
+        .select(lit(batchId).as("as_of_batch"), col("query_id"),
+          col("doc_id"), col("n_occ"))
+    } { meta =>
       graft.operators.Retrieval.appendPosIndexM(
-        batch, "doc_id", "text", root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "doc_id", "text", root, extraMeta = meta)
+    }
 
   /** Banned-phrase screening at ingest where the POSITIONAL index grows
     * with the stream — the phrase/SDM family's production ingest loop,
@@ -1465,37 +1264,15 @@ object StreamPipeline {
     * batches ≤ b. */
   def streamingPhraseScreenGrowing(
       spark: SparkSession, dir: String,
-      phrases: Seq[(Int, String)]): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val root = Files.createTempDirectory("graft_pgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_pgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_pgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_pgrow_ckpt").toString
-    try {
-      graft.operators.Retrieval.buildPosIndexM(
-        docs.filter(col("doc_id") % 10 < 8), "doc_id", "text", root)
-      writeArrivalBatches(
-        docs.filter(col("doc_id") % 10 >= 8), streamIn, nBatches = 3)
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          phraseGrowingBatch(batch.toDF(), batchId, root, outDir, phrases)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // checkpoint only — the registry row orders; an orderBy here would
-      // just add a redundant exchange+sort (the streamingBpeTokenize
-      // pattern)
-      readBatchDirs(spark, outDir, PhraseGrowSchema).localCheckpoint(true)
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
+      phrases: Seq[(Int, String)]): DataFrame =
+    // no orderBy — the registry row orders; one here would just add a
+    // redundant exchange+sort
+    growingDrain(spark, "graft_phgrow", graft.Tables.load(spark, dir, "documents"),
+        DocumentsSchema, PhraseGrowSchema) { (part, root) =>
+      graft.operators.Retrieval.buildPosIndexM(part, "doc_id", "text", root)
+    } { (batch, batchId, root, outDir) =>
+      phraseGrowingBatch(batch, batchId, root, outDir, phrases)
     }
-  }
 
   /** Output schema of [[bm25GrowingBatch]]'s per-batch negative frames. */
   private[graft] val Bm25GrowSchema: StructType = StructType(Seq(
@@ -1517,22 +1294,15 @@ object StreamPipeline {
     * at all). */
   private[graft] def bm25GrowingBatch(
       batch: DataFrame, batchId: Long, root: String, outDir: String,
-      k: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchOutputComplete(spark, outDir, batchId) &&
-        graft.index.IndexManifest.snapshot(spark, root).meta
-          .get(StreamBatchKey).exists(_.toLong >= batchId)) return
-    val (snap, alreadyCommitted) = preBatchSnapshot(spark, root, batchId)
-    val negs = graft.operators.Retrieval.hardNegativesAtM(
-      batch, "doc_id", "text", k, root, snap)
-    writeBatchIdempotent(
-      negs.select(col("query_id"), col("doc_id"), col("score"), col("rank")),
-      outDir, batchId)
-    if (!alreadyCommitted)
+      k: Int): Unit =
+    growStep(batch, batchId, root, outDir) { snap =>
+      graft.operators.Retrieval.hardNegativesAtM(
+          batch, "doc_id", "text", k, root, snap)
+        .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
+    } { meta =>
       graft.operators.Retrieval.appendIndexM(
-        batch, "doc_id", "text", root,
-        extraMeta = Map(StreamBatchKey -> batchId.toString)): Unit
-  }
+        batch, "doc_id", "text", root, extraMeta = meta)
+    }
 
   /** Hard-negative mining at ingest where the inverted index GROWS with
     * the stream — the retrieval edition of the growing family, closing
@@ -1549,35 +1319,13 @@ object StreamPipeline {
     * scores documents of the lake and batches < b, with stats as of the
     * same cut. */
   def streamingBm25NegativesGrowing(
-      spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val root = Files.createTempDirectory("graft_bgrow_idx").toString
-    val streamIn = Files.createTempDirectory("graft_bgrow_in").toString
-    val outDir = Files.createTempDirectory("graft_bgrow_out").toString
-    val ckptDir = Files.createTempDirectory("graft_bgrow_ckpt").toString
-    try {
-      graft.operators.Retrieval.buildIndexM(
-        docs.filter(col("doc_id") % 10 < 8), "doc_id", "text", root)
-      writeArrivalBatches(
-        docs.filter(col("doc_id") % 10 >= 8), streamIn, nBatches = 3)
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          bm25GrowingBatch(batch.toDF(), batchId, root, outDir, k)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, Bm25GrowSchema).localCheckpoint(true)
-        .orderBy("query_id", "rank")
-    } finally {
-      Seq(root, streamIn, outDir, ckptDir).foreach(rmTree)
-    }
-  }
+      spark: SparkSession, dir: String, k: Int): DataFrame =
+    growingDrain(spark, "graft_bgrow", graft.Tables.load(spark, dir, "documents"),
+        DocumentsSchema, Bm25GrowSchema) { (part, root) =>
+      graft.operators.Retrieval.buildIndexM(part, "doc_id", "text", root)
+    } { (batch, batchId, root, outDir) =>
+      bm25GrowingBatch(batch, batchId, root, outDir, k)
+    }.orderBy("query_id", "rank")
 
   /** Hard-negative mining AT INGEST — the streaming leg of the BM25
     * retrieval family: every arriving anchor document's distinct terms
@@ -1607,10 +1355,7 @@ object StreamPipeline {
         .agg(sum(col("n_docs")).cast("long"), sum(col("sum_dl")).cast("long")).head()
       val (n, sumDl) = (c.getLong(0), c.getLong(1))
       val avgdl = sumDl.toDouble / n
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
+      val arrivals = tableStream(spark, dir, "documents", DocumentsSchema)
         .filter(col("doc_id").isin(anchorIds: _*))
         .select(col("doc_id").as("query_id"),
           explode(array_distinct(split(col("text"), " "))).as("term"))
@@ -1669,49 +1414,32 @@ object StreamPipeline {
   def streamingRm3TopK(
       spark: SparkSession, dir: String,
       queries: Seq[(Int, String)], k: Int,
-      fbDocs: Int = 3, fbTerms: Int = 8, alpha: Double = 0.5): DataFrame = {
-    val root = Files.createTempDirectory("graft_rm3idx_stream").toString
-    val qIn = Files.createTempDirectory("graft_rm3q_in").toString
-    val outDir = Files.createTempDirectory("graft_rm3_out").toString
-    val ckptDir = Files.createTempDirectory("graft_rm3_ckpt").toString
-    val stage = Files.createTempDirectory("graft_rm3q_stage").toString
-    try {
+      fbDocs: Int = 3, fbTerms: Int = 8, alpha: Double = 0.5): DataFrame =
+    drain(spark, "graft_rm3") { scratch =>
+      val root = scratch("graft_rm3idx_stream")
       graft.operators.Retrieval.buildIndexM(
         graft.Tables.load(spark, dir, "documents"), "doc_id", "text", root)
-      // stage the query stream: round-robin the query set into 3
-      // single-file micro-batches (one file = one trigger)
-      val qSchema = stageQueryBatches(spark, queries, qIn, stage, nB = 3)
-      val arrivals = spark.readStream
-        .schema(qSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(qIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val qs = batch.collect()
-            .map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
+      Drain(queryStream(spark, queries, scratch), Rm3StreamSchema) {
+        (batch, batchId, outDir) =>
+          val qs = queriesOf(batch)
           if (qs.nonEmpty)
             writeBatchIdempotent(graft.operators.Retrieval.rm3ProbeM(
               spark, root, qs, k, fbDocs, fbTerms, alpha), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, Rm3StreamSchema).localCheckpoint(true)
-    } finally {
-      Seq(root, qIn, outDir, ckptDir, stage).foreach(rmTree)
+      }
     }
-  }
 
-  /** Stage a driver-literal (query_id, text) batch as `nB` single-file
-    * parquet micro-batches under `qIn` — round-robin by position, file
-    * mtimes back-dated so the file source replays batch order
-    * deterministically (the query-stream analog of the doc-arrival
-    * staging; ONE definition shared by every query-stream probe leg).
-    * Returns the arrival schema for the readStream. */
-  private def stageQueryBatches(
-      spark: SparkSession, queries: Seq[(Int, String)], qIn: String,
-      stage: String, nB: Int): StructType = {
+  /** Stage a driver-literal (query_id, text) batch as 3 single-file
+    * parquet micro-batches and return the file stream over them —
+    * round-robin by position, file mtimes back-dated so the file source
+    * replays batch order deterministically (the query-stream analog of
+    * [[writeArrivalBatches]]; ONE definition shared by every
+    * query-stream probe leg). */
+  private def queryStream(
+      spark: SparkSession, queries: Seq[(Int, String)],
+      scratch: Scratch): DataFrame = {
+    val nB = 3
+    val qIn = scratch("graft_q_in")
+    val stage = scratch("graft_q_stage")
     val qSchema = StructType(Seq(StructField("query_id", IntegerType),
       StructField("text", StringType)))
     (0 until nB).foreach { b =>
@@ -1719,22 +1447,22 @@ object StreamPipeline {
         case ((id, text), i) if i % nB == b =>
           org.apache.spark.sql.Row(id, text)
       }
-      val dirB = s"$stage/b$b"
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(sub.toIndexedSeq, 1), qSchema)
-        .coalesce(1).write.mode("overwrite").parquet(dirB)
-      val part = Option(new java.io.File(dirB).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $dirB"))
-      val dst = java.nio.file.Paths.get(qIn, f"queries-$b%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(
-        java.lang.System.currentTimeMillis() - (nB - b) * 60000L): Unit
+      dropFile(
+        spark.createDataFrame(
+          spark.sparkContext.parallelize(sub.toIndexedSeq, 1), qSchema),
+        s"$stage/b$b", java.nio.file.Paths.get(qIn, f"queries-$b%03d.parquet"),
+        minutesAgo = nB - b)
     }
-    qSchema
+    spark.readStream
+      .schema(qSchema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(qIn)
   }
+
+  /** A query micro-batch as the driver literals the probes take, in
+    * query-id order. */
+  private def queriesOf(batch: DataFrame): Seq[(Int, String)] =
+    batch.collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
 
   private[graft] val PhraseStreamSchema: StructType = StructType(Seq(
     StructField("query_id", IntegerType),
@@ -1754,37 +1482,19 @@ object StreamPipeline {
     * search-head-request-sized), never a corpus collect. */
   def streamingPhraseTopK(
       spark: SparkSession, dir: String,
-      phrases: Seq[(Int, String)], k: Int): DataFrame = {
-    val root = Files.createTempDirectory("graft_posidx_stream").toString
-    val qIn = Files.createTempDirectory("graft_phraseq_in").toString
-    val outDir = Files.createTempDirectory("graft_phrase_out").toString
-    val ckptDir = Files.createTempDirectory("graft_phrase_ckpt").toString
-    val stage = Files.createTempDirectory("graft_phraseq_stage").toString
-    try {
+      phrases: Seq[(Int, String)], k: Int): DataFrame =
+    drain(spark, "graft_phrase") { scratch =>
+      val root = scratch("graft_posidx_stream")
       graft.operators.Retrieval.buildPosIndexM(
         graft.Tables.load(spark, dir, "documents"), "doc_id", "text", root)
-      val qSchema = stageQueryBatches(spark, phrases, qIn, stage, nB = 3)
-      val arrivals = spark.readStream
-        .schema(qSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(qIn)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val qs = batch.collect()
-            .map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
+      Drain(queryStream(spark, phrases, scratch), PhraseStreamSchema) {
+        (batch, batchId, outDir) =>
+          val qs = queriesOf(batch)
           if (qs.nonEmpty)
             writeBatchIdempotent(graft.operators.Retrieval.phraseProbeM(
               spark, root, qs, k), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, PhraseStreamSchema).localCheckpoint(true)
-    } finally {
-      Seq(root, qIn, outDir, ckptDir, stage).foreach(rmTree)
+      }
     }
-  }
 
   private[graft] val PhraseScreenSchema: StructType = StructType(Seq(
     StructField("query_id", IntegerType),
@@ -1800,28 +1510,14 @@ object StreamPipeline {
     * one-shot screen — the registry row shares the batch oracle. */
   def streamingPhraseScreen(
       spark: SparkSession, dir: String,
-      phrases: Seq[(Int, String)]): DataFrame = {
-    val outDir = Files.createTempDirectory("graft_pscreen_out").toString
-    val ckptDir = Files.createTempDirectory("graft_pscreen_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(graft.operators.Retrieval.phraseScreen(
-            batch, "doc_id", "text", phrases), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, PhraseScreenSchema).localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+      phrases: Seq[(Int, String)]): DataFrame =
+    drain(spark, "graft_pscreen") { _ =>
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema),
+          PhraseScreenSchema) { (batch, batchId, outDir) =>
+        writeBatchIdempotent(graft.operators.Retrieval.phraseScreen(
+          batch, "doc_id", "text", phrases), outDir, batchId)
+      }
     }
-  }
 
   private[graft] val TokenCountSchema: StructType = StructType(Seq(
     StructField("grp", StringType),
@@ -1839,33 +1535,17 @@ object StreamPipeline {
     * `quality_token_kl`'s oracle (the persisted-profile-partials
     * precedent: stream partials, fold exactly, score once). */
   def streamingTokenKl(
-      spark: SparkSession, dir: String, vocabSize: Int = 1000): DataFrame = {
-    val outDir = Files.createTempDirectory("graft_tkl_out").toString
-    val ckptDir = Files.createTempDirectory("graft_tkl_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(graft.operators.Quality.tokenCounts(
-            batch, "source", "text"), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val folded = readBatchDirs(spark, outDir, TokenCountSchema)
-        .groupBy(col("grp"), col("tok"))
-        .agg(sum(col("c")).as("c"))
-      graft.operators.Quality
-        .tokenKlFromCounts(folded, "source", vocabSize)
-        .localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+      spark: SparkSession, dir: String, vocabSize: Int = 1000): DataFrame =
+    drain(spark, "graft_tkl", finish = partials =>
+        graft.operators.Quality.tokenKlFromCounts(
+          partials.groupBy(col("grp"), col("tok")).agg(sum(col("c")).as("c")),
+          "source", vocabSize)) { _ =>
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema),
+          TokenCountSchema) { (batch, batchId, outDir) =>
+        writeBatchIdempotent(graft.operators.Quality.tokenCounts(
+          batch, "source", "text"), outDir, batchId)
+      }
     }
-  }
 
   private[graft] val BpeStreamSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -1887,25 +1567,12 @@ object StreamPipeline {
     val merges = graft.operators.Bpe
       .learnedMerges(docs, "text", nMerges, maxWords)
       .map(m => (m._2, m._3))
-    val outDir = Files.createTempDirectory("graft_bpe_out").toString
-    val ckptDir = Files.createTempDirectory("graft_bpe_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(graft.operators.Bpe.tokenizeWithMerges(
-            batch.toDF(), "doc_id", "text", merges), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, BpeStreamSchema).localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+    drain(spark, "graft_bpe") { _ =>
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema),
+          BpeStreamSchema) { (batch, batchId, outDir) =>
+        writeBatchIdempotent(graft.operators.Bpe.tokenizeWithMerges(
+          batch, "doc_id", "text", merges), outDir, batchId)
+      }
     }
   }
 
@@ -1923,25 +1590,12 @@ object StreamPipeline {
     val merges = graft.operators.Bpe
       .learnedMergesBytes(docs, "text", nMerges, maxWords)
       .map(m => (m._2, m._3))
-    val outDir = Files.createTempDirectory("graft_bpeb_out").toString
-    val ckptDir = Files.createTempDirectory("graft_bpeb_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(graft.operators.Bpe.tokenizeWithMergesBytes(
-            batch.toDF(), "doc_id", "text", merges), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, BpeStreamSchema).localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+    drain(spark, "graft_bpeb") { _ =>
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema),
+          BpeStreamSchema) { (batch, batchId, outDir) =>
+        writeBatchIdempotent(graft.operators.Bpe.tokenizeWithMergesBytes(
+          batch, "doc_id", "text", merges), outDir, batchId)
+      }
     }
   }
 
@@ -1964,25 +1618,12 @@ object StreamPipeline {
     val docs = graft.Tables.load(spark, dir, "documents")
     val model = graft.operators.Unigram.learn(docs, "text", maxWords,
       maxPieceLen, seedMulti, vocabMulti, emIters)
-    val outDir = Files.createTempDirectory("graft_unigram_out").toString
-    val ckptDir = Files.createTempDirectory("graft_unigram_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(graft.operators.Unigram.tokenize(
-            batch.toDF(), "doc_id", "text", model), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, UnigramStreamSchema).localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+    drain(spark, "graft_unigram") { _ =>
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema),
+          UnigramStreamSchema) { (batch, batchId, outDir) =>
+        writeBatchIdempotent(graft.operators.Unigram.tokenize(
+          batch, "doc_id", "text", model), outDir, batchId)
+      }
     }
   }
 
@@ -2004,26 +1645,13 @@ object StreamPipeline {
     val model = graft.operators.Classify.nbTrain(
       docs.filter(col("doc_id") % 5 =!= 0), "source", "text")
       .localCheckpoint(true)
-    val outDir = Files.createTempDirectory("graft_nb_out").toString
-    val ckptDir = Files.createTempDirectory("graft_nb_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val held = batch.filter(col("doc_id") % 5 === 0)
-          writeBatchIdempotent(graft.operators.Classify.nbClassify(
-            model, held, "doc_id", "text"), outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir, NbStreamSchema).localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+    drain(spark, "graft_nb") { _ =>
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema),
+          NbStreamSchema) { (batch, batchId, outDir) =>
+        val held = batch.filter(col("doc_id") % 5 === 0)
+        writeBatchIdempotent(graft.operators.Classify.nbClassify(
+          model, held, "doc_id", "text"), outDir, batchId)
+      }
     }
   }
 
@@ -2044,45 +1672,23 @@ object StreamPipeline {
       spark: SparkSession, dir: String,
       shingleN: Int, k: Int, bands: Int, maxBucket: Int): DataFrame = {
     val docs = graft.Tables.load(spark, dir, "documents")
-    val root = Files.createTempDirectory("graft_lshidx_stream").toString
-    val outDir = Files.createTempDirectory("graft_slsh_out").toString
-    val ckptDir = Files.createTempDirectory("graft_slsh_ckpt").toString
-    try {
-      // the index BUILD runs inside the try too: a failed build must
-      // not leak the scratch root (the finally's rmTree covers it)
+    drain(spark, "graft_slsh") { scratch =>
+      val root = scratch("graft_lshidx_stream")
       graft.operators.Dedup.buildLshIndexM(
         graft.operators.Dedup.rawShingles(
           docs.filter(col("doc_id") % 2 =!= 0), "text", "doc_id", shingleN),
         "doc_id", k, bands, root)
       val (bandsDf, sigsDf) = graft.operators.Dedup.readLshIndexM(spark, root)
-      val arrivals = spark.readStream
-        .schema(DocumentsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .filter(col("doc_id") % 2 === 0)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.operators.Dedup.indexedCrossCorpusPairs(bandsDf, sigsDf,
-              graft.operators.Dedup.rawShingles(
-                batch.toDF(), "text", "doc_id", shingleN),
-              "doc_id", k, bands, maxBucket),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // winners are pair-result-sized: materialize them off the scratch
-      // files (eager localCheckpoint) so the finally can reclaim the dirs
-      readBatchDirs(spark, outDir,
+      def pairs(arrivals: DataFrame): DataFrame =
         graft.operators.Dedup.indexedCrossCorpusPairs(bandsDf, sigsDf,
-          graft.operators.Dedup.rawShingles(
-            emptyOf(spark, DocumentsSchema), "text", "doc_id", shingleN),
-          "doc_id", k, bands, maxBucket).schema).localCheckpoint(true)
-    } finally {
-      // reclaim on EVERY exit path — a failed run must not leak /tmp
-      Seq(root, outDir, ckptDir).foreach(rmTree)
+          graft.operators.Dedup.rawShingles(arrivals, "text", "doc_id", shingleN),
+          "doc_id", k, bands, maxBucket)
+      Drain(tableStream(spark, dir, "documents", DocumentsSchema)
+          .filter(col("doc_id") % 2 === 0),
+          pairs(emptyOf(spark, DocumentsSchema)).schema) {
+        (batch, batchId, outDir) =>
+          writeBatchIdempotent(pairs(batch), outDir, batchId)
+      }
     }
   }
 
@@ -2127,9 +1733,7 @@ object StreamPipeline {
       else fs.listStatus(p)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
         .map(_.getPath.toString)
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
+    if (dirs.isEmpty) emptyOf(spark, emptySchema)
     else spark.read.parquet(dirs.toIndexedSeq: _*)
   }
 
@@ -2139,6 +1743,64 @@ object StreamPipeline {
     if (java.nio.file.Files.exists(p))
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
         .foreach(x => java.nio.file.Files.deleteIfExists(x))
+  }
+
+  /** Temp dirs made inside one [[drain]]: each is deleted when it ends. */
+  private final class Scratch {
+    private[StreamPipeline] val dirs =
+      scala.collection.mutable.ArrayBuffer.empty[String]
+    def apply(prefix: String): String = {
+      val d = Files.createTempDirectory(prefix).toString
+      dirs += d
+      d
+    }
+  }
+
+  /** The stream a [[drain]] runs: its arrivals, the per-batch `step`
+    * (batch, batchId, outDir) that writes the batch's rows under
+    * `outDir`, and the output schema of a run with no micro-batch
+    * (evaluated only then). */
+  private final class Drain(
+      val arrivals: DataFrame, val emptySchema: () => StructType,
+      val step: (DataFrame, Long, String) => Unit)
+
+  private object Drain {
+    def apply(arrivals: DataFrame, emptySchema: => StructType)(
+        step: (DataFrame, Long, String) => Unit): Drain =
+      new Drain(arrivals, () => emptySchema, step)
+  }
+
+  /** Run a file-sink stream to a finished result — the one driver of
+    * every `foreachBatch` query here. `setup` runs inside the managed
+    * scope: it builds whatever the stream probes (an index root, staged
+    * arrivals — every dir it takes from `scratch`) and returns the
+    * [[Drain]]. The stream runs under `Trigger.AvailableNow` to its end;
+    * each micro-batch writes its own batchId-keyed output
+    * ([[writeBatchIdempotent]]), so a replayed batch replaces rather
+    * than duplicates. The union ([[readBatchDirs]]) passes through
+    * `finish` and is materialized (eager `localCheckpoint`, the result
+    * is output-sized) so that one `finally` can delete the output,
+    * checkpoint and every scratch dir on every exit path: a failed index
+    * build or a failed batch leaks no temp dir. */
+  private def drain(
+      spark: SparkSession, prefix: String,
+      finish: DataFrame => DataFrame = identity)(
+      setup: Scratch => Drain): DataFrame = {
+    val scratch = new Scratch
+    try {
+      val outDir = scratch(s"${prefix}_out")
+      val ckptDir = scratch(s"${prefix}_ckpt")
+      val run = setup(scratch)
+      run.arrivals.writeStream
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          run.step(batch.toDF(), batchId, outDir)
+        }
+        .option("checkpointLocation", ckptDir)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      finish(readBatchDirs(spark, outDir, run.emptySchema())).localCheckpoint(true)
+    } finally scratch.dirs.foreach(rmTree)
   }
 
   /** Schema of the embeddings parquet table. */
@@ -2162,45 +1824,27 @@ object StreamPipeline {
   def streamingPqProbe(
       spark: SparkSession, dir: String, k: Int, m: Int, dsub: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val cb = graft.operators.Similarity.pqCodebook(
-      emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", m, dsub)
-    val root = Files.createTempDirectory("graft_pqidx_stream").toString
-    graft.operators.Similarity.buildPqIndexM(
-      emb, cb, "vec_id", "embedding", m, dsub, root)
-    val snap = graft.index.IndexManifest.snapshot(spark, root)
-    val codes = graft.index.IndexManifest.readAt(spark, root, snap, "codes")
-    val cbStored = graft.index.IndexManifest.readAt(spark, root, snap, "codebook")
-    val arrivals = spark.readStream
-      .schema(EmbeddingsSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-      .filter(col("vec_id") < 10)
-    val scored = graft.operators.Similarity.pqAdcScored(
-      arrivals, codes, cbStored, "vec_id", "embedding", m, dsub,
-      hintBroadcastQueries = false)
-    val outDir = Files.createTempDirectory("graft_spq_out").toString
-    val ckptDir = Files.createTempDirectory("graft_spq_ckpt").toString
-    val winners = try {
-      val q = scored.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.operators.TopK.perKey(batch.toDF(), Seq("query_id"),
-              Seq(col("score").desc, col("neighbor_id").asc), k),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // winners are queries×k rows: materialize them off the scratch
-      // files (eager localCheckpoint) so the finally can reclaim the dirs
-      readBatchDirs(spark, outDir, scored.schema).localCheckpoint(true)
-    } finally {
-      // reclaim on EVERY exit path — a failed run must not leak /tmp
-      Seq(root, outDir, ckptDir).foreach(rmTree)
-    }
-    winners
-      .withColumn("rank", row_number().over(
+    drain(spark, "graft_spq") { scratch =>
+      val root = scratch("graft_pqidx_stream")
+      val cb = graft.operators.Similarity.pqCodebook(
+        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", m, dsub)
+      graft.operators.Similarity.buildPqIndexM(
+        emb, cb, "vec_id", "embedding", m, dsub, root)
+      val snap = graft.index.IndexManifest.snapshot(spark, root)
+      val codes = graft.index.IndexManifest.readAt(spark, root, snap, "codes")
+      val cbStored = graft.index.IndexManifest.readAt(spark, root, snap, "codebook")
+      val scored = graft.operators.Similarity.pqAdcScored(
+        tableStream(spark, dir, "embeddings", EmbeddingsSchema)
+          .filter(col("vec_id") < 10),
+        codes, cbStored, "vec_id", "embedding", m, dsub,
+        hintBroadcastQueries = false)
+      Drain(scored, scored.schema) { (batch, batchId, outDir) =>
+        writeBatchIdempotent(
+          graft.operators.TopK.perKey(batch, Seq("query_id"),
+            Seq(col("score").desc, col("neighbor_id").asc), k),
+          outDir, batchId)
+      }
+    }.withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("neighbor_id").asc)))
@@ -2221,34 +1865,19 @@ object StreamPipeline {
   def streamingIvfProbe(
       spark: SparkSession, dir: String, k: Int, nProbe: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val root = Files.createTempDirectory("graft_ivfidx_stream").toString
-    val outDir = Files.createTempDirectory("graft_sivf_out").toString
-    val ckptDir = Files.createTempDirectory("graft_sivf_ckpt").toString
-    try {
+    drain(spark, "graft_sivf") { scratch =>
+      val root = scratch("graft_ivfidx_stream")
       graft.operators.Similarity.buildIvfIndexM(
         emb, emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", root)
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
-        .filter(col("vec_id") < 10)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.operators.Similarity.ivfProbeM(
-              batch.toDF(), "vec_id", "embedding", k, nProbe, root),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir,
+      def probe(arrivals: DataFrame): DataFrame =
         graft.operators.Similarity.ivfProbeM(
-          emptyOf(spark, EmbeddingsSchema),
-          "vec_id", "embedding", k, nProbe, root).schema).localCheckpoint(true)
-    } finally {
-      Seq(root, outDir, ckptDir).foreach(rmTree)
+          arrivals, "vec_id", "embedding", k, nProbe, root)
+      Drain(tableStream(spark, dir, "embeddings", EmbeddingsSchema)
+          .filter(col("vec_id") < 10),
+          probe(emptyOf(spark, EmbeddingsSchema)).schema) {
+        (batch, batchId, outDir) =>
+          writeBatchIdempotent(probe(batch), outDir, batchId)
+      }
     }
   }
 
@@ -2265,37 +1894,21 @@ object StreamPipeline {
       k: Int, m: Int, dsub: Int, nProbe: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val sample = emb.filter(col("vec_id") % 100 === 0)
-    val root = Files.createTempDirectory("graft_ivfpqidx_stream").toString
-    val outDir = Files.createTempDirectory("graft_sivfpq_out").toString
-    val ckptDir = Files.createTempDirectory("graft_sivfpq_ckpt").toString
-    try {
+    drain(spark, "graft_sivfpq") { scratch =>
+      val root = scratch("graft_ivfpqidx_stream")
       val cb = graft.operators.Similarity.pqCodebook(
         sample, "vec_id", "embedding", m, dsub).localCheckpoint()
       graft.operators.Similarity.buildIvfPqIndexM(
         emb, sample, cb, "vec_id", "embedding", m, dsub, root)
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
-        .filter(col("vec_id") < 10)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.operators.Similarity.ivfPqProbeM(
-              batch.toDF(), "vec_id", "embedding", k, m, dsub, nProbe, root),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir,
+      def probe(arrivals: DataFrame): DataFrame =
         graft.operators.Similarity.ivfPqProbeM(
-          emptyOf(spark, EmbeddingsSchema),
-          "vec_id", "embedding", k, m, dsub, nProbe, root).schema)
-        .localCheckpoint(true)
-    } finally {
-      Seq(root, outDir, ckptDir).foreach(rmTree)
+          arrivals, "vec_id", "embedding", k, m, dsub, nProbe, root)
+      Drain(tableStream(spark, dir, "embeddings", EmbeddingsSchema)
+          .filter(col("vec_id") < 10),
+          probe(emptyOf(spark, EmbeddingsSchema)).schema) {
+        (batch, batchId, outDir) =>
+          writeBatchIdempotent(probe(batch), outDir, batchId)
+      }
     }
   }
 
@@ -2315,32 +1928,16 @@ object StreamPipeline {
       spark: SparkSession, dir: String,
       k: Int, m: Int, d: Int, refine: Int): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
-    val outDir = Files.createTempDirectory("graft_sjl_out").toString
-    val ckptDir = Files.createTempDirectory("graft_sjl_ckpt").toString
-    try {
-      val arrivals = spark.readStream
-        .schema(EmbeddingsSchema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(dir)
-        .filter(col("vec_id") < 10)
-      val q = arrivals.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.operators.Similarity.jlRerankTopK(
-              batch.toDF(), emb, "vec_id", "embedding", k, m, d, refine),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      readBatchDirs(spark, outDir,
-        graft.operators.Similarity.jlRerankTopK(
-          emptyOf(spark, EmbeddingsSchema), emb,
-          "vec_id", "embedding", k, m, d, refine).schema)
-        .localCheckpoint(true)
-    } finally {
-      Seq(outDir, ckptDir).foreach(rmTree)
+    def probe(arrivals: DataFrame): DataFrame =
+      graft.operators.Similarity.jlRerankTopK(
+        arrivals, emb, "vec_id", "embedding", k, m, d, refine)
+    drain(spark, "graft_sjl") { _ =>
+      Drain(tableStream(spark, dir, "embeddings", EmbeddingsSchema)
+          .filter(col("vec_id") < 10),
+          probe(emptyOf(spark, EmbeddingsSchema)).schema) {
+        (batch, batchId, outDir) =>
+          writeBatchIdempotent(probe(batch), outDir, batchId)
+      }
     }
   }
 

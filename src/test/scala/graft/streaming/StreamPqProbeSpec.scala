@@ -24,4 +24,31 @@ class StreamPqProbeSpec extends SparkSpec {
     assert(got == want, s"diff: ${(got -- want).take(3)} / ${(want -- got).take(3)}")
     assert(got.nonEmpty && got.forall { case (q, n, _, _) => q != n })
   }
+
+  test("a failed index build propagates its error and leaks no scratch dir") {
+    // vec_id 0 twice: the codebook sample (vec_id % 100 == 0) carries a
+    // duplicate codeword id, so pqCodebook raises while the index builds
+    val fixture = java.nio.file.Files.createTempDirectory("graft_pqleak_fixture")
+    val emb = graft.Tables.load(spark, Sf0001, "embeddings")
+    def pqRoots(): Int =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+        .getOrElse(Array.empty[String])
+        .count(_.startsWith("graft_pqidx_stream"))
+    try {
+      emb.filter(col("vec_id") < 300)
+        .unionByName(emb.filter(col("vec_id") === 0))
+        .coalesce(1).write.parquet(s"$fixture/embeddings.parquet")
+      val before = pqRoots()
+      val boom = intercept[Exception](StreamPipeline.streamingPqProbe(
+        spark, fixture.toString, k = 5, m = 4, dsub = 16))
+      val messages = Iterator.iterate[Throwable](boom)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+      assert(messages.exists(_.contains("duplicate codeword id")), boom)
+      assert(pqRoots() == before, "the failed build left its index root behind")
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(fixture).iterator().asScala.toSeq.reverse
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
 }

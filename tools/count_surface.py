@@ -3,7 +3,7 @@
 
     python3 tools/count_surface.py [REPO_ROOT]
 
-Six counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
+Seven counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
   - scala_lines:         non-blank lines of the Scala sources;
   - options:             distinct `spark.graft.*` conf keys the sources name;
   - mains:               `def main` entry points;
@@ -21,7 +21,12 @@ Six counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
                          outside the files that define them
                          (`GraftFunctions.scala`, `DerivedPredicatePushdown.scala`,
                          `GraftSqlBridge.scala`). Only `TopK.perKey` adds its
-                         strategy itself, so this reads 1.
+                         strategy itself, so this reads 1;
+  - stream_drivers:      `.foreachBatch` calls outside comments, i.e. code
+                         that runs a streaming query itself. Every file-sink
+                         stream runs through `StreamPipeline`'s one drain
+                         helper and the replicator has its own, so this
+                         reads 2.
 
 A simplification is read as the before/after difference of these counts.
 """
@@ -39,12 +44,13 @@ INSTALL = re.compile(
     r"\b(?:GraftFunctions\.register|GraftOptimizations\.install|addStrategy)\(")
 INSTALL_HOMES = {"GraftFunctions.scala", "DerivedPredicatePushdown.scala",
                  "GraftSqlBridge.scala"}
+FOREACH_BATCH = re.compile(r"\.foreachBatch\b")
 COMMENT = re.compile(r"^\s*(?://|\*|/\*)")
 
 
 def count(root):
     lines, mains, builders, options = 0, 0, 0, set()
-    by_name, installs = 0, 0
+    by_name, installs, drivers = 0, 0, 0
     for d, _, files in os.walk(os.path.join(root, "src", "main")):
         for f in files:
             if not f.endswith(".scala"):
@@ -59,11 +65,12 @@ def count(root):
                     if COMMENT.match(line):
                         continue
                     by_name += len(KERNEL_BY_NAME.findall(line))
+                    drivers += len(FOREACH_BATCH.findall(line))
                     if f not in INSTALL_HOMES:
                         installs += len(INSTALL.findall(line))
     return {"scala_lines": lines, "options": len(options), "mains": mains,
             "session_builders": builders, "kernel_name_lookups": by_name,
-            "session_installs": installs}
+            "session_installs": installs, "stream_drivers": drivers}
 
 
 if __name__ == "__main__":
