@@ -252,7 +252,7 @@ object Replicator {
       dialect: SqlDialect = MySqlDialect,
       rule: Option[org.apache.spark.sql.Column] = None): Option[Long] = {
     val contract = Seq("kind", "tbl", "ts", "id", "fields_json", "partial", "removed", "seq")
-    val stored = spark.read.parquet(quarantineDir).select(contract.map(col): _*)
+    val stored = Tables.parquet(spark, quarantineDir).select(contract.map(col): _*)
     applyBatch(stored, specs, url, props, dialect = dialect,
       quarantineDir = rule.map(_ => s"$quarantineDir.rejected"),
       quarantineRule = rule)

@@ -212,10 +212,10 @@ object ScaleSoak {
           val t0 = System.nanoTime()
           (0 to 2).foreach { b =>
             graft.streaming.StreamPipeline.spanGrowingBatch(
-              s.read.parquet(f"$in/arrivals-$b%03d.parquet"), b.toLong,
+              Tables.parquet(s, f"$in/arrivals-$b%03d.parquet"), b.toLong,
               root, out, 30)
           }
-          s.read.parquet((0 to 2).map(b => s"$out/batch-$b"): _*).count()
+          Tables.parquet(s, (0 to 2).map(b => s"$out/batch-$b"): _*).count()
           (System.nanoTime() - t0) / 1e9
         }),
       // BPE apply — the per-epoch tokenization pass: the merge chain is
@@ -307,10 +307,10 @@ object ScaleSoak {
           val t0 = System.nanoTime()
           (0 to 2).foreach { b =>
             graft.streaming.StreamPipeline.phraseGrowingBatch(
-              s.read.parquet(f"$in/arrivals-$b%03d.parquet"), b.toLong,
+              Tables.parquet(s, f"$in/arrivals-$b%03d.parquet"), b.toLong,
               root, out, phrases)
           }
-          val n = s.read.parquet(
+          val n = Tables.parquet(s,
             (0 to 2).map(b => s"$out/batch-$b"): _*).count()
           require(n > 0, "phrase growing soak produced no screen rows")
           (System.nanoTime() - t0) / 1e9
@@ -374,10 +374,10 @@ object ScaleSoak {
           val t0 = System.nanoTime()
           (0 to 2).foreach { b =>
             graft.streaming.StreamPipeline.ivfPqGrowingBatch(
-              s.read.parquet(f"$in/arrivals-$b%03d.parquet"), b.toLong,
+              Tables.parquet(s, f"$in/arrivals-$b%03d.parquet"), b.toLong,
               root, out, 8, 4, 4, 2)
           }
-          val n = s.read.parquet(
+          val n = Tables.parquet(s,
             (0 to 2).map(b => s"$out/batch-$b"): _*).count()
           require(n > 0, "ivfpq growing soak produced no rows")
           (System.nanoTime() - t0) / 1e9

@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver-provided parquet test tables (TESTDATA.md).
   *
@@ -22,6 +25,12 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * installed where the session is built (`GraftSession.start`, or
   * `spark.sql.extensions=graft.functions.GraftExtensions`), and [[load]]
   * changes nothing on the session but the `nanosAsLong` read flag.
+  *
+  * Every parquet read in `src/main` goes through [[parquet]], which
+  * memoizes the inferred schema of its inputs (see there): a read
+  * without a schema otherwise runs one Spark job
+  * (`SchemaMergeUtils.mergeSchemasInParallel`) per call, even when
+  * nothing under the path changed since the last read.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -37,8 +46,72 @@ object Tables {
     * nanos-generation events.parquet, idempotent. */
   private[graft] def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
+
+  /** Inferred parquet schemas, keyed by [[schemaKey]]. 256 entries of a
+    * `StructType` each; not settable. */
+  private val schemas = new BoundedMemo[String, StructType](256)
+
+  /** `spark.read.parquet(paths: _*)`, with the schema inference memoized
+    * process-wide.
+    *
+    * The key is a digest of the paths as given, every leaf file under
+    * them (path, length, modification time — hidden and metadata files
+    * included) and the session's set values of the confs that change
+    * what inference returns (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*` such as `nanosAsLong`,
+    * `spark.sql.sources.*`, `spark.sql.files.*`, `caseSensitive` and the
+    * session time zone). A hit reads with `spark.read.schema(cached)`,
+    * which plans the same scan without the inference job. Nothing is
+    * invalidated: a rewritten, added or removed file changes the key, so
+    * the next read misses and infers again. A miss, a path that cannot be
+    * listed (missing, a glob, an unreachable store) or a failed inference
+    * is a plain `spark.read.parquet`, so Spark raises its own errors
+    * (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`) and nothing is stored.
+    * The price of a read is one driver-side listing of the input's leaf
+    * files, which Spark's own file index repeats. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val key = schemaKey(spark, paths)
+    key.flatMap(schemas.get) match {
+      case Some(cached) => spark.read.schema(cached).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        key.foreach(schemas.put(_, df.schema))
+        df
+    }
+  }
+
+  private def inferenceConf(key: String): Boolean =
+    key.startsWith("spark.sql.parquet.") || key.startsWith("spark.sql.legacy.parquet.") ||
+      key.startsWith("spark.sql.sources.") || key.startsWith("spark.sql.files.") ||
+      key == "spark.sql.caseSensitive" || key == "spark.sql.session.timeZone"
+
+  /** The [[parquet]] memo key, or None when a path cannot be listed. */
+  private def schemaKey(spark: SparkSession, paths: Seq[String]): Option[String] =
+    try {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      def add(s: String): Unit = {
+        md.update(s.getBytes(StandardCharsets.UTF_8)); md.update(0.toByte)
+      }
+      val hadoopConf = spark.sparkContext.hadoopConfiguration
+      paths.foreach { p =>
+        add(p)
+        val path = new Path(p)
+        val it = path.getFileSystem(hadoopConf).listFiles(path, true)
+        val leaves = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          leaves += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        leaves.result().sortBy(_._1).foreach { case (f, len, mtime) =>
+          add(f); add(len.toString); add(mtime.toString)
+        }
+      }
+      spark.conf.getAll.filter(e => inferenceConf(e._1)).toSeq.sorted
+        .foreach { case (k, v) => add(k); add(v) }
+      Some(md.digest().map(b => f"$b%02x").mkString)
+    } catch { case _: java.io.IOException => None }
 
   /** `df` with its `ts` column (if any) as the canonical nanos-long:
     * microsecond TIMESTAMP/TIMESTAMP_NTZ converts, a LongType (nanos

@@ -245,13 +245,21 @@ object IndexManifest {
   private val ExplicitKeysMarker = "__explicit"
 
   /** Read one logical table at a resolved snapshot — the reader half of
-    * the isolation contract (only listed segments are scanned). */
+    * the isolation contract (only listed segments are scanned). The read
+    * goes through [[graft.Tables.parquet]], whose schema memo is keyed on
+    * the listed segments' leaf files: a committed snapshot's segments
+    * never change, so a repeated read of it runs no schema-inference job,
+    * and a new version's new segments always miss. Per-snapshot
+    * statistics derived from a table (the IVF centroid and PQ codebook
+    * kernel refs in `Similarity`) are memoized the same way, on (root,
+    * the table's segment list, parameters), with a constant size cap and
+    * no option. */
   def readAt(spark: SparkSession, root: String, snap: Snapshot, table: String): DataFrame = {
     val segs = snap.tables.getOrElse(table,
       throw new IllegalStateException(
         s"index at $root v${snap.version} has no table '$table' " +
           s"(tables: ${snap.tables.keys.toSeq.sorted.mkString(", ")})"))
-    spark.read.parquet(segs.map(s => s"$root/$s"): _*)
+    graft.Tables.parquet(spark, segs.map(s => s"$root/$s"): _*)
   }
 
   /** Read one logical table at the current version. */

@@ -816,7 +816,7 @@ object Dedup {
     val spark = shingled.sparkSession
     sigRowsFromWide(wideSigs(shingled, idCol, k), idCol, k)
       .write.mode("overwrite").parquet(s"$path/sigs")
-    bandsWithCounts(spark.read.parquet(s"$path/sigs"), k, bands)
+    bandsWithCounts(graft.Tables.parquet(spark, s"$path/sigs"), k, bands)
       .write.mode("overwrite").parquet(s"$path/bands")
   }
 
@@ -869,7 +869,7 @@ object Dedup {
     val newWide = wideSigs(deltaShingled, idCol, k).localCheckpoint()
     sigRowsFromWide(newWide, idCol, k)
       .write.mode("append").parquet(s"$path/sigs")
-    appendBandRows(newWide, idCol, k, bands, spark.read.parquet(s"$path/bands"))
+    appendBandRows(newWide, idCol, k, bands, graft.Tables.parquet(spark, s"$path/bands"))
       .write.mode("append").parquet(s"$path/bands")
   }
 
@@ -905,9 +905,9 @@ object Dedup {
   def compactLshIndex(spark: SparkSession, path: String, outPath: String): Unit = {
     require(path != outPath,
       "compact must write to a fresh path (the source index is being read)")
-    spark.read.parquet(s"$path/sigs")
+    graft.Tables.parquet(spark, s"$path/sigs")
       .write.mode("overwrite").parquet(s"$outPath/sigs")
-    recountBands(spark.read.parquet(s"$path/bands"))
+    recountBands(graft.Tables.parquet(spark, s"$path/bands"))
       .write.mode("overwrite").parquet(s"$outPath/bands")
   }
 
@@ -943,7 +943,7 @@ object Dedup {
     * shared by the digested build and the refresh. */
   private def writeBandsFromSigs(
       spark: SparkSession, path: String, k: Int, bands: Int): Unit =
-    bandsWithCounts(spark.read.parquet(s"$path/sigs"), k, bands)
+    bandsWithCounts(graft.Tables.parquet(spark, s"$path/sigs"), k, bands)
       .write.mode("overwrite").parquet(s"$path/bands")
 
   /** Refresh a digested LSH index against an updated corpus snapshot —
@@ -964,7 +964,7 @@ object Dedup {
     require(path != outPath,
       "refresh must write to a fresh path (the source index is being read)")
     val spark = docs.sparkSession
-    refreshedSigRows(spark.read.parquet(s"$path/sigs"),
+    refreshedSigRows(graft.Tables.parquet(spark, s"$path/sigs"),
         docs, textCol, idCol, shingleN, k)
       .write.mode("overwrite").parquet(s"$outPath/sigs")
     writeBandsFromSigs(spark, outPath, k, bands)
@@ -1021,7 +1021,7 @@ object Dedup {
     sigRowsFromWide(wideSigs(shingled, idCol, k), idCol, k)
       .write.mode("overwrite").parquet(s"$root/$sigSeg")
     val bandSeg = graft.index.IndexManifest.newSegment(LshBandsTable)
-    bandsWithCounts(spark.read.parquet(s"$root/$sigSeg"), k, bands)
+    bandsWithCounts(graft.Tables.parquet(spark, s"$root/$sigSeg"), k, bands)
       .write.mode("overwrite").parquet(s"$root/$bandSeg")
     graft.index.IndexManifest.commit(spark, root,
       Map(LshSigsTable -> Seq(sigSeg), LshBandsTable -> Seq(bandSeg)),
@@ -1037,7 +1037,7 @@ object Dedup {
     digestedSigRows(docs, textCol, idCol, shingleN, k)
       .write.mode("overwrite").parquet(s"$root/$sigSeg")
     val bandSeg = graft.index.IndexManifest.newSegment(LshBandsTable)
-    bandsWithCounts(spark.read.parquet(s"$root/$sigSeg"), k, bands)
+    bandsWithCounts(graft.Tables.parquet(spark, s"$root/$sigSeg"), k, bands)
       .write.mode("overwrite").parquet(s"$root/$bandSeg")
     graft.index.IndexManifest.commit(spark, root,
       Map(LshSigsTable -> Seq(sigSeg), LshBandsTable -> Seq(bandSeg)),
@@ -1103,7 +1103,7 @@ object Dedup {
     refreshedSigRows(old, docs, textCol, idCol, shingleN, k)
       .write.mode("overwrite").parquet(s"$root/$sigSeg")
     val bandSeg = graft.index.IndexManifest.newSegment(LshBandsTable)
-    bandsWithCounts(spark.read.parquet(s"$root/$sigSeg"), k, bands)
+    bandsWithCounts(graft.Tables.parquet(spark, s"$root/$sigSeg"), k, bands)
       .write.mode("overwrite").parquet(s"$root/$bandSeg")
     graft.index.IndexManifest.commit(spark, root,
       snap.tables
@@ -1672,7 +1672,7 @@ object Dedup {
   def compactGramIndex(spark: SparkSession, path: String, outPath: String): Unit = {
     require(path != outPath,
       "compact must write to a fresh path (the source log is being read)")
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .groupBy(col("h")).agg(min(col("owner")).as("owner"))
       .write.mode("overwrite").parquet(outPath)
   }

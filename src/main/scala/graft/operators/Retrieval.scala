@@ -731,7 +731,7 @@ object Retrieval {
     * corpus-wide postings lineage a second time. */
   private def writeStatsFromPostings(
       spark: SparkSession, postingsDir: String, statsDir: String): Unit =
-    spark.read.parquet(postingsDir)
+    graft.Tables.parquet(spark, postingsDir)
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .write.mode(SaveMode.Overwrite).parquet(statsDir)
 
@@ -792,7 +792,7 @@ object Retrieval {
     val src =
       if (!dedupAgainstIndex) delta
       else delta.join(
-        spark.read.parquet(s"$path/postings")
+        graft.Tables.parquet(spark, s"$path/postings")
           .select(col("doc_id").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
     // the delta's postings feed both the postings append and its df
@@ -857,9 +857,9 @@ object Retrieval {
       spark: SparkSession, path: String,
       queries: Seq[(Int, String)], k: Int): DataFrame =
     probeFrames(
-      spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/stats"),
-      spark.read.parquet(s"$path/corpus"),
+      graft.Tables.parquet(spark, s"$path/postings"),
+      graft.Tables.parquet(spark, s"$path/stats"),
+      graft.Tables.parquet(spark, s"$path/corpus"),
       queryTerms(spark, queries), distinctTerms(queries), k)
 
   // ---- BM25 index under the atomic manifest protocol ------------------
@@ -1066,7 +1066,7 @@ object Retrieval {
     val dSeg = IndexManifest.newSegment(DocsTable)
     cur.write.mode(SaveMode.Overwrite).parquet(s"$root/$dSeg")
     val cSeg = IndexManifest.newSegment(CorpusTable)
-    spark.read.parquet(s"$root/$dSeg")
+    graft.Tables.parquet(spark, s"$root/$dSeg")
       .agg(count(lit(1)).cast("long").as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("sum_dl"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$cSeg")

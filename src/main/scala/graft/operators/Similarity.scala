@@ -1214,10 +1214,9 @@ object Similarity {
     val snap = at
       .map(v => graft.index.IndexManifest.snapshotAt(spark, root, v))
       .getOrElse(graft.index.IndexManifest.snapshot(spark, root))
-    pqSearchEncoded(queries,
-      graft.index.IndexManifest.readAt(spark, root, snap, PqCodesTable),
-      graft.index.IndexManifest.readAt(spark, root, snap, PqCodebookTable),
-      idCol, vecCol, k, m, dsub)
+    val codes = graft.index.IndexManifest.readAt(spark, root, snap, PqCodesTable)
+    pqSearchWithRef(queries, codes, storedPqRef(spark, root, snap, m, dsub),
+      idCol, vecCol, k, if (codes.columns.contains(idCol)) idCol else "id")
   }
 
   // ---- JL projected index under the atomic manifest protocol ----------
@@ -1402,19 +1401,6 @@ object Similarity {
       case None => assignClustersComposed(corpus, centroids, idCol, vecCol)
     }
 
-  /** Probe-list-only half of [[clusteredAndProbes]]'s dispatch:
-    * (query_id, __qv, cluster, probe_rank). */
-  private def probesOnly(
-      queries: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, nProbe: Int): DataFrame =
-    integralIdType(centroids, idCol) match {
-      case Some(t) =>
-        val ref = graft.functions.CentroidsRef.fromDataFrame(centroids, idCol, vecCol)
-        probeClustersRef(queries, ref, idCol, vecCol, nProbe, t)
-      case None =>
-        probeClustersComposed(queries, centroids, idCol, vecCol, nProbe)
-    }
-
   /** Restrict a cluster-keyed index table to the PROBED clusters:
     * a pushed `cluster IN (...)` while the distinct probed-cluster list
     * fits `spark.graft.ivf.isinClusterCap` (default 256 — row-group
@@ -1517,6 +1503,31 @@ object Similarity {
       idCol: String, vecCol: String): DataFrame =
     graft.index.IndexManifest.readAt(spark, root, snap, IvfCentroidsTable)
       .select(col("id").as(idCol), col("vec").as(vecCol))
+
+  /** Kernel refs collected from committed index tables, keyed by (root,
+    * the table's segment list[, m, dsub]). Segments are immutable by the
+    * manifest protocol, so a commit that rewrites the table lists new
+    * segments and misses, and one that leaves it alone (an append of
+    * assignments or codes) reuses the ref of the very files it lists.
+    * Both refs are broadcast-small by contract (every probe already
+    * ships one in its task closures); 32 of each are kept, and nothing
+    * is settable. */
+  private val centroidRefs =
+    new graft.BoundedMemo[(String, Seq[String]), graft.functions.CentroidsRef](32)
+  private val codebookRefs =
+    new graft.BoundedMemo[(String, Seq[String], Int, Int), graft.functions.PqCodebookRef](32)
+
+  /** The stored centroids' kernel ref and id type, memoized per
+    * committed centroid segments; None for a non-integral id, which the
+    * composed twins serve from the frame. */
+  private def storedCentroidsRef(
+      root: String, snap: graft.index.IndexManifest.Snapshot,
+      cen: DataFrame, idCol: String, vecCol: String)
+      : Option[(graft.functions.CentroidsRef, org.apache.spark.sql.types.DataType)] =
+    integralIdType(cen, idCol).map { t =>
+      (centroidRefs.getOrCompute((root, snap.tables(IvfCentroidsTable)))(
+        graft.functions.CentroidsRef.fromDataFrame(cen, idCol, vecCol)), t)
+    }
 
   /** Append-only maintenance: assign ONLY corpus rows whose id is not
     * yet indexed — with the STORED centroids, so every segment's cell
@@ -1625,8 +1636,10 @@ object Similarity {
     // scan — recomputing it for the join is cheaper than the r20
     // localCheckpoint job, and ONE groupBy(cluster) collect serves both
     // the IN-pushdown list and the broadcast-cap count (was 3 jobs)
-    val probes = probesOnly(queries, cen, idCol, vecCol, nProbe)
-      .drop("probe_rank")
+    val probes = (storedCentroidsRef(root, snap, cen, idCol, vecCol) match {
+      case Some((ref, t)) => probeClustersRef(queries, ref, idCol, vecCol, nProbe, t)
+      case None => probeClustersComposed(queries, cen, idCol, vecCol, nProbe)
+    }).drop("probe_rank")
     val (probed, nProbeRows) = probeClusterStats(probes)
     val assigned = clusterRestrictWith(spark,
       graft.index.IndexManifest.readAt(spark, root, snap, IvfAssignedTable),
@@ -1694,13 +1707,16 @@ object Similarity {
       IvfPqCodesTable -> Seq(aSeg)), meta = Map("family" -> "ivfpq"))
   }
 
+  /** The stored codebook's kernel ref, memoized per committed codebook
+    * segments and (m, dsub) — see [[centroidRefs]]. */
   private def storedPqRef(
       spark: org.apache.spark.sql.SparkSession, root: String,
       snap: graft.index.IndexManifest.Snapshot,
-      m: Int, dsub: Int): graft.functions.PqCodebookRef =
-    graft.functions.PqCodebookRef.fromCodebook(
-      graft.index.IndexManifest.readAt(spark, root, snap, PqCodebookTable),
-      m, dsub)
+      m: Int, dsub: Int): graft.functions.PqCodebookRef = {
+    val cb = graft.index.IndexManifest.readAt(spark, root, snap, PqCodebookTable)
+    codebookRefs.getOrCompute((root, snap.tables(PqCodebookTable), m, dsub))(
+      graft.functions.PqCodebookRef.fromCodebook(cb, m, dsub))
+  }
 
   /** Append-only maintenance: assign + encode ONLY unindexed ids, with
     * the STORED centroids and codebook. */
@@ -1808,9 +1824,8 @@ object Similarity {
     // the SAME projection as the probe list — one pass over the query
     // scan, no probe⋈lut self-join and none of the two r20
     // localCheckpoint jobs; the composed-id fallback keeps the join.
-    val probesWithLut = integralIdType(cen, idCol) match {
-      case Some(t) =>
-        val cref = graft.functions.CentroidsRef.fromDataFrame(cen, idCol, vecCol)
+    val probesWithLut = storedCentroidsRef(root, snap, cen, idCol, vecCol) match {
+      case Some((cref, t)) =>
         queries.select(col(idCol).as("query_id"),
             kernelCol(graft.functions.PqBuildLut(attr(vecCol), ref)).as("__lut"),
             posexplode(kernelCol(

@@ -363,7 +363,7 @@ object CurationQueries {
       Quality.numericProfileSharded(li, "__shard",
           Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
         .write.mode("overwrite").parquet(path)
-      Quality.mergeProfiles(s.read.parquet(path)).orderBy("column")
+      Quality.mergeProfiles(Tables.parquet(s, path)).orderBy("column")
     },
 
     // Declarative expectations evaluated in the same single pass — the

@@ -168,7 +168,11 @@ private[graft] object Json {
     }
     private def str(): String = {
       expect('"')
-      val sb = new StringBuilder
+      // fast path: no escape before the closing quote — one substring
+      val start = i
+      while (s.charAt(i) != '"' && s.charAt(i) != '\\') i += 1
+      if (s.charAt(i) == '"') { i += 1; return s.substring(start, i - 1) }
+      val sb = new StringBuilder(s.substring(start, i))
       while (s.charAt(i) != '"') {
         if (s.charAt(i) == '\\') {
           i += 1
@@ -192,30 +196,75 @@ private[graft] object Json {
     }
   }
 
-  /** Deterministic (sorted-key) JSON rendering for flattened field maps. */
-  def render(v: Any): String = v match {
-    case null            => "null"
-    case m: Map[_, _]    =>
-      m.asInstanceOf[Map[String, Any]].toSeq.sortBy(_._1)
-        .map { case (k, vv) => s"${renderString(k)}:${render(vv)}" }
-        .mkString("{", ",", "}")
-    case xs: Seq[_]      => xs.map(render).mkString("[", ",", "]")
-    case s: String       => renderString(s)
-    case b: Boolean      => b.toString
-    case n: Long         => n.toString
-    case n: Int          => n.toString
-    case d: Double       => if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
-    case other           => renderString(other.toString)
+  /** Deterministic (sorted-key) JSON rendering for flattened field maps.
+    * Its bytes are persisted (`OplogOffset.json` in Spark's offset log),
+    * so the output is pinned by `JsonRenderSpec`: keys sorted, integral
+    * doubles as longs, the escapes of [[renderString]]. */
+  def render(v: Any): String = {
+    val sb = new java.lang.StringBuilder
+    renderTo(sb, v)
+    sb.toString
   }
 
-  def renderString(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def renderTo(sb: java.lang.StringBuilder, v: Any): Unit = v match {
+    case null            => sb.append("null")
+    case m: Map[_, _]    =>
+      sb.append('{')
+      var first = true
+      m.asInstanceOf[Map[String, Any]].toSeq.sortBy(_._1).foreach { case (k, vv) =>
+        if (!first) sb.append(',')
+        first = false
+        quoteTo(sb, k); sb.append(':'); renderTo(sb, vv)
+      }
+      sb.append('}')
+    case xs: Seq[_]      =>
+      sb.append('[')
+      var first = true
+      xs.foreach { x => if (!first) sb.append(','); first = false; renderTo(sb, x) }
+      sb.append(']')
+    case s: String       => quoteTo(sb, s)
+    case b: Boolean      => sb.append(b)
+    case n: Long         => sb.append(n)
+    case n: Int          => sb.append(n)
+    case d: Double       =>
+      if (d == d.floor && !d.isInfinite) sb.append(d.toLong) else sb.append(d.toString)
+    case other           => quoteTo(sb, other.toString)
+  }
+
+  def renderString(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 2)
+    quoteTo(sb, s)
+    sb.toString
+  }
+
+  /** `s` as a quoted JSON string: `"`, `\\`, newline, CR and tab as
+    * two-character escapes, other control chars as `\\u00xx`, everything
+    * else verbatim. A string with nothing to escape is one append. */
+  private def quoteTo(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) sb.append(s)
+    else {
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '"'  => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case c if c < ' ' =>
+            sb.append("\\u00").append(Hex(c >> 4)).append(Hex(c & 0xf))
+          case c => sb.append(c)
+        }
+        i += 1
+      }
+    }
+    sb.append('"')
+  }
+
+  private def needsEscape(c: Char): Boolean = c < ' ' || c == '"' || c == '\\'
+
+  private val Hex = "0123456789abcdef"
 }

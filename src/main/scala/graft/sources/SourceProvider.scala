@@ -49,7 +49,7 @@ final class ParquetHarnessProvider(
     extends SourceProvider {
 
   override def snapshot(spec: TableSpec): DataFrame =
-    spark.read.parquet(s"$snapshotDir/${spec.name}.parquet")
+    graft.Tables.parquet(spark, s"$snapshotDir/${spec.name}.parquet")
 
   override def changes(replicated: Set[String], afterTs: Long): DataFrame =
     ChangeFeed.readBatch(spark, segmentsDir, replicated, afterTs)

@@ -1734,7 +1734,7 @@ object StreamPipeline {
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
         .map(_.getPath.toString)
     if (dirs.isEmpty) emptyOf(spark, emptySchema)
-    else spark.read.parquet(dirs.toIndexedSeq: _*)
+    else graft.Tables.parquet(spark, dirs.toIndexedSeq: _*)
   }
 
   private def rmTree(dir: String): Unit = {
@@ -1944,7 +1944,7 @@ object StreamPipeline {
   /** Serve the ingest dedup from an already-persisted index table. */
   def streamingSemanticDedupWithIndex(
       spark: SparkSession, dir: String, indexPath: String): DataFrame =
-    semanticDedupAgainst(spark, dir, spark.read.parquet(indexPath))
+    semanticDedupAgainst(spark, dir, graft.Tables.parquet(spark, indexPath))
 
   /** Inline-corpus variant (the pre-index shape): embeds the documents
     * table inside the stream-static join, so every micro-batch re-scans

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * pinning, conf-change targeted resync that must NOT advance the offset,
   * steady-state runs that snapshot nothing, and `zerop` forcing a full
   * resync. */
-class DaemonLifecycleSpec extends SparkSpec {
+class DaemonLifecycleSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val Db = "lifecycle"
@@ -42,8 +42,8 @@ class DaemonLifecycleSpec extends SparkSpec {
 
   test("run(): from-scratch → conf-change resync → steady state → zerop (run.go:79-335)") {
     MemJdbc.reset(Db)
-    val segDir = Files.createTempDirectory("graft_daemon_seg").toString
-    val ckpt1 = Files.createTempDirectory("graft_daemon_ckpt1").toString
+    val segDir = tempDir("graft_daemon_seg")
+    val ckpt1 = tempDir("graft_daemon_ckpt1")
 
     // ---- phase 1: from scratch (no stored offset) -----------------------
     // two segment entries exist BEFORE the snapshot: their ts pins the
@@ -81,7 +81,7 @@ class DaemonLifecycleSpec extends SparkSpec {
     // replay feed entries missed while stopped)
     val observed1 = Map("users" -> Seq("_id" -> "varchar(24)", "name" -> "varchar(100)"))
     var snapshots2 = 0
-    val ckpt2 = Files.createTempDirectory("graft_daemon_ckpt2").toString
+    val ckpt2 = tempDir("graft_daemon_ckpt2")
     val repl2 = new Replicator(spark, config(extraCol = true), MemJdbc.UrlPrefix + Db, new Properties())
     val q2 = repl2.run(
       observed = observed1,
@@ -102,7 +102,7 @@ class DaemonLifecycleSpec extends SparkSpec {
     val observed2 = Map("users" -> Seq(
       "_id" -> "varchar(24)", "name" -> "varchar(100)", "visits" -> "bigint(20)"))
     var snapshots3 = 0
-    val ckpt3 = Files.createTempDirectory("graft_daemon_ckpt3").toString
+    val ckpt3 = tempDir("graft_daemon_ckpt3")
     val repl3 = new Replicator(spark, config(extraCol = true), MemJdbc.UrlPrefix + Db, new Properties())
     val q3 = repl3.run(
       observed = observed2,
@@ -117,7 +117,7 @@ class DaemonLifecycleSpec extends SparkSpec {
 
     // ---- phase 4: --zerop forces from-scratch even with an offset -------
     var snapshots4 = 0
-    val ckpt4 = Files.createTempDirectory("graft_daemon_ckpt4").toString
+    val ckpt4 = tempDir("graft_daemon_ckpt4")
     val repl4 = new Replicator(spark, config(extraCol = true), MemJdbc.UrlPrefix + Db, new Properties())
     val q4 = repl4.run(
       observed = observed2,
@@ -138,7 +138,7 @@ class DaemonLifecycleSpec extends SparkSpec {
   test("crash mid-snapshot keeps offset at 0, so restart redoes the snapshot") {
     val Db2 = "lifecycle_crash"
     MemJdbc.reset(Db2)
-    val segDir = Files.createTempDirectory("graft_crash_seg").toString
+    val segDir = tempDir("graft_crash_seg")
     Files.write(Paths.get(segDir, "seg0.json"),
       """{"op":"u","ns":"app.users","ts":50,"o":{"$set":{"name":"x"}},"o2":{"_id":"u1"}}"""
         .getBytes("UTF-8"))
@@ -165,7 +165,7 @@ class DaemonLifecycleSpec extends SparkSpec {
     intercept[RuntimeException] {
       repl.run(Map.empty, frames(failOrders = true),
         sinkIdsFrom(Db2), segDir,
-        Files.createTempDirectory("graft_crash_ck1").toString)
+        tempDir("graft_crash_ck1"))
     }
     // the pin must NOT have been committed before the failed snapshot:
     // a non-zero offset here would make the restart skip orders forever
@@ -177,7 +177,7 @@ class DaemonLifecycleSpec extends SparkSpec {
     val observed = Daemon.observedCatalog(MemJdbc.connect(Db2))
     val q = repl.run(observed, frames(failOrders = false),
       sinkIdsFrom(Db2), segDir,
-      Files.createTempDirectory("graft_crash_ck2").toString)
+      tempDir("graft_crash_ck2"))
     q.processAllAvailable(); q.stop()
     assert(MemJdbc.table(Db2, "users").keySet == Set("u1"))
     assert(MemJdbc.table(Db2, "orders").keySet == Set("o1"))
@@ -198,8 +198,8 @@ class DaemonLifecycleSpec extends SparkSpec {
     import graft.operators.{Dedup, Retrieval, Similarity}
     val Db3 = "lifecycle_soak"
     MemJdbc.reset(Db3)
-    val segDir = Files.createTempDirectory("graft_soak_seg").toString
-    val roots = (1 to 5).map(_ => Files.createTempDirectory("graft_soak_idx").toString)
+    val segDir = tempDir("graft_soak_seg")
+    val roots = (1 to 5).map(_ => tempDir("graft_soak_idx"))
     val errors = java.util.concurrent.ConcurrentHashMap.newKeySet[Throwable]()
 
     def docsDf(ids: Range) = ids.map(i =>
@@ -218,7 +218,7 @@ class DaemonLifecycleSpec extends SparkSpec {
       val repl = new Replicator(spark, config(), MemJdbc.UrlPrefix + Db3, new Properties())
       val q0 = repl.run(Map.empty, sourceUsers(withVisits = false),
         sinkIdsFrom(Db3), segDir,
-        Files.createTempDirectory("graft_soak_ck0").toString)
+        tempDir("graft_soak_ck0"))
       q0.processAllAvailable(); q0.stop()
       for (r <- 1 to 3) {
         Files.write(Paths.get(segDir, s"seg$r.json"),
@@ -227,7 +227,7 @@ class DaemonLifecycleSpec extends SparkSpec {
         val observed = Daemon.observedCatalog(MemJdbc.connect(Db3))
         val q = repl.run(observed, sourceUsers(withVisits = false),
           sinkIdsFrom(Db3), segDir,
-          Files.createTempDirectory(s"graft_soak_ck$r").toString)
+          tempDir(s"graft_soak_ck$r"))
         q.processAllAvailable(); q.stop()
       }
     } catch { case t: Throwable => errors.add(t): Unit })
@@ -314,7 +314,7 @@ class DaemonLifecycleSpec extends SparkSpec {
 
     // every index family's final state ≡ a from-scratch build on the
     // final corpus (fresh roots, isolated)
-    val fin = Files.createTempDirectory("graft_soak_fin").toString
+    val fin = tempDir("graft_soak_fin")
     Retrieval.buildIndexM(docsDf(0 until 35), "doc_id", "text", s"$fin/bm25")
     val probeSoak = Retrieval.bm25ProbeM(spark, roots(0), Seq((1, "alpha w3"), (2, "delta tail")), 3)
       .collect().map(_.toString).sorted.toSeq

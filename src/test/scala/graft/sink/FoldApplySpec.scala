@@ -1,10 +1,9 @@
 package graft.sink
 
-import java.nio.file.Files
 import java.sql.DriverManager
 import java.util.Properties
 
-import graft.{Replicator, SparkSpec}
+import graft.{Replicator, SparkSpec, TempDirs}
 import graft.config.{ColumnSpec, TableSpec}
 import graft.sources.Json
 import org.apache.spark.sql.functions.{col, get_json_object}
@@ -17,7 +16,7 @@ import scala.util.Random
   * return the same offset as applying the same ops one per `applyBatch`
   * call — a one-op batch folds to itself, so that run is the per-op
   * reference. Both runs start from the same seeded sink rows. */
-class FoldApplySpec extends SparkSpec {
+class FoldApplySpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val url = "jdbc:derby:memory:graftfold;create=true"
@@ -78,7 +77,7 @@ class FoldApplySpec extends SparkSpec {
   private val rule = get_json_object(col("fields_json"), "$.visits").cast("long") <= 1000L
 
   private def apply(ops: Seq[Op], skipBelowTs: Long, quarantine: Boolean): Option[Long] = {
-    val qDir = if (quarantine) Some(Files.createTempDirectory("graft_fold_q").toString) else None
+    val qDir = if (quarantine) Some(tempDir("graft_fold_q")) else None
     Replicator.applyBatch(ops.toDF("kind", "tbl", "ts", "id", "fields_json", "partial", "removed", "seq"),
       Seq(spec), url, props, skipBelowTs = skipBelowTs, dialect = DerbyDialect,
       quarantineDir = qDir, quarantineRule = if (quarantine) Some(rule) else None)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sources.ChangeFeed
 import org.apache.spark.sql.functions._
 
@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   * same checkpoint must not re-deliver already-processed segments (the C1
   * invariant the reference gets from its co-transactional offset,
   * mysql.go:563-588 — here from the checkpointLocation offset log). */
-class ExactlyOnceSpec extends SparkSpec {
+class ExactlyOnceSpec extends SparkSpec with TempDirs {
 
   test("restart from checkpoint processes only new segments, final fold correct") {
-    val srcDir = Files.createTempDirectory("graft_eo_src").toString
-    val ckpt = Files.createTempDirectory("graft_eo_ckpt").toString
+    val srcDir = tempDir("graft_eo_src")
+    val ckpt = tempDir("graft_eo_ckpt")
     def writeSegment(name: String, lines: Seq[String]): Unit =
       Files.write(Paths.get(srcDir, name), lines.mkString("\n").getBytes("UTF-8"))
 
@@ -68,8 +68,8 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("watermark drops late events in append-mode windowed aggregation") {
-    val srcDir = Files.createTempDirectory("graft_wm_src").toString
-    val ckpt = Files.createTempDirectory("graft_wm_ckpt").toString
+    val srcDir = tempDir("graft_wm_src")
+    val ckpt = tempDir("graft_wm_ckpt")
     def us(min: Int): Long = min.toLong * 60 * 1000000
     def line(id: Long, tsUs: Long) =
       s"""{"event_id":$id,"ts":${tsUs * 1000},"user_id":1,"event_type":"click","value":1.0,"props":"{}"}"""

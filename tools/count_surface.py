@@ -3,7 +3,7 @@
 
     python3 tools/count_surface.py [REPO_ROOT]
 
-Seven counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
+Eight counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
   - scala_lines:         non-blank lines of the Scala sources;
   - options:             distinct `spark.graft.*` conf keys the sources name;
   - mains:               `def main` entry points;
@@ -26,7 +26,12 @@ Seven counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
                          that runs a streaming query itself. Every file-sink
                          stream runs through `StreamPipeline`'s one drain
                          helper and the replicator has its own, so this
-                         reads 2.
+                         reads 2;
+  - inferring_reads:     `.read.parquet(` calls outside comments and outside
+                         `Tables.scala`, i.e. parquet reads that infer the
+                         schema with a Spark job on every call. Every read
+                         goes through `Tables.parquet`, which memoizes the
+                         inferred schema, so this reads 0.
 
 A simplification is read as the before/after difference of these counts.
 """
@@ -45,12 +50,14 @@ INSTALL = re.compile(
 INSTALL_HOMES = {"GraftFunctions.scala", "DerivedPredicatePushdown.scala",
                  "GraftSqlBridge.scala"}
 FOREACH_BATCH = re.compile(r"\.foreachBatch\b")
+INFERRING_READ = re.compile(r"\.read\.parquet\(")
+READ_HOME = "Tables.scala"
 COMMENT = re.compile(r"^\s*(?://|\*|/\*)")
 
 
 def count(root):
     lines, mains, builders, options = 0, 0, 0, set()
-    by_name, installs, drivers = 0, 0, 0
+    by_name, installs, drivers, reads = 0, 0, 0, 0
     for d, _, files in os.walk(os.path.join(root, "src", "main")):
         for f in files:
             if not f.endswith(".scala"):
@@ -66,11 +73,14 @@ def count(root):
                         continue
                     by_name += len(KERNEL_BY_NAME.findall(line))
                     drivers += len(FOREACH_BATCH.findall(line))
+                    if f != READ_HOME:
+                        reads += len(INFERRING_READ.findall(line))
                     if f not in INSTALL_HOMES:
                         installs += len(INSTALL.findall(line))
     return {"scala_lines": lines, "options": len(options), "mains": mains,
             "session_builders": builders, "kernel_name_lookups": by_name,
-            "session_installs": installs, "stream_drivers": drivers}
+            "session_installs": installs, "stream_drivers": drivers,
+            "inferring_reads": reads}
 
 
 if __name__ == "__main__":
