@@ -668,12 +668,6 @@ object Dedup {
       expect = Some(snap.version))
   }
 
-  /** The committed banded rows (HEAD snapshot). */
-  def readPhashIndexM(
-      spark: SparkSession, root: String): DataFrame =
-    graft.index.IndexManifest.readAt(spark, root,
-      graft.index.IndexManifest.snapshot(spark, root), PhashTable)
-
   /** The `max_hamming` an index's rows were banded with — part of the
     * index's IDENTITY (band widths derive from it), stamped by
     * [[buildPhashIndexM]] and inherited through every later commit.
@@ -794,32 +788,6 @@ object Dedup {
       .select(col("id_new"), col("id_base"), col("est_jaccard"))
   }
 
-  /** Persist the standing corpus's MinHash/LSH INDEX to parquet — the
-    * artifact that makes cross-corpus near-dup dedup incremental at
-    * 100 TB. Two tables under `path`:
-    *
-    *  - `sigs/`  (id, sig: array[long])  — one wide MinHash signature row
-    *    per lake document (k longs), computed in the single fused
-    *    groupBy(id) pass ([[minhashBands]]' upstream) and written FIRST so
-    *    the band table derives from the persisted copy (no re-shingling,
-    *    no checkpoint);
-    *  - `bands/` (id, band, band_hash, bucket_n) — the banded LSH rows
-    *    with each row carrying its (band, band_hash) bucket's lake-side
-    *    cardinality. Materializing `bucket_n` at build time is what frees
-    *    every probe from the hot-bucket count aggregate — the skew cap
-    *    becomes a plain pushable column predicate on the scan.
-    *
-    * Build cost: the lake's one signature shuffle plus one band-keyed
-    * count join — paid once, not per delta. */
-  def writeLshIndex(shingled: DataFrame, idCol: String,
-      k: Int, bands: Int, path: String): Unit = {
-    val spark = shingled.sparkSession
-    sigRowsFromWide(wideSigs(shingled, idCol, k), idCol, k)
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    bandsWithCounts(graft.Tables.parquet(spark, s"$path/sigs"), k, bands)
-      .write.mode("overwrite").parquet(s"$path/bands")
-  }
-
   /** Collapse a wide `__m0..__m{k-1}` signature frame to persisted
     * (id, sig: array&lt;long&gt;) rows. */
   private def sigRowsFromWide(wide: DataFrame, idCol: String, k: Int): DataFrame =
@@ -827,8 +795,8 @@ object Dedup {
       array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
 
   /** Banded rows with exact per-bucket cardinalities from persisted
-    * signature rows (id, [tdig,] sig) — the `bands/` table both the plain
-    * and digested builds (and every compaction/refresh) write. */
+    * signature rows (id, [tdig,] sig) — the `bands` table both the plain
+    * and digested builds (and every refresh) write. */
   private def bandsWithCounts(sigRows: DataFrame, k: Int, bands: Int): DataFrame = {
     val wide = sigRows.select(col("id") +:
       (0 until k).map(i => col("sig")(i).as(s"__m$i")): _*)
@@ -844,34 +812,6 @@ object Dedup {
           .agg(count(lit(1)).as("bucket_n")),
         Seq("band", "band_hash"))
       .select(col("id"), col("band"), col("band_hash"), col("bucket_n"))
-
-  /** Fold an ingested delta into the standing LSH index — the append
-    * half of the persisted near-dup loop ([[indexedCrossCorpusPairs]]
-    * probes, this persists, the next delta probes the grown index). Both
-    * tables are append-only logs: the delta's signature rows land as new
-    * parquet files under `sigs/`, and its band rows under `bands/`, each
-    * carrying its bucket's AS-OF-APPEND total cardinality — the prior
-    * exact count (the max over the bucket's existing rows, see the
-    * invariant below) plus the delta's contribution. Older rows of a
-    * grown bucket keep their stale smaller `bucket_n`; the invariant that
-    * makes probes exact anyway is that **stored counts only ever
-    * undercount, and `max(bucket_n)` over a bucket's rows IS its exact
-    * current cardinality** (induction: the build writes exact counts;
-    * every append to a bucket writes the new exact total, which exceeds
-    * all earlier rows'). [[indexedCrossCorpusPairs]] with
-    * `staleCounts=true` exploits both directions. Index traffic: the
-    * existing-count lookup semi-joins the band scan by the BROADCAST
-    * delta bucket set and aggregates only the surviving delta-sized
-    * rows — the lake-sized log streams, exactly the probe's contract. */
-  def appendLshIndex(deltaShingled: DataFrame, idCol: String,
-      k: Int, bands: Int, path: String): Unit = {
-    val spark = deltaShingled.sparkSession
-    val newWide = wideSigs(deltaShingled, idCol, k).localCheckpoint()
-    sigRowsFromWide(newWide, idCol, k)
-      .write.mode("append").parquet(s"$path/sigs")
-    appendBandRows(newWide, idCol, k, bands, graft.Tables.parquet(spark, s"$path/bands"))
-      .write.mode("append").parquet(s"$path/bands")
-  }
 
   /** The band rows one append adds: the delta's bands annotated with
     * as-of-append bucket totals (prior exact count = max over the
@@ -894,42 +834,9 @@ object Dedup {
         (coalesce(col("__en"), lit(0L)) + col("__dn")).as("bucket_n"))
   }
 
-  /** Compact the appended LSH index back to the [[writeLshIndex]] shape:
-    * every band row re-annotated with its bucket's exact cardinality, so
-    * the stored `bucket_n` is uniformly fresh again and probes can run
-    * without the stale-counts hot-set pass. One count aggregate plus one
-    * keyed join over the band log's slim rows — never re-shingles, never
-    * recomputes a signature; converges to [[writeLshIndex]] over the
-    * accumulated corpus (spec-pinned), so compaction cadence is a pure
-    * read-amplification dial, not a correctness decision. */
-  def compactLshIndex(spark: SparkSession, path: String, outPath: String): Unit = {
-    require(path != outPath,
-      "compact must write to a fresh path (the source index is being read)")
-    graft.Tables.parquet(spark, s"$path/sigs")
-      .write.mode("overwrite").parquet(s"$outPath/sigs")
-    recountBands(graft.Tables.parquet(spark, s"$path/bands"))
-      .write.mode("overwrite").parquet(s"$outPath/bands")
-  }
-
-  /** [[writeLshIndex]] plus a content digest next to each signature —
-    * the sigs layout that supports [[refreshLshIndex]] under corpus
-    * UPDATES (append alone only handles arrivals): `sigs/` rows are
-    * (id, tdig, sig) with `tdig = md5(text)`, `bands/` is unchanged, so
-    * every existing probe ([[indexedCrossCorpusPairs]]) reads it as-is.
-    * Build cost adds one id-keyed join of two doc-sized frames. */
-  def writeLshIndexDigested(docs: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, k: Int, bands: Int, path: String): Unit = {
-    val spark = docs.sparkSession
-    digestedSigRows(docs, textCol, idCol, shingleN, k)
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    writeBandsFromSigs(spark, path, k, bands)
-  }
-
-  /** The digested (id, tdig, sig) rows — ONE definition shared by the
-    * bare and manifest digested builds, because [[refreshLshIndexM]]'s
-    * unchanged-doc detection compares stored digests against freshly
-    * computed ones: a divergent digest definition between build paths
-    * would silently re-sign every doc (or miss changes). */
+  /** The digested (id, tdig, sig) rows. `tdig` must match the digest
+    * [[refreshedSigRows]] computes, or a refresh would silently re-sign
+    * every doc (or miss changes). */
   private def digestedSigRows(docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, k: Int): DataFrame =
     sigRowsFromWide(
@@ -938,37 +845,6 @@ object Dedup {
       .join(docs.select(col(idCol).as("id"),
         md5(coalesce(col(textCol), lit(""))).as("tdig")), Seq("id"))
       .select(col("id"), col("tdig"), col("sig"))
-
-  /** Rebuild `bands/` (with uniformly exact counts) from `$path/sigs` —
-    * shared by the digested build and the refresh. */
-  private def writeBandsFromSigs(
-      spark: SparkSession, path: String, k: Int, bands: Int): Unit =
-    bandsWithCounts(graft.Tables.parquet(spark, s"$path/sigs"), k, bands)
-      .write.mode("overwrite").parquet(s"$path/bands")
-
-  /** Refresh a digested LSH index against an updated corpus snapshot —
-    * the index-maintenance job when the lake is upserted in place rather
-    * than append-only: unchanged docs (matching (id, md5(text))) keep
-    * their STORED signatures — no re-shingling, no MinHash, the
-    * expensive text-side work is paid by changed/added docs only —
-    * removed ids drop out, and `bands/` is rebuilt from the refreshed
-    * signatures with uniformly exact counts (the [[compactLshIndex]]
-    * shape, over slim sig rows). Rebuilding counts rather than patching
-    * them is what keeps the probe's pushed `bucket_n` filters sound:
-    * removals would make patched stored counts OVERcount, breaking the
-    * only-undercount invariant the stale-counts probe relies on.
-    * Converges to [[writeLshIndexDigested]] of the new corpus
-    * (spec-pinned). */
-  def refreshLshIndex(docs: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, k: Int, bands: Int, path: String, outPath: String): Unit = {
-    require(path != outPath,
-      "refresh must write to a fresh path (the source index is being read)")
-    val spark = docs.sparkSession
-    refreshedSigRows(graft.Tables.parquet(spark, s"$path/sigs"),
-        docs, textCol, idCol, shingleN, k)
-      .write.mode("overwrite").parquet(s"$outPath/sigs")
-    writeBandsFromSigs(spark, outPath, k, bands)
-  }
 
   /** The refreshed (id, tdig, sig) rows: unchanged docs keep stored
     * signatures, changed/added docs re-sign, removed ids drop out. */
@@ -988,9 +864,9 @@ object Dedup {
     kept.unionByName(freshSigs)
   }
 
-  // ---- LSH index under the atomic manifest protocol -------------------
+  // ---- persisted LSH index (atomic manifest protocol) -----------------
   //
-  // Same contract as the gram-log `*M` lifecycle: every write stages
+  // Same contract as the gram-log lifecycle: every write stages
   // immutable segments for the two logical tables (`sigs`, `bands`) and
   // publishes both in ONE manifest commit, so a probe racing any of
   // build/append/compact/refresh resolves a consistent (sigs, bands)
@@ -1013,7 +889,23 @@ object Dedup {
     (graft.index.IndexManifest.readAt(spark, root, snap, LshBandsTable),
       graft.index.IndexManifest.readAt(spark, root, snap, LshSigsTable))
 
-  /** [[writeLshIndex]] under the manifest protocol. */
+  /** Persist the standing corpus's MinHash/LSH INDEX at `root` — the
+    * artifact that makes cross-corpus near-dup dedup incremental at
+    * 100 TB. Two logical tables, one segment each, one commit:
+    *
+    *  - `sigs`  (id, sig: array[long]) — one wide MinHash signature row
+    *    per lake document (k longs), computed in the single fused
+    *    groupBy(id) pass ([[minhashBands]]' upstream) and written FIRST so
+    *    the band table derives from the persisted copy (no re-shingling,
+    *    no checkpoint);
+    *  - `bands` (id, band, band_hash, bucket_n) — the banded LSH rows
+    *    with each row carrying its (band, band_hash) bucket's lake-side
+    *    cardinality. Materializing `bucket_n` at build time is what frees
+    *    every probe from the hot-bucket count aggregate — the skew cap
+    *    becomes a plain pushable column predicate on the scan.
+    *
+    * Build cost: the lake's one signature shuffle plus one band-keyed
+    * count join — paid once, not per delta. */
   def buildLshIndexM(shingled: DataFrame, idCol: String,
       k: Int, bands: Int, root: String): Long = {
     val spark = shingled.sparkSession
@@ -1028,8 +920,12 @@ object Dedup {
       meta = Map("family" -> "lsh"))
   }
 
-  /** [[writeLshIndexDigested]] under the manifest protocol (the sigs
-    * layout [[refreshLshIndexM]] maintains). */
+  /** [[buildLshIndexM]] plus a content digest next to each signature —
+    * the sigs layout that supports [[refreshLshIndexM]] under corpus
+    * UPDATES (append alone only handles arrivals): `sigs` rows are
+    * (id, tdig, sig) with `tdig = md5(text)`, `bands` is unchanged, so
+    * every probe ([[indexedCrossCorpusPairs]]) reads it as-is. Build
+    * cost adds one id-keyed join of two doc-sized frames. */
   def buildLshIndexDigestedM(docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, k: Int, bands: Int, root: String): Long = {
     val spark = docs.sparkSession
@@ -1044,11 +940,22 @@ object Dedup {
       meta = Map("family" -> "lsh"))
   }
 
-  /** [[appendLshIndex]] under the manifest protocol: the delta's sig and
-    * as-of-append band rows land as new segments of the two tables,
-    * published together atomically (expect-guarded against concurrent
-    * writers). Probes over the grown index keep the `staleCounts=true`
-    * contract. */
+  /** Fold an ingested delta into the standing LSH index — the append
+    * half of the persisted near-dup loop ([[indexedCrossCorpusPairs]]
+    * probes, this persists, the next delta probes the grown index): the
+    * delta's sig and band rows land as one new segment of each table,
+    * published together (expect-guarded against concurrent writers).
+    *
+    * Each new band row carries its bucket's AS-OF-APPEND total — the
+    * prior exact count (max over the bucket's existing rows) plus the
+    * delta's contribution — while older rows of a grown bucket keep their
+    * smaller `bucket_n`. The invariant: **stored counts only ever
+    * undercount, and `max(bucket_n)` over a bucket's rows IS its exact
+    * current cardinality** (induction: the build writes exact counts;
+    * every append writes the new exact total). Probes over the grown
+    * index pass `staleCounts=true`, which exploits both directions. The
+    * existing-count lookup semi-joins the band scan by the BROADCAST
+    * delta bucket set, so the lake-sized table streams, never shuffles. */
   def appendLshIndexM(deltaShingled: DataFrame, idCol: String,
       k: Int, bands: Int, root: String,
       extraMeta: Map[String, String] = Map.empty): Long = {
@@ -1072,9 +979,14 @@ object Dedup {
         extraMeta, Seq(sigSeg, bandSeg)))
   }
 
-  /** [[compactLshIndex]] as an atomic pointer swap: sigs re-laid as one
-    * segment, bands re-annotated with uniformly exact counts, both
-    * swapped in with one commit. */
+  /** Compact an appended LSH index as an atomic pointer swap: sigs
+    * re-laid as one segment, every band row re-annotated with its
+    * bucket's exact cardinality (one count aggregate + keyed join over
+    * slim band rows, no re-shingling), both swapped in with one commit —
+    * so probes can drop the stale-counts hot-set pass. Converges to
+    * [[buildLshIndexM]] over the accumulated corpus (spec-pinned):
+    * compaction cadence is a read-amplification dial, not a correctness
+    * decision. */
   def compactLshIndexM(spark: SparkSession, root: String): Long = {
     val snap = graft.index.IndexManifest.snapshot(spark, root)
     val sigSeg = graft.index.IndexManifest.newSegment(LshSigsTable)
@@ -1090,10 +1002,20 @@ object Dedup {
       expect = Some(snap.version))
   }
 
-  /** [[refreshLshIndex]] as an atomic pointer swap over a digested index
-    * ([[buildLshIndexDigestedM]]): unchanged docs keep stored signatures,
-    * changed/added docs re-sign, removed ids drop, bands rebuild with
-    * exact counts — and the (sigs, bands) pair moves in one commit. */
+  /** Refresh a digested LSH index ([[buildLshIndexDigestedM]]) against an
+    * updated corpus snapshot — the index-maintenance job when the lake
+    * is upserted in place rather than append-only: unchanged docs
+    * (matching (id, md5(text))) keep their STORED signatures — no
+    * re-shingling, no MinHash, the expensive text-side work is paid by
+    * changed/added docs only — removed ids drop out, and `bands` is
+    * rebuilt from the refreshed signatures with uniformly exact counts
+    * (the [[compactLshIndexM]] shape, over slim sig rows); the (sigs,
+    * bands) pair moves in one commit. Rebuilding counts rather than
+    * patching them is what keeps the probe's pushed `bucket_n` filters
+    * sound: removals would make patched stored counts OVERcount, breaking
+    * the only-undercount invariant the stale-counts probe relies on.
+    * Converges to [[buildLshIndexDigestedM]] of the new corpus
+    * (spec-pinned). */
   def refreshLshIndexM(docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, k: Int, bands: Int, root: String): Long = {
     val spark = docs.sparkSession
@@ -1112,7 +1034,7 @@ object Dedup {
       expect = Some(snap.version))
   }
 
-  /** [[crossCorpusLshPairs]] served from a persisted [[writeLshIndex]] —
+  /** [[crossCorpusLshPairs]] served from a persisted [[buildLshIndexM]] —
     * the delta-vs-lake near-dup probe with the lake reduced to its index:
     * no lake re-shingling, no lake signature shuffle, no per-probe
     * hot-bucket aggregate. Pair-for-pair identical to the inline operator
@@ -1130,7 +1052,7 @@ object Dedup {
     *  - the only hash exchange is the delta-sized candidate `distinct`.
     *
     * `staleCounts=true` keeps the probe EXACT over an APPENDED index
-    * ([[appendLshIndex]]), where older rows of a grown bucket undercount
+    * ([[appendLshIndexM]]), where older rows of a grown bucket undercount
     * `bucket_n`. Both pushed filters stay sound because stored counts
     * only ever undercount: `bucket_n <= maxBucket` can only over-admit
     * (never drops a cold bucket), and any row with `bucket_n > maxBucket`
@@ -1531,22 +1453,8 @@ object Dedup {
     islandsToSpans(pts, idCol, gramChars)
   }
 
-  /** Write the standing corpus's gram-digest INDEX to parquet: one row per
-    * DISTINCT gram digest, carrying the owning (minimum) doc id. This is
-    * the artifact that makes repeated-span dedup INCREMENTAL at 100 TB:
-    * the lake's grams are digested ONCE, reduced to their distinct-digest
-    * summary (a keyed shuffle with map-side partial min — far smaller than
-    * the occurrence table: ~16 bytes per distinct gram), and persisted;
-    * every subsequent delta probes the index instead of re-scanning the
-    * lake. Same producer chain as [[repeatedSpans]] (whole-document
-    * [[graft.functions.GramDigests]] kernel, digest-keyed aggregate), so
-    * index + delta compose to exactly the whole-corpus answer. */
-  def writeGramIndex(df: DataFrame, idCol: String, textCol: String,
-      gramChars: Int, path: String): Unit =
-    gramIndexFrame(df, idCol, textCol, gramChars)
-      .write.mode("overwrite").parquet(path)
-
-  /** The (h, owner) index frame both persisted layouts write. */
+  /** The (h, owner) index frame both persisted layouts (the manifest
+    * segments and the bucketed catalog table) write. */
   private def gramIndexFrame(df: DataFrame, idCol: String, textCol: String,
       gramChars: Int): DataFrame = {
     require(gramChars > 0, s"gramChars=$gramChars must be positive")
@@ -1561,7 +1469,7 @@ object Dedup {
       .select(col("__h").as("h"), col("owner"))
   }
 
-  /** [[writeGramIndex]] as a BUCKETED catalog table — the big-delta
+  /** The [[buildGramIndexM]] rows as a BUCKETED catalog table — the big-delta
     * regime. The broadcast probe of [[incrementalSpans]] assumes the
     * delta's distinct digest set fits an executor broadcast (~8 B per
     * digest — fine for daily batches, not for a backfill that re-ingests
@@ -1612,33 +1520,8 @@ object Dedup {
     islandsToSpans(pts, idCol, gramChars)
   }
 
-  /** Fold a processed delta's gram digests into the standing index —
-    * the append half of the incremental loop ([[incrementalSpans]] probes,
-    * this persists, the next delta probes the grown index). The standing
-    * index is NEVER shuffled or rewritten: the delta's distinct digests
-    * (one delta-keyed aggregate) are anti-joined against the BROADCAST
-    * set of their own index hits (computed by the same shuffle-free
-    * streaming semi-probe the span discovery uses), and only the NOVEL
-    * digests append as new parquet files. The index directory is an
-    * append-only digest log — per batch it grows by that batch's new
-    * grams, and a 100 TB lake's index is only ever scanned, never moved.
-    *
-    * Owner semantics under append-only: a novel digest records the
-    * delta's minimum id; a digest already present keeps its existing
-    * rows untouched, and when the delta's minimum id undercuts the
-    * stored owner an owner-LOWERING row is appended instead of a
-    * rewrite. Readers reduce `min(owner)` per digest (keep-first does so
-    * over its delta-sized hit set), so ownership stays exact whether or
-    * not ingest ids are monotone, and the log is still only ever
-    * appended — never shuffled or rewritten. */
-  def appendGramIndex(index: DataFrame, delta: DataFrame,
-      idCol: String, textCol: String, gramChars: Int, path: String): Unit =
-    gramIndexDeltaRows(index, delta, idCol, textCol, gramChars)
-      .write.mode("append").parquet(path)
-
   /** The rows one append adds to the digest log: novel digests plus
-    * owner-lowering rows (shared by the bare-path append and the
-    * manifest lifecycle). */
+    * owner-lowering rows (see [[appendGramIndexM]]). */
   private def gramIndexDeltaRows(index: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, gramChars: Int): DataFrame = {
     val deltaAgg = gramIndexFrame(delta, idCol, textCol, gramChars)
@@ -1655,42 +1538,23 @@ object Dedup {
     novel.unionByName(lowered)
   }
 
-  /** Compact the append-only gram-digest log back to one row per digest
-    * (minimum owner) — the maintenance half of [[appendGramIndex]]'s
-    * contract. Every append grows the log by its novel digests plus any
-    * owner-lowering rows; probes stay exact at any log shape (readers
-    * reduce min per digest), but a log that has absorbed thousands of
-    * batches carries duplicate-digest rows and ever more parquet files —
-    * read amplification, not wrong answers. Compaction rewrites the log
-    * as `min(owner) GROUP BY h`: ONE keyed shuffle over the ~16-byte
-    * digest rows (map-side partial min; never touches corpus text), so
-    * compacting a 100 TB lake's index costs a scan of the index, not of
-    * the lake. The output is byte-equal to [[writeGramIndex]] run over
-    * the whole accumulated corpus — append+compact and from-scratch
-    * converge (spec-pinned), so compaction can run on any cadence
-    * without changing a single probe result. */
-  def compactGramIndex(spark: SparkSession, path: String, outPath: String): Unit = {
-    require(path != outPath,
-      "compact must write to a fresh path (the source log is being read)")
-    graft.Tables.parquet(spark, path)
-      .groupBy(col("h")).agg(min(col("owner")).as("owner"))
-      .write.mode("overwrite").parquet(outPath)
-  }
-
-  // ---- gram-digest log under the atomic manifest protocol -------------
+  // ---- persisted gram-digest log (atomic manifest protocol) ----------
   //
-  // The bare-path lifecycle above mutates one parquet directory in place:
-  // fine at one-writer cadence, but a probe racing an append can list a
-  // partial file set, and compaction leaves the old/new swap to the
-  // caller. The [[graft.index.IndexManifest]] variants stage every write
-  // as an immutable segment and publish it with one atomic manifest
-  // commit — probe-during-append sees the old log or the new log, never
-  // a mix, and compaction IS the pointer swap.
+  // Every write stages an immutable segment and publishes it with one
+  // atomic [[graft.index.IndexManifest]] commit: a probe racing an append
+  // sees the old log or the new log, never a partial file set, and
+  // compaction IS the pointer swap.
 
   private val GramTable = "grams"
 
-  /** [[writeGramIndex]] under the manifest protocol. Returns the
-    * committed version. */
+  /** Persist the standing corpus's gram-digest INDEX at `root`: one row
+    * per DISTINCT gram digest with its owning (minimum) doc id, ~16 bytes
+    * a gram, committed as one segment — what makes repeated-span dedup
+    * INCREMENTAL at 100 TB: every delta probes the index instead of
+    * re-scanning the lake. Same producer chain as [[repeatedSpans]]
+    * (whole-document [[graft.functions.GramDigests]] kernel,
+    * digest-keyed aggregate), so index + delta compose to exactly the
+    * whole-corpus answer. Returns the committed version. */
   def buildGramIndexM(df: DataFrame, idCol: String, textCol: String,
       gramChars: Int, root: String): Long = {
     val seg = graft.index.IndexManifest.newSegment(GramTable)
@@ -1713,11 +1577,21 @@ object Dedup {
       snap: graft.index.IndexManifest.Snapshot): DataFrame =
     graft.index.IndexManifest.readAt(spark, root, snap, GramTable)
 
-  /** [[appendGramIndex]] under the manifest protocol: the delta's novel +
-    * owner-lowering rows land as a NEW segment, published atomically. The
-    * commit carries the snapshot version the delta was computed against,
-    * so a concurrent writer surfaces as ConcurrentModificationException
-    * instead of a silently stale append. `extraMeta` rides on the commit
+  /** Fold a processed delta's gram digests into the standing index —
+    * the append half of the incremental loop ([[incrementalSpans]] probes,
+    * this persists, the next delta probes the grown index). The delta's
+    * distinct digests are anti-joined against the BROADCAST set of their
+    * own index hits (the shuffle-free semi-probe the span discovery
+    * uses) and land as a NEW segment: the stored log is only ever
+    * scanned, never shuffled or rewritten.
+    *
+    * Owner semantics: a novel digest records the delta's minimum id; when
+    * the delta's minimum undercuts a present digest's stored owner, an
+    * owner-LOWERING row is appended instead of a rewrite. Readers reduce
+    * `min(owner)` per digest, so ownership stays exact whether or not
+    * ingest ids are monotone. The commit is expect-guarded on the
+    * snapshot the delta was computed against, so a concurrent writer
+    * surfaces as ConcurrentModificationException, not a stale append. `extraMeta` rides on the commit
     * (merged over the inherited metadata) — the exactly-once streaming
     * append stamps its micro-batch id here so a replayed batch can prove
     * its append already landed and skip instead of double-committing. */
@@ -1736,9 +1610,14 @@ object Dedup {
       meta = graft.index.IndexManifest.stampAppendSegs(extraMeta, Seq(seg)))
   }
 
-  /** [[compactGramIndex]] as an atomic pointer swap: the folded
-    * min-owner log is staged as one fresh segment and the manifest moves
-    * to it in a single commit — old segments stay on disk for pinned
+  /** Compact the gram-digest log back to one min-owner row per digest,
+    * as an atomic pointer swap. Probes are exact at any log shape, but
+    * owner-lowering rows and per-append segments pile up as read
+    * amplification; compaction stages `min(owner) GROUP BY h` (one keyed
+    * shuffle over the digest rows, never corpus text) as one segment.
+    * The result equals [[buildGramIndexM]] over the whole accumulated
+    * corpus (spec-pinned), so compaction can run on any cadence without
+    * changing a probe result. Old segments stay on disk for pinned
     * readers until [[graft.index.IndexManifest.vacuum]]. */
   def compactGramIndexM(spark: SparkSession, root: String): Long = {
     val snap = graft.index.IndexManifest.snapshot(spark, root)
@@ -1753,7 +1632,7 @@ object Dedup {
 
   /** Incremental [[repeatedSpans]]: spans for a DELTA batch against a
     * standing corpus represented only by its persisted gram-digest index
-    * ([[writeGramIndex]]). With lake and delta doc ids disjoint, a delta
+    * ([[buildGramIndexM]], read with [[readGramIndexM]]). With lake and delta doc ids disjoint, a delta
     * gram is repeated (≥ 2 distinct docs across lake ∪ delta) iff its
     * digest exists in the index at all, OR it occurs in ≥ 2 distinct
     * delta docs — so the result equals [[repeatedSpans]] over the whole

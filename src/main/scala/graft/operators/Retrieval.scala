@@ -500,12 +500,12 @@ object Retrieval {
     // posts feeds FOUR subtrees (stage-1 candidates, the feedback
     // term-vector join, stage-2 candidates, stage-2 df) and Catalyst's
     // pushed filters make them canonically distinct, so without the
-    // cache each subtree re-runs the corpus-wide tokenize+wordcount —
-    // the appendIndex precedent (lazy, evictable; the served twin reads
-    // parquet instead and needs no cache)
+    // cache each subtree re-runs the corpus-wide tokenize+wordcount
+    // (lazy, evictable; the served twin reads parquet instead and needs
+    // no cache)
     val posts = postings(docs, idCol, textCol).persist()
     // the result is queries×k rows: materialize it eagerly so the
-    // postings cache can drop HERE (finally, appendIndex precedent)
+    // postings cache can drop HERE (finally)
     // instead of pinning corpus-sized evictable blocks for the
     // session's lifetime — long-lived services call this repeatedly
     try rm3Inline(posts, docs, textCol, queries, k, fbDocs, fbTerms, alpha)
@@ -717,14 +717,12 @@ object Retrieval {
     * of pinning one hot task/file at build time. */
   val PostingsSaltBuckets = 16
 
-  private def writePostings(
-      posts: DataFrame, dir: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
+  private def writePostings(posts: DataFrame, dir: String): Unit =
     posts
       .repartition(col("term"),
         pmod(hash(col("doc_id")), lit(PostingsSaltBuckets)))
       .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode(mode).parquet(dir)
+      .write.mode(SaveMode.Overwrite).parquet(dir)
 
   /** Derive the per-term df segment from ALREADY-WRITTEN postings files —
     * re-reading the slim persisted rows instead of re-executing the
@@ -742,73 +740,6 @@ object Retrieval {
     import spark.implicits._
     Seq((n, sumDl)).toDF("n_docs", "sum_dl")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
-  }
-
-  /** Persist the inverted index: `path/postings` term-clustered parquet
-    * (salted-repartitioned + sorted by term so a probe's pushed `term IN`
-    * prunes row groups while hot terms still split across files),
-    * `path/stats` per-term df SEGMENT rows (mergeable — probe sums them),
-    * `path/corpus` one (n_docs, sum_dl) SEGMENT row. Segment rows make
-    * [[appendIndex]] a pure parquet append: nothing is ever rewritten,
-    * df/n/avgdl re-derive by summation at probe time. The corpus is
-    * scanned twice (postings + the cheap text-column stats scalar); df
-    * stats re-read the just-written postings rather than re-running the
-    * corpus lineage. */
-  def writeIndex(
-      docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
-    writePostings(postings(docs, idCol, textCol), s"$path/postings")
-    writeStatsFromPostings(docs.sparkSession, s"$path/postings", s"$path/stats")
-    writeCorpusSeg(docs, textCol, s"$path/corpus")
-  }
-
-  /** Append a delta corpus to a persisted index.
-    *
-    * CONTRACT: exact ONLY when the delta's doc ids are disjoint from the
-    * already-indexed corpus — postings rows are per-(term, doc), so new
-    * docs only ADD rows and df/corpus segments sum at probe time, but
-    * re-appending an already-indexed doc double-counts its postings, df
-    * contribution, and corpus stats. Callers that cannot guarantee
-    * disjointness pass `dedupAgainstIndex = true`: the delta is
-    * anti-joined against the stored doc-id set first (one slim
-    * column-pruned index scan — still never rewrites anything). The
-    * default stays the pure append because ingest pipelines with
-    * monotone doc ids shouldn't pay the scan.
-    *
-    * Known limitation of the bare-path dedup: the stored doc-id set is
-    * derived from POSTINGS rows, which an empty/whitespace-text doc
-    * never produces — re-appending such a doc double-counts its
-    * (1, dl) in the corpus stats even under `dedupAgainstIndex`,
-    * skewing idf/avgdl marginally. The manifest path ([[appendIndexM]])
-    * dedups against its per-doc digest table instead and is exact for
-    * every doc shape — prefer it for corpora that can carry textless
-    * docs (this bare path keeps no such table by design).
-    *
-    * No stored row is read or rewritten — ingest cost is the delta's
-    * wordcount, independent of the lake's size. */
-  def appendIndex(
-      delta: DataFrame, idCol: String, textCol: String, path: String,
-      dedupAgainstIndex: Boolean = false): Unit = {
-    val spark = delta.sparkSession
-    val src =
-      if (!dedupAgainstIndex) delta
-      else delta.join(
-        graft.Tables.parquet(spark, s"$path/postings")
-          .select(col("doc_id").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-    // the delta's postings feed both the postings append and its df
-    // segment — persist across the two writes instead of re-running the
-    // tokenize lineage (append mode shares the postings dir with the
-    // lake, so the write-then-reread trick the build uses doesn't apply)
-    val posts = postings(src, idCol, textCol).persist()
-    try {
-      writePostings(posts, s"$path/postings", SaveMode.Append)
-      posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode(SaveMode.Append).parquet(s"$path/stats")
-    } finally posts.unpersist()
-    val (n, sumDl) = corpusStats(src, textCol)
-    import spark.implicits._
-    Seq((n, sumDl)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/corpus")
   }
 
   /** Per-term document frequencies off the stored stats segments,
@@ -835,39 +766,12 @@ object Retrieval {
         .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
   }
 
-  /** The probe core over resolved index frames — shared by the bare-path
-    * and manifest probes. Stats segments merge AFTER the term
-    * restriction (sum over query terms only), so the probe's work is
-    * proportional to the query terms' posting lists, not the lake. */
-  private def probeFrames(
-      posts: DataFrame, stats: DataFrame, corpus: DataFrame,
-      qt: DataFrame, terms: Seq[String], k: Int): DataFrame = {
-    val cand = termFilter(posts, qt, terms)
-    val dfStats = storedDfStats(stats, qt, terms)
-    val c = corpus
-      .agg(sum(col("n_docs")).cast("long"), sum(col("sum_dl")).cast("long")).head()
-    bm25Rank(cand, dfStats, qt, c.getLong(0), c.getLong(1), k)
-  }
-
-  /** Probe a persisted index: ranks `queries` against the indexed corpus
-    * without touching the corpus itself. The postings/stats scans are
-    * restricted to the batch's terms ([[termFilter]]: pushed `IN` under
-    * the cap, broadcast semi-join above it). */
-  def bm25Probe(
-      spark: SparkSession, path: String,
-      queries: Seq[(Int, String)], k: Int): DataFrame =
-    probeFrames(
-      graft.Tables.parquet(spark, s"$path/postings"),
-      graft.Tables.parquet(spark, s"$path/stats"),
-      graft.Tables.parquet(spark, s"$path/corpus"),
-      queryTerms(spark, queries), distinctTerms(queries), k)
-
-  // ---- BM25 index under the atomic manifest protocol ------------------
+  // ---- persisted BM25 index (atomic manifest protocol) ----------------
   //
-  // Three logical tables (`postings`, `stats`, `corpus`) staged as
+  // Four logical tables (`postings`, `stats`, `corpus`, `docs`) staged as
   // immutable segments and published together in one manifest commit —
-  // a probe racing build/append/compact resolves a consistent triple
-  // (postings with their own df/corpus segments), never a mix.
+  // a probe racing build/append/compact/refresh resolves a consistent
+  // set (postings with their own df/corpus segments), never a mix.
 
   private val PostingsTable = "postings"
   private val StatsTable = "stats"
@@ -886,7 +790,14 @@ object Retrieval {
       md5(coalesce(col(textCol), lit(""))).as("tdig"),
       size(split(col(textCol), " ")).as("dl"))
 
-  /** [[writeIndex]] under the manifest protocol. */
+  /** Persist the inverted index at `root`, one segment per table:
+    * `postings` term-clustered (salted-repartitioned + sorted by term, so
+    * a probe's pushed `term IN` prunes row groups while hot terms still
+    * split across files), `stats` per-term df rows and `corpus` one
+    * (n_docs, sum_dl) row — both summed at probe time, so
+    * [[appendIndexM]] never rewrites anything — and `docs`
+    * ([[docDigests]]). df stats re-read the just-written postings rather
+    * than re-running the corpus lineage. */
   def buildIndexM(
       docs: DataFrame, idCol: String, textCol: String, root: String): Long = {
     val spark = docs.sparkSession
@@ -905,10 +816,19 @@ object Retrieval {
       meta = Map("family" -> "bm25"))
   }
 
-  /** [[appendIndex]] under the manifest protocol: the delta's postings /
-    * df segment / corpus segment land as three new segments, published
-    * atomically (expect-guarded). Same disjoint-doc-ids contract and
-    * `dedupAgainstIndex` escape hatch as the bare append. */
+  /** Append a delta corpus: its postings, df, corpus and docs rows land
+    * as four new segments, published atomically (expect-guarded); no
+    * stored row is rewritten, so ingest cost is the delta's wordcount.
+    *
+    * CONTRACT: exact ONLY when the delta's doc ids are disjoint from the
+    * indexed corpus — re-appending an indexed doc double-counts its
+    * postings, df contribution, and corpus stats. Callers that cannot
+    * guarantee disjointness pass `dedupAgainstIndex = true`: the delta is
+    * anti-joined against the stored `docs` ids first (one slim per-doc
+    * scan). `docs` holds a row for EVERY indexed doc, so a blank-text doc
+    * (no postings row) is deduped too and its (1, dl) never counts twice
+    * (spec-pinned). The default stays the pure append because pipelines
+    * with monotone doc ids shouldn't pay the scan. */
   def appendIndexM(
       delta: DataFrame, idCol: String, textCol: String, root: String,
       dedupAgainstIndex: Boolean = false,
@@ -1079,8 +999,13 @@ object Retrieval {
       expect = Some(snap.version))
   }
 
-  /** [[bm25Probe]] against a manifest-committed index: resolves ONE
-    * snapshot and reads all three tables from it. */
+  /** Probe a persisted index: ranks `queries` against the indexed corpus
+    * without touching the corpus itself, reading postings, stats and
+    * corpus from ONE snapshot. The postings/stats scans are restricted to
+    * the batch's terms ([[termFilter]]: pushed `IN` under the cap,
+    * broadcast semi-join above it) and stats segments merge AFTER that
+    * restriction, so the work is proportional to the query terms'
+    * posting lists, not the lake. */
   def bm25ProbeM(
       spark: SparkSession, root: String,
       queries: Seq[(Int, String)], k: Int,
@@ -1092,11 +1017,14 @@ object Retrieval {
     val snap = at
       .map(v => IndexManifest.snapshotAt(spark, root, v))
       .getOrElse(IndexManifest.snapshot(spark, root))
-    probeFrames(
-      IndexManifest.readAt(spark, root, snap, PostingsTable),
-      IndexManifest.readAt(spark, root, snap, StatsTable),
-      IndexManifest.readAt(spark, root, snap, CorpusTable),
-      queryTerms(spark, queries), distinctTerms(queries), k)
+    val qt = queryTerms(spark, queries)
+    val terms = distinctTerms(queries)
+    val c = IndexManifest.readAt(spark, root, snap, CorpusTable)
+      .agg(sum(col("n_docs")).cast("long"), sum(col("sum_dl")).cast("long")).head()
+    bm25Rank(
+      termFilter(IndexManifest.readAt(spark, root, snap, PostingsTable), qt, terms),
+      storedDfStats(IndexManifest.readAt(spark, root, snap, StatsTable), qt, terms),
+      qt, c.getLong(0), c.getLong(1), k)
   }
 
   // ---- Positional phrase search ----------------------------------------

@@ -398,16 +398,6 @@ object Similarity {
     kernelCol(graft.functions.JlProject(attr(vecCol),
       graft.functions.JlSignsRef.generate(m, d)))
 
-  /** Attach the m-dimensional JL projection of `vecCol` as `outCol` —
-    * the public projector for pipelines that persist a projected corpus
-    * once and serve many query batches against it (the projection is
-    * deterministic in (m, d), so a projected corpus written today and a
-    * query batch projected next month live in the same space). */
-  def jlProject(df: DataFrame, vecCol: String, m: Int, d: Int,
-      outCol: String = "jl_vec"): DataFrame = {
-    df.withColumn(outCol, jlProjectKernel(vecCol, m, d))
-  }
-
   /** Johnson–Lindenstrauss projection ANN: queries and corpus are
     * projected to `m ≪ d` dimensions through the deterministic ±1 sign
     * matrix ([[graft.functions.JlProject]] — a zero-shuffle codegen

@@ -89,11 +89,4 @@ object Transforms {
     }
     df.select(pkCols ++ declared: _*)
   }
-
-  /** ObjectID bytes → 24-char lowercase hex (reference `mysql.go:400-401`).
-    * For string-typed ids this is identity; for 12-byte binary ids, hex. */
-  def oidHex(c: Column, dt: DataType): Column = dt match {
-    case BinaryType => lower(hex(c))
-    case _          => c.cast(StringType)
-  }
 }

@@ -247,20 +247,14 @@ object StreamPipeline {
   private def semanticCorpus(spark: SparkSession, dir: String): DataFrame =
     semanticRowsOf(graft.Tables.load(spark, dir, "documents"), "doc_id", "text")
 
-  /** Build the semantic-dedup index ONCE: embed + bucket the corpus and
-    * persist it as parquet. At 100 TB this is the nightly index job; the
-    * streaming join then re-reads a columnar table per micro-batch
-    * instead of re-embedding the lake. Incremental maintenance is an
-    * append of the delta's embedded rows (the
-    * [[graft.operators.Similarity.pqIndexAppend]] precedent). */
-  def writeSemanticIndex(spark: SparkSession, dir: String, indexPath: String): Unit =
-    semanticCorpus(spark, dir).write.mode("overwrite").parquet(indexPath)
-
   private val SemTable = "embeds"
 
-  /** [[writeSemanticIndex]] under the manifest protocol — the semantic
-    * near-dup index joins the gram/LSH/BM25/PQ families on the atomic
-    * lifecycle: build/append stage immutable segments and publish with
+  /** Build the semantic-dedup index ONCE: embed + bucket the corpus and
+    * commit it as one segment of the `embeds` table. At 100 TB this is
+    * the nightly index job; the streaming join then re-reads a columnar
+    * table per micro-batch instead of re-embedding the lake. Incremental
+    * maintenance is [[appendSemanticIndexM]]. Like the gram/LSH/BM25/PQ
+    * families, build/append stage immutable segments and publish with
     * one commit, so a stream-static probe racing the nightly
     * build/append resolves one committed corpus, never a torn mix. */
   def buildSemanticIndexM(spark: SparkSession, dir: String, root: String): Long =
@@ -338,7 +332,7 @@ object StreamPipeline {
 
   /** Semantic dedup AT INGEST — the production shape of near-duplicate
     * filtering on an unbounded document feed: the corpus index is built
-    * once and PERSISTED ([[writeSemanticIndex]]); each arriving document
+    * once and PERSISTED ([[buildSemanticIndexM]]); each arriving document
     * is hash-embedded and sign-LSH bucketed in the stream, then
     * STREAM-STATIC joined against the persisted index (re-read per
     * micro-batch as a plain parquet scan — no re-embedding of the lake),
@@ -364,7 +358,7 @@ object StreamPipeline {
   }
 
   /** Ingest-time repeated-span marking against the standing corpus's
-    * PERSISTED gram-digest index ([[graft.operators.Dedup.writeGramIndex]])
+    * PERSISTED gram-digest index ([[graft.operators.Dedup.buildGramIndexM]])
     * — the streaming leg of the incremental exact-substring family:
     * every arriving document's gram digests are computed IN the stream
     * (one stateless kernel projection + explode, no state store) and
@@ -1940,11 +1934,6 @@ object StreamPipeline {
       }
     }
   }
-
-  /** Serve the ingest dedup from an already-persisted index table. */
-  def streamingSemanticDedupWithIndex(
-      spark: SparkSession, dir: String, indexPath: String): DataFrame =
-    semanticDedupAgainst(spark, dir, graft.Tables.parquet(spark, indexPath))
 
   /** Inline-corpus variant (the pre-index shape): embeds the documents
     * table inside the stream-static join, so every micro-batch re-scans

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.scalacheck.{Gen, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -12,7 +12,7 @@ import org.scalacheck.Prop.forAll
   * vacuum reclaims them. Case counts are small — each op runs Spark
   * jobs — but the generator covers interleavings the fixture specs
   * can't enumerate. */
-class IndexManifestPropertySpec extends SparkSpec {
+class IndexManifestPropertySpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val params = SCTest.Parameters.default.withMinSuccessfulTests(6)
@@ -30,9 +30,7 @@ class IndexManifestPropertySpec extends SparkSpec {
 
   test("LAW: any append/compact/vacuum/orphan interleaving matches the model") {
     val prop = forAll(opGen) { ops =>
-      val root = new java.io.File(
-        java.lang.System.getProperty("java.io.tmpdir"),
-        s"graft_mprop_${java.util.UUID.randomUUID().toString.take(8)}").toString
+      val root = tempDir("graft_mprop_")
       // model: the set of ids the committed table must contain
       var model = Set(0L)
       val seg0 = IndexManifest.newSegment("t")

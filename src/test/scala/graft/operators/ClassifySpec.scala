@@ -1,13 +1,13 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** Multinomial NB: the classifier must actually LEARN (not just run) —
   * disjoint class vocabularies separate, token multiplicity outvotes,
   * smoothing handles unseen-in-class tokens, OOV-only docs stay
   * unclassified, ties are deterministic. */
-class ClassifySpec extends SparkSpec {
+class ClassifySpec extends SparkSpec with TempDirs {
 
   private lazy val train = {
     import spark.implicits._
@@ -58,9 +58,7 @@ class ClassifySpec extends SparkSpec {
 
   test("model store: served ≡ inline; retrain swaps atomically; pin replays v1") {
     import spark.implicits._
-    val root = new java.io.File(
-      java.lang.System.getProperty("java.io.tmpdir"),
-      s"graft_test_nbm_${java.util.UUID.randomUUID().toString.take(8)}").toString
+    val root = tempDir("graft_test_nbm_")
     val test = Seq((1L, "good great"), (2L, "bad awful"), (3L, "nice"))
       .toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -100,29 +98,21 @@ class ClassifySpec extends SparkSpec {
 
   test("model store: the capped path is reachable — an over-cap seed commits via vocabCap") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_nbcap_model").toString
-    try {
-      // maxVocab=3 < the 9-term seed vocabulary: the uncapped store
-      // build must fail loud, and vocabCap must be the working remedy
-      // ON the store path itself
-      val e = intercept[IllegalArgumentException] {
-        Classify.buildNbModelM(train, "label", "text", root, maxVocab = 3)
-      }
-      assert(e.getMessage.contains("maxVocab=3"))
-      Classify.buildNbModelM(train, "label", "text", root,
-        vocabCap = Some(3))
-      val out = Classify.nbClassifyM(spark, root,
-          Seq((1L, "good bad")).toDF("doc_id", "text"), "doc_id", "text")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      // both kept terms vote; the stored model classifies
-      assert(out.keySet == Set(1L))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(root)
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(x => java.nio.file.Files.deleteIfExists(x))
+    val root = tempDir("graft_nbcap_model")
+    // maxVocab=3 < the 9-term seed vocabulary: the uncapped store
+    // build must fail loud, and vocabCap must be the working remedy
+    // ON the store path itself
+    val e = intercept[IllegalArgumentException] {
+      Classify.buildNbModelM(train, "label", "text", root, maxVocab = 3)
     }
+    assert(e.getMessage.contains("maxVocab=3"))
+    Classify.buildNbModelM(train, "label", "text", root,
+      vocabCap = Some(3))
+    val out = Classify.nbClassifyM(spark, root,
+        Seq((1L, "good bad")).toDF("doc_id", "text"), "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // both kept terms vote; the stored model classifies
+    assert(out.keySet == Set(1L))
   }
 
   test("an over-cap seed vocabulary fails loud with the cap named") {

@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
+import graft.index.IndexManifest
 import org.apache.spark.sql.functions._
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   def docs = Seq(
@@ -352,11 +353,10 @@ class DedupSpec extends SparkSpec {
       Dedup.rawShingles(f, "text", "doc_id", 5)
     val lake = sh(docs.filter(col("doc_id") % 2 =!= 0))
     val delta = sh(docs.filter(col("doc_id") % 2 === 0))
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_lshidx_spec").toString
-    Dedup.writeLshIndex(lake, "doc_id", k = 16, bands = 4, idxPath)
-    val indexed = Dedup.indexedCrossCorpusPairs(
-        spark.read.parquet(s"$idxPath/bands"), spark.read.parquet(s"$idxPath/sigs"),
+    val idxPath = tempDir("graft_lshidx_spec")
+    Dedup.buildLshIndexM(lake, "doc_id", k = 16, bands = 4, idxPath)
+    val (idxBands, idxSigs) = Dedup.readLshIndexM(spark, idxPath)
+    val indexed = Dedup.indexedCrossCorpusPairs(idxBands, idxSigs,
         delta, "doc_id", k = 16, bands = 4, maxBucket = 1000)
       .as[(Long, Long, Double)].collect().toSet
     val inline = Dedup.crossCorpusLshPairs(delta, lake, "doc_id",
@@ -366,8 +366,7 @@ class DedupSpec extends SparkSpec {
     // the persisted bucket_n column enforces the same skew cut the inline
     // operator computes per run: a cap below the hottest bucket must drop
     // pairs identically on both paths
-    val capped = Dedup.indexedCrossCorpusPairs(
-        spark.read.parquet(s"$idxPath/bands"), spark.read.parquet(s"$idxPath/sigs"),
+    val capped = Dedup.indexedCrossCorpusPairs(idxBands, idxSigs,
         delta, "doc_id", k = 16, bands = 4, maxBucket = 2)
       .as[(Long, Long, Double)].collect().toSet
     val cappedInline = Dedup.crossCorpusLshPairs(delta, lake, "doc_id",
@@ -469,10 +468,9 @@ class DedupSpec extends SparkSpec {
       (94L, "short"),
       (95L, null.asInstanceOf[String]))
     val L = 16
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_gramidx_spec").toString
-    Dedup.writeGramIndex(lake.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
-    val got = Dedup.incrementalSpans(spark.read.parquet(idxPath),
+    val idxPath = tempDir("graft_gramidx_spec")
+    Dedup.buildGramIndexM(lake.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
+    val got = Dedup.incrementalSpans(Dedup.readGramIndexM(spark, idxPath),
         delta.toDF("doc_id", "text"), "doc_id", "text", L)
       .as[(Long, Int, Int)].collect().toSet
     // the contract: identical to running the whole-corpus operator over
@@ -492,7 +490,7 @@ class DedupSpec extends SparkSpec {
     // delta — doc 90's lakeShared copy is still marked (a lake doc owns
     // it), and of the delta-internal pair only the NON-owner (92) is
     // marked; owner 91 keeps its copy
-    val gotKf = Dedup.incrementalSpansKeepFirst(spark.read.parquet(idxPath),
+    val gotKf = Dedup.incrementalSpansKeepFirst(Dedup.readGramIndexM(spark, idxPath),
         delta.toDF("doc_id", "text"), "doc_id", "text", L)
       .as[(Long, Int, Int)].collect().toSet
     val wholeKf = Dedup.repeatedSpansKeepFirst(
@@ -509,9 +507,8 @@ class DedupSpec extends SparkSpec {
     val lake = docs.filter(col("doc_id") % 10 < 8)
     val delta = docs.filter(col("doc_id") % 10 >= 8)
     val L = 30
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_gramidx_bb").toString
-    Dedup.writeGramIndex(lake, "doc_id", "text", L, idxPath)
+    val idxPath = tempDir("graft_gramidx_bb")
+    Dedup.buildGramIndexM(lake, "doc_id", "text", L, idxPath)
     val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // big-delta regime
     // AQE's initial plan materializes the delta digest exchange twice and
@@ -534,7 +531,7 @@ class DedupSpec extends SparkSpec {
       assert("[+:]- Exchange hashpartitioning".r.findAllIn(plan).size <= 2,
         s"index side shuffled:\n$plan")
       val got = bucketed.as[(Long, Int, Int)].collect().toSet
-      val viaBroadcast = Dedup.incrementalSpans(spark.read.parquet(idxPath),
+      val viaBroadcast = Dedup.incrementalSpans(Dedup.readGramIndexM(spark, idxPath),
           delta, "doc_id", "text", L)
         .as[(Long, Int, Int)].collect().toSet
       assert(got == viaBroadcast && got.nonEmpty)
@@ -558,14 +555,13 @@ class DedupSpec extends SparkSpec {
       (30L, s"second-batch doc yes $early plus its own novel second tail!"),
       (31L, "second-batch original content matching absolutely nothing here"))
     val L = 16
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_gramappidx_spec").toString
-    Dedup.writeGramIndex(lake.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
-    Dedup.appendGramIndex(spark.read.parquet(idxPath),
-      delta1.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
+    val idxPath = tempDir("graft_gramappidx_spec")
+    Dedup.buildGramIndexM(lake.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
+    Dedup.appendGramIndexM(delta1.toDF("doc_id", "text"),
+      "doc_id", "text", L, idxPath)
     // the grown index serves the second delta exactly as if the spans ran
     // over the whole accumulated corpus
-    val got = Dedup.incrementalSpans(spark.read.parquet(idxPath),
+    val got = Dedup.incrementalSpans(Dedup.readGramIndexM(spark, idxPath),
         delta2.toDF("doc_id", "text"), "doc_id", "text", L)
       .as[(Long, Int, Int)].collect().toSet
     val whole = Dedup.repeatedSpans((lake ++ delta1 ++ delta2).toDF("doc_id", "text"),
@@ -575,7 +571,7 @@ class DedupSpec extends SparkSpec {
     assert(got.exists(_._1 == 30L) && !got.exists(_._1 == 31L))
     // monotone ids: re-shared digests added no row (no lowering needed) —
     // the index holds each digest once, lake/early owners preserved
-    val idx = spark.read.parquet(idxPath).as[(Long, Long)].collect()
+    val idx = Dedup.readGramIndexM(spark, idxPath).as[(Long, Long)].collect()
     assert(idx.map(_._1).distinct.length == idx.length, "duplicate digest rows")
   }
 
@@ -587,16 +583,15 @@ class DedupSpec extends SparkSpec {
     val delta1 = Seq( // ingest ids NOT monotone: 5 arrives after 100
       (5L, s"early-id newcomer also carries $shared in its own body text!!"))
     val L = 16
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_gramidx_nonmono").toString
-    Dedup.writeGramIndex(lake.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
-    Dedup.appendGramIndex(spark.read.parquet(idxPath),
-      delta1.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
+    val idxPath = tempDir("graft_gramidx_nonmono")
+    Dedup.buildGramIndexM(lake.toDF("doc_id", "text"), "doc_id", "text", L, idxPath)
+    Dedup.appendGramIndexM(delta1.toDF("doc_id", "text"),
+      "doc_id", "text", L, idxPath)
     // the shared grams' effective owner must now read as 5, so a probe
     // doc with id 50 is NOT exempted (least(5, 50) = 5, not 50)
     val delta2 = Seq(
       (50L, s"a middle-id third document repeating $shared one more time"))
-    val gotKf = Dedup.incrementalSpansKeepFirst(spark.read.parquet(idxPath),
+    val gotKf = Dedup.incrementalSpansKeepFirst(Dedup.readGramIndexM(spark, idxPath),
         delta2.toDF("doc_id", "text"), "doc_id", "text", L)
       .as[(Long, Int, Int)].collect().toSet
     val wholeKf = Dedup.repeatedSpansKeepFirst(
@@ -607,7 +602,7 @@ class DedupSpec extends SparkSpec {
     assert(gotKf.nonEmpty, "stale owner exempted the probe doc")
     // the log grew by an owner-lowering row, not a rewrite: both the
     // original owner 100 and the lowered owner 5 rows coexist
-    val owners = spark.read.parquet(idxPath).as[(Long, Long)].collect()
+    val owners = Dedup.readGramIndexM(spark, idxPath).as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
     assert(owners.values.exists(_ == Seq(5L, 100L)),
       s"expected a lowering row next to the original owner: $owners")
@@ -615,17 +610,15 @@ class DedupSpec extends SparkSpec {
     // compaction folds the log (incl. the lowering rows) back to one
     // min-owner row per digest == the from-scratch index over the whole
     // accumulated corpus, and probe results are unchanged
-    val outPath = idxPath + "_compacted"
-    Dedup.compactGramIndex(spark, idxPath, outPath)
-    val compacted = spark.read.parquet(outPath).as[(Long, Long)].collect().toSet
-    val scratchPath = java.nio.file.Files
-      .createTempDirectory("graft_gramidx_scratch").toString
-    Dedup.writeGramIndex((lake ++ delta1).toDF("doc_id", "text"),
+    Dedup.compactGramIndexM(spark, idxPath)
+    val compacted = Dedup.readGramIndexM(spark, idxPath).as[(Long, Long)].collect().toSet
+    val scratchPath = tempDir("graft_gramidx_scratch")
+    Dedup.buildGramIndexM((lake ++ delta1).toDF("doc_id", "text"),
       "doc_id", "text", L, scratchPath)
-    val scratch = spark.read.parquet(scratchPath).as[(Long, Long)].collect().toSet
+    val scratch = Dedup.readGramIndexM(spark, scratchPath).as[(Long, Long)].collect().toSet
     assert(compacted == scratch, "compacted log != from-scratch index")
     assert(compacted.map(_._1).size == compacted.size, "duplicate digest post-compact")
-    val kfCompacted = Dedup.incrementalSpansKeepFirst(spark.read.parquet(outPath),
+    val kfCompacted = Dedup.incrementalSpansKeepFirst(Dedup.readGramIndexM(spark, idxPath),
         delta2.toDF("doc_id", "text"), "doc_id", "text", L)
       .as[(Long, Int, Int)].collect().toSet
     assert(kfCompacted == gotKf, "compaction changed a probe result")
@@ -645,18 +638,17 @@ class DedupSpec extends SparkSpec {
     val cap = 4
     def sh(rows: Seq[(Long, String)]) =
       Dedup.rawShingles(rows.toDF("doc_id", "text"), "text", "doc_id", 5)
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_lshidx_app_spec").toString
-    Dedup.writeLshIndex(sh(lake), "doc_id", k = 16, bands = 4, idxPath)
-    Dedup.appendLshIndex(sh(delta), "doc_id", k = 16, bands = 4, idxPath)
+    val idxPath = tempDir("graft_lshidx_app_spec")
+    Dedup.buildLshIndexM(sh(lake), "doc_id", k = 16, bands = 4, idxPath)
+    Dedup.appendLshIndexM(sh(delta), "doc_id", k = 16, bands = 4, idxPath)
     // invariant: max(bucket_n) per bucket == the exact accumulated count
-    val gotN = spark.read.parquet(s"$idxPath/bands")
+    val (appBands, appSigs) = Dedup.readLshIndexM(spark, idxPath)
+    val gotN = appBands
       .groupBy("band", "band_hash").agg(max("bucket_n").as("n"))
       .as[(Int, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val scratchPath = java.nio.file.Files
-      .createTempDirectory("graft_lshidx_scr_spec").toString
-    Dedup.writeLshIndex(sh(lake ++ delta), "doc_id", k = 16, bands = 4, scratchPath)
-    val wantN = spark.read.parquet(s"$scratchPath/bands")
+    val scratchPath = tempDir("graft_lshidx_scr_spec")
+    Dedup.buildLshIndexM(sh(lake ++ delta), "doc_id", k = 16, bands = 4, scratchPath)
+    val wantN = Dedup.readLshIndexM(spark, scratchPath)._1
       .groupBy("band", "band_hash").agg(max("bucket_n").as("n"))
       .as[(Int, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(gotN == wantN, s"append totals drifted: $gotN vs $wantN")
@@ -672,22 +664,19 @@ class DedupSpec extends SparkSpec {
         "doc_id", 16, 4, maxBucket = cap)
       .select("id_new", "id_base").as[(Long, Long)].collect().toSet
     assert(want == Set((102L, 7L)), s"fixture lost its shape: $want")
-    val gotStale = probePairs(spark.read.parquet(s"$idxPath/bands"),
-      spark.read.parquet(s"$idxPath/sigs"), stale = true)
+    val gotStale = probePairs(appBands, appSigs, stale = true)
     assert(gotStale == want, s"stale-counts probe diverged: $gotStale vs $want")
     // WITHOUT the hot-set pass the stale lake rows leak clique pairs —
     // the guard is load-bearing, not belt-and-braces
-    val gotNaive = probePairs(spark.read.parquet(s"$idxPath/bands"),
-      spark.read.parquet(s"$idxPath/sigs"), stale = false)
+    val gotNaive = probePairs(appBands, appSigs, stale = false)
     assert(gotNaive != want && gotNaive.exists(_._1 == 100L),
       s"expected the naive probe to leak clique pairs, got $gotNaive")
     // compact: uniformly fresh counts, plain probe serves again
-    val outPath = idxPath + "_compacted"
-    Dedup.compactLshIndex(spark, idxPath, outPath)
-    val gotCompacted = probePairs(spark.read.parquet(s"$outPath/bands"),
-      spark.read.parquet(s"$outPath/sigs"), stale = false)
+    Dedup.compactLshIndexM(spark, idxPath)
+    val (compBands, compSigs) = Dedup.readLshIndexM(spark, idxPath)
+    val gotCompacted = probePairs(compBands, compSigs, stale = false)
     assert(gotCompacted == want, s"compacted probe diverged: $gotCompacted")
-    val freshPerRow = spark.read.parquet(s"$outPath/bands")
+    val freshPerRow = compBands
       .groupBy("band", "band_hash")
       .agg((max("bucket_n") === min("bucket_n")).as("uniform"))
       .as[(Int, String, Boolean)].collect()
@@ -704,34 +693,37 @@ class DedupSpec extends SparkSpec {
       case (i, t) if i % 5 != 1 => (i, t)
     } :+ (999L, "a retired document")
     def df(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-    val p0 = java.nio.file.Files.createTempDirectory("graft_lshref_spec0").toString
-    val p0Poisoned = java.nio.file.Files.createTempDirectory("graft_lshref_specP").toString
-    val p1 = java.nio.file.Files.createTempDirectory("graft_lshref_spec1").toString
-    val pScratch = java.nio.file.Files.createTempDirectory("graft_lshref_specS").toString
-    Dedup.writeLshIndexDigested(df(yesterday), "text", "doc_id", 5, 16, 4, p0)
+    val p0 = tempDir("graft_lshref_spec0")
+    val pScratch = tempDir("graft_lshref_specS")
+    Dedup.buildLshIndexDigestedM(df(yesterday), "text", "doc_id", 5, 16, 4, p0)
     // poison the stored signature of one UNCHANGED doc: the refresh must
     // carry it verbatim — direct proof unchanged docs never re-sign
     val unchangedId = 2L
-    val sigs0 = spark.read.parquet(s"$p0/sigs")
+    val snap0 = IndexManifest.snapshot(spark, p0)
+    val sigs0 = IndexManifest.readAt(spark, p0, snap0, "sigs")
     val poisonedSig = Seq.fill(16)(-42L)
+    val poisonedSeg = IndexManifest.newSegment("sigs")
     sigs0.withColumn("sig",
         when(col("id") === unchangedId, typedLit(poisonedSig)).otherwise(col("sig")))
-      .write.mode("overwrite").parquet(s"$p0Poisoned/sigs")
-    Dedup.refreshLshIndex(df(today), "text", "doc_id", 5, 16, 4, p0Poisoned, p1)
-    val got = spark.read.parquet(s"$p1/sigs")
+      .write.parquet(s"$p0/$poisonedSeg")
+    IndexManifest.commit(spark, p0,
+      snap0.tables.updated("sigs", Seq(poisonedSeg)), expect = Some(snap0.version))
+    Dedup.refreshLshIndexM(df(today), "text", "doc_id", 5, 16, 4, p0)
+    val (refreshedBands, refreshedSigs) = Dedup.readLshIndexM(spark, p0)
+    val got = refreshedSigs
       .as[(Long, String, Array[Long])].collect()
       .map { case (i, d, sg) => i -> sg.toSeq }.toMap
     assert(got(unchangedId) == poisonedSig, "unchanged doc must keep its stored sig")
     assert(!got.contains(999L), "retired id must drop out")
-    Dedup.writeLshIndexDigested(df(today), "text", "doc_id", 5, 16, 4, pScratch)
-    val want = spark.read.parquet(s"$pScratch/sigs")
+    Dedup.buildLshIndexDigestedM(df(today), "text", "doc_id", 5, 16, 4, pScratch)
+    val want = Dedup.readLshIndexM(spark, pScratch)._2
       .as[(Long, String, Array[Long])].collect()
       .map { case (i, d, sg) => i -> sg.toSeq }.toMap
     assert(got.keySet == want.keySet)
     assert((got - unchangedId) == (want - unchangedId),
       "refreshed sigs must equal the from-scratch build elsewhere")
     // bands carry uniformly exact counts (the compact invariant)
-    val uniform = spark.read.parquet(s"$p1/bands")
+    val uniform = refreshedBands
       .groupBy("band", "band_hash")
       .agg((max("bucket_n") === min("bucket_n") &&
         max("bucket_n") === count(org.apache.spark.sql.functions.lit(1))).as("ok"))

@@ -1,16 +1,15 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
+import graft.index.IndexManifest
 import org.apache.spark.sql.functions._
 
 /** BM25 retrieval: postings correctness, ranking semantics, and the
   * persisted-index lifecycle equivalences (indexed ≡ inline,
   * append ≡ from-scratch). */
-class RetrievalSpec extends SparkSpec {
+class RetrievalSpec extends SparkSpec with TempDirs {
 
-  private def tmp(tag: String): String =
-    new java.io.File(java.lang.System.getProperty("java.io.tmpdir"),
-      s"graft_test_$tag").toString
+  private def tmp(tag: String): String = tempDir(s"graft_test_$tag")
 
   private lazy val corpus = {
     import spark.implicits._
@@ -127,10 +126,10 @@ class RetrievalSpec extends SparkSpec {
   test("indexed probe reproduces inline retrieval exactly") {
     val qs = Seq(0 -> "spark window agg", 1 -> "hash join")
     val p = tmp("bm25_idx_eq")
-    Retrieval.writeIndex(corpus, "doc_id", "text", p)
+    Retrieval.buildIndexM(corpus, "doc_id", "text", p)
     val inline = Retrieval.bm25TopK(corpus, "doc_id", "text", qs, 10)
       .orderBy("query_id", "rank").collect().toSeq
-    val probed = Retrieval.bm25Probe(spark, p, qs, 10)
+    val probed = Retrieval.bm25ProbeM(spark, p, qs, 10)
       .orderBy("query_id", "rank").collect().toSeq
     assert(probed == inline)
   }
@@ -139,18 +138,41 @@ class RetrievalSpec extends SparkSpec {
     val qs = Seq(0 -> "spark window hash")
     val pFull = tmp("bm25_full")
     val pApp = tmp("bm25_app")
-    Retrieval.writeIndex(corpus, "doc_id", "text", pFull)
-    Retrieval.writeIndex(corpus.filter(col("doc_id") < 2), "doc_id", "text", pApp)
-    Retrieval.appendIndex(corpus.filter(col("doc_id") >= 2), "doc_id", "text", pApp)
-    val full = Retrieval.bm25Probe(spark, pFull, qs, 10)
+    Retrieval.buildIndexM(corpus, "doc_id", "text", pFull)
+    Retrieval.buildIndexM(corpus.filter(col("doc_id") < 2), "doc_id", "text", pApp)
+    Retrieval.appendIndexM(corpus.filter(col("doc_id") >= 2), "doc_id", "text", pApp)
+    val full = Retrieval.bm25ProbeM(spark, pFull, qs, 10)
       .orderBy("query_id", "rank").collect().toSeq
-    val app = Retrieval.bm25Probe(spark, pApp, qs, 10)
+    val app = Retrieval.bm25ProbeM(spark, pApp, qs, 10)
       .orderBy("query_id", "rank").collect().toSeq
     assert(app == full)
     // df stats really are segmented (two rows per term spanning the split)
-    val segs = spark.read.parquet(s"$pApp/stats")
+    val segs = IndexManifest.read(spark, pApp, "stats")
       .filter(col("term") === "spark").count()
     assert(segs == 2, "append must add a stats segment, not rewrite")
+  }
+
+  test("appendIndexM dedup drops a re-sent blank-text doc: corpus stats and probe unchanged") {
+    import spark.implicits._
+    val qs = Seq(0 -> "spark window hash")
+    // blank docs yield no postings row but count in n_docs/sum_dl
+    val withBlank = corpus.unionByName(Seq((5L, ""), (6L, "   ")).toDF("doc_id", "text"))
+    val root = tmp("bm25_blank")
+    Retrieval.buildIndexM(withBlank, "doc_id", "text", root)
+    def corpusSums() = IndexManifest.read(spark, root, "corpus")
+      .agg(sum("n_docs").cast("long"), sum("sum_dl").cast("long"))
+      .as[(Long, Long)].head()
+    def probe() = Retrieval.bm25ProbeM(spark, root, qs, 10)
+      .orderBy("query_id", "rank").collect().toSeq
+    val sums0 = corpusSums()
+    val rows0 = probe()
+    assert(sums0 == Retrieval.corpusStats(withBlank, "text") && sums0._1 == 7L)
+    assert(IndexManifest.read(spark, root, "postings").filter(col("doc_id") >= 5).isEmpty,
+      "fixture lost its shape: a blank doc produced postings")
+    Retrieval.appendIndexM(withBlank.filter(col("doc_id") >= 5), "doc_id", "text", root,
+      dedupAgainstIndex = true)
+    assert(corpusSums() == sums0, "re-sent blank docs double-counted in the corpus stats")
+    assert(probe() == rows0, "re-sent blank docs changed the probe")
   }
 
   test("hard negatives: anchor excluded, lexically closest non-self ranks first") {
@@ -263,8 +285,8 @@ class RetrievalSpec extends SparkSpec {
   test("probe plan: corpus absent, term filter pushed to the postings scan") {
     val qs = Seq(0 -> "spark window")
     val p = tmp("bm25_plan")
-    Retrieval.writeIndex(corpus, "doc_id", "text", p)
-    val plan = Retrieval.bm25Probe(spark, p, qs, 10)
+    Retrieval.buildIndexM(corpus, "doc_id", "text", p)
+    val plan = Retrieval.bm25ProbeM(spark, p, qs, 10)
       .queryExecution.executedPlan.toString
     assert(plan.contains("In(term"), "query-term IN filter must push into parquet")
     assert(!plan.toLowerCase.contains("documents"), "probe must not scan the corpus")

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
 import java.util.Properties
 
-import graft.{Replicator, SparkSpec}
+import graft.{Replicator, SparkSpec, TempDirs}
 import graft.config.ConfigParser
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * writer machinery (statement cache, shape batching, bind order, replay
   * guard, offset round-trip) against an engine that actually enforces
   * types, constraints, and transactions. */
-class DerbyRuntimeSpec extends SparkSpec {
+class DerbyRuntimeSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private val db = "memory:graftderby"
@@ -88,8 +88,8 @@ class DerbyRuntimeSpec extends SparkSpec {
 
     // C: streamed CDC apply — partial update preserves untouched columns,
     // $unset nulls via typed setNull, per-key order holds, delete lands
-    val segDir = Files.createTempDirectory("graft_derby_seg").toString
-    val ckpt = Files.createTempDirectory("graft_derby_ckpt").toString
+    val segDir = tempDir("graft_derby_seg")
+    val ckpt = tempDir("graft_derby_ckpt")
     Files.write(Paths.get(segDir, "seg0.json"), Seq(
       """{"op":"u","ns":"app.users","ts":101,"o":{"$set":{"visits":4}},"o2":{"_id":"u1"}}""",
       """{"op":"u","ns":"app.users","ts":102,"o":{"$set":{"name":"anne"}},"o2":{"_id":"u1"}}""",
@@ -155,7 +155,7 @@ class DerbyRuntimeSpec extends SparkSpec {
     val users = cfg.table("users").get
     freshTable(users)
     withConn { conn => DerbyDialect.ensureStateTable(conn) }
-    val qDir = Files.createTempDirectory("graft_quarantine").toString
+    val qDir = tempDir("graft_quarantine")
 
     // admission rule: visits must be <= 100 when present (NULL admits —
     // partials legally omit the field)
@@ -197,8 +197,8 @@ class DerbyRuntimeSpec extends SparkSpec {
     val cfg = ConfigParser.parse(configText)
     val users = cfg.table("users").get
     freshTable(users)
-    val dlDir = Files.createTempDirectory("graft_dead").toString
-    val qDir = Files.createTempDirectory("graft_quarantine").toString
+    val dlDir = tempDir("graft_dead")
+    val qDir = tempDir("graft_quarantine")
     val rule = get_json_object(col("fields_json"), "$.visits").cast("long") <= 100L
     val batch = Seq(
       // a payload-parse dead letter keeps its ts; it never moves the offset

@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.config.{ColumnSpec, TableSpec}
 
 import java.util.Properties
@@ -8,7 +8,7 @@ import java.util.Properties
 /** Runtime coverage of W1/W3/C1: the REAL writeBatch path (executor
   * partitions → DriverManager → prepared statement batches → per-partition
   * transaction) against the in-memory JDBC double. */
-class UpsertWriterRuntimeSpec extends SparkSpec {
+class UpsertWriterRuntimeSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   val spec = TableSpec("users", Seq(
@@ -119,7 +119,7 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, get_json_object}
     MemJdbc.reset("db12")
     val url = MemJdbc.UrlPrefix + "db12"
-    val qDir = java.nio.file.Files.createTempDirectory("graft_quarantine").toString
+    val qDir = tempDir("graft_quarantine")
     // every tenth image violates the rule
     val rule = get_json_object(col("fields_json"), "$.visits").cast("long") % 10L =!= 0L
     def applyAt(batchId: Long, cut: Long) =
@@ -143,7 +143,7 @@ class UpsertWriterRuntimeSpec extends SparkSpec {
     MemJdbc.reset("db11")
     val url = MemJdbc.UrlPrefix + "db11"
     val batch = decodedDf(fullImages)
-    val deadLetters = java.nio.file.Files.createTempDirectory("graft_dl").toString
+    val deadLetters = tempDir("graft_dl")
     val group = "graft-one-pass-apply"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {

@@ -2,13 +2,13 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.functions._
 
-class ChangeFeedSpec extends SparkSpec {
+class ChangeFeedSpec extends SparkSpec with TempDirs {
 
   def writeSegments(lines: Seq[String]): String = {
-    val dir = Files.createTempDirectory("graft_oplog").toString
+    val dir = tempDir("graft_oplog")
     Files.write(Paths.get(dir, "segment-000.json"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir

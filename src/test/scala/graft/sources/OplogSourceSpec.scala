@@ -2,14 +2,14 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** The DSv2 `graft-oplog` source: equivalence with the PERMISSIVE JSON
   * reader it replaced, filter pushdown reaching the scan, column pruning,
   * byte-range splitting, and micro-batch tailing of appended segments. */
-class OplogSourceSpec extends SparkSpec {
+class OplogSourceSpec extends SparkSpec with TempDirs {
 
   private val segments = Seq(
     """{"op":"i","ns":"app.users","ts":10,"o":{"_id":"u1","name":"ann","cfg":{"pub":true}}}""",
@@ -22,7 +22,7 @@ class OplogSourceSpec extends SparkSpec {
     """{"op":"i","ns":"app.users","ts":5,"o":{"_id":"old"}}""")
 
   private def writeDir(lines: Seq[String], name: String = "segment-000.json"): String = {
-    val dir = Files.createTempDirectory("graft_oplog_v2").toString
+    val dir = tempDir("graft_oplog_v2")
     Files.write(Paths.get(dir, name), lines.mkString("\n").getBytes("UTF-8"))
     dir
   }
@@ -78,7 +78,7 @@ class OplogSourceSpec extends SparkSpec {
     val dir = writeDir(Seq(
       """{"op":"i","ns":"app.users","ts":1,"o":{"_id":"a"}}""",
       """{"op":"i","ns":"app.users","ts":2,"o":{"_id":"b"}}"""))
-    val ckpt = Files.createTempDirectory("graft_oplog_ckpt").toString
+    val ckpt = tempDir("graft_oplog_ckpt")
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     def drain(): Unit = {
       val q = spark.readStream.format("graft-oplog").load(dir)
@@ -134,7 +134,7 @@ class OplogSourceSpec extends SparkSpec {
       spark.readStream.format("graft-oplog").load(uri)
         .writeStream
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_oplog_fs_ckpt").toString)
+          tempDir("graft_oplog_fs_ckpt"))
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           seen.synchronized { seen ++= df.collect().map(_.getAs[Long]("ts")) }; ()
         }

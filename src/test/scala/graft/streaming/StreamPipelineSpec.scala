@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.sink.MergeApply
 import org.apache.spark.sql.functions._
 
-class StreamPipelineSpec extends SparkSpec {
+class StreamPipelineSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("streaming span marking: lake-hit spans, each contained in the batch incremental span set") {
@@ -21,10 +19,11 @@ class StreamPipelineSpec extends SparkSpec {
     // delta-internal repeats — so every streamed span lies inside some
     // batch incremental span of the same document
     val docs = graft.Tables.load(spark, Sf0001, "documents")
-    val idxPath = Files.createTempDirectory("graft_sspan_twin").toString
-    graft.operators.Dedup.writeGramIndex(docs.filter(col("doc_id") % 10 < 8),
+    val idxPath = tempDir("graft_sspan_twin")
+    graft.operators.Dedup.buildGramIndexM(docs.filter(col("doc_id") % 10 < 8),
       "doc_id", "text", graft.queries.LlmQueries.SpanGramChars, idxPath)
-    val batch = graft.operators.Dedup.incrementalSpans(spark.read.parquet(idxPath),
+    val batch = graft.operators.Dedup.incrementalSpans(
+        graft.operators.Dedup.readGramIndexM(spark, idxPath),
         docs.filter(col("doc_id") % 10 >= 8), "doc_id", "text",
         graft.queries.LlmQueries.SpanGramChars)
       .as[(Long, Int, Int)].collect().toSeq
@@ -126,10 +125,9 @@ class StreamPipelineSpec extends SparkSpec {
 
   test("semantic dedup served from the persisted index equals the inline-corpus rows") {
     val dir = "/root/testdata/sf0.001"
-    val indexPath = Files.createTempDirectory("graft_semidx_spec").toString
-    StreamPipeline.writeSemanticIndex(spark, dir, indexPath)
-    val fromIndex = StreamPipeline
-      .streamingSemanticDedupWithIndex(spark, dir, indexPath)
+    // streamingSemanticDedup builds its index through buildSemanticIndexM
+    // and serves the stream-static join from the committed snapshot
+    val fromIndex = StreamPipeline.streamingSemanticDedup(spark, dir)
       .collect().map(_.toSeq).toSet
     val inline = StreamPipeline.streamingSemanticDedupInline(spark, dir)
       .collect().map(_.toSeq).toSet

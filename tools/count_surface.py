@@ -3,7 +3,7 @@
 
     python3 tools/count_surface.py [REPO_ROOT]
 
-Eight counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
+Nine counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
   - scala_lines:         non-blank lines of the Scala sources;
   - options:             distinct `spark.graft.*` conf keys the sources name;
   - mains:               `def main` entry points;
@@ -31,7 +31,12 @@ Eight counts over `src/main` (REPO_ROOT defaults to this file's parent repo):
                          `Tables.scala`, i.e. parquet reads that infer the
                          schema with a Spark job on every call. Every read
                          goes through `Tables.parquet`, which memoizes the
-                         inferred schema, so this reads 0.
+                         inferred schema, so this reads 0;
+  - in_place_appends:    `mode("append")` and `SaveMode.Append` outside
+                         comments, i.e. writes that add files to a parquet
+                         directory a reader may be listing. Every index
+                         write is a fresh segment, published by one
+                         manifest commit, so this reads 0.
 
 A simplification is read as the before/after difference of these counts.
 """
@@ -52,12 +57,13 @@ INSTALL_HOMES = {"GraftFunctions.scala", "DerivedPredicatePushdown.scala",
 FOREACH_BATCH = re.compile(r"\.foreachBatch\b")
 INFERRING_READ = re.compile(r"\.read\.parquet\(")
 READ_HOME = "Tables.scala"
+IN_PLACE_APPEND = re.compile(r'mode\("append"\)|\bSaveMode\.Append\b')
 COMMENT = re.compile(r"^\s*(?://|\*|/\*)")
 
 
 def count(root):
     lines, mains, builders, options = 0, 0, 0, set()
-    by_name, installs, drivers, reads = 0, 0, 0, 0
+    by_name, installs, drivers, reads, appends = 0, 0, 0, 0, 0
     for d, _, files in os.walk(os.path.join(root, "src", "main")):
         for f in files:
             if not f.endswith(".scala"):
@@ -73,6 +79,7 @@ def count(root):
                         continue
                     by_name += len(KERNEL_BY_NAME.findall(line))
                     drivers += len(FOREACH_BATCH.findall(line))
+                    appends += len(IN_PLACE_APPEND.findall(line))
                     if f != READ_HOME:
                         reads += len(INFERRING_READ.findall(line))
                     if f not in INSTALL_HOMES:
@@ -80,7 +87,7 @@ def count(root):
     return {"scala_lines": lines, "options": len(options), "mains": mains,
             "session_builders": builders, "kernel_name_lookups": by_name,
             "session_installs": installs, "stream_drivers": drivers,
-            "inferring_reads": reads}
+            "inferring_reads": reads, "in_place_appends": appends}
 
 
 if __name__ == "__main__":
