@@ -24,7 +24,7 @@ import scala.collection.mutable
   *    (W1), then [[deleteOrphans]] (J1) replaces the per-row FindOne loop.
   *  - [[startStream]]: entry point C (run.go:297-335) — change-feed
   *    segments → distributed decode (T1/T2) → per-batch apply that
-  *    repartitions by key and applies each key's ops IN ORDER (the O1
+  *    partitions by key and applies each key's ops IN ORDER (the O1
   *    guarantee, without the reference's single serialized consumer), with
   *    the batch offset co-committed after the data (C1; replays are safe
   *    because every statement is idempotent).
@@ -182,9 +182,11 @@ class Replicator(
   }
 
   /** Entry point C: continuous replication from an oplog-segment directory.
-    * Each micro-batch: decode → repartition by (table, key) → fold each
+    * Each micro-batch: decode → partition by (table, key) → fold each
     * key's ops in ts order to one net write on the executor → co-commit
-    * the max offset. */
+    * the max offset. The exchange width is the sink's writer cap; one
+    * writer means no exchange, so a batch into Derby is one stage
+    * ([[Replicator.applyBatch]]). */
   def startStream(segmentsDir: String, checkpointDir: String, afterTs: Long = 0L,
       quarantineRule: Option[org.apache.spark.sql.Column] = None): StreamingQuery =
     startStream(
@@ -265,15 +267,21 @@ object Replicator {
     * NULL absent declared columns (mysql.go:381-407); unsets null the
     * named columns. Returns the max applied or quarantined ts.
     *
-    * Rows are repartitioned by (tbl, id) and sorted by (tbl, id, ts, seq),
-    * so each key's ops reach the writer contiguous and in order. The
-    * replay guard, the quarantine skip, the offset max and the dead-letter
-    * count run per op; then each key's run folds to ONE net write
-    * ([[KeyFold]]): a DELETE, or an upsert whose statement shape, rendered
-    * once per partition, is (table, present-column set). One write per key
-    * makes a partition's writes commute, which lets the writer batch them
-    * by statement. Each write task also reports its partition's max ts and
-    * dead letters: no pass of its own for either.
+    * [[UpsertWriter.writeRows]] partitions the rows by (tbl, id) and sorts
+    * them by (tbl, id, ts, seq), so each key's ops reach the writer
+    * contiguous and in order. The exchange width is the sink's writer cap;
+    * one writer (Derby) means no exchange: the batch is coalesced to one
+    * partition and sorted there, one stage per batch. The price: a batch
+    * that spans many input splits reads and decodes them in that one task,
+    * not in parallel map tasks (those ran before the write stage anyway;
+    * on `cdc_bulk` read and decode are about 11 of about 38 ms per 1000
+    * events). The replay guard, the quarantine skip, the offset max and
+    * the dead-letter count run per op; then each key's run folds to ONE
+    * net write ([[KeyFold]]): a DELETE, or an upsert whose statement
+    * shape, rendered once per partition, is (table, present-column set).
+    * One write per key makes a partition's writes commute, which lets the
+    * writer batch them by statement. Each write task also reports its
+    * partition's max ts and dead letters: no pass of its own for either.
     *
     * `skipBelowTs`: replay guard — the writer skips ops with ts STRICTLY
     * below this (the durably stored offset); as a plan literal, new each
@@ -322,12 +330,10 @@ object Replicator {
         rows.withColumn("kind", when(bad, lit("quarantined")).otherwise(col("kind")))
       case _ => rows
     }
-    val relevant = marked
-      .repartition(col("tbl"), col("id"))
-      // applyOps tx inner ops share the outer ts — seq (index within the
-      // oplog entry) breaks the tie so per-key order is total
-      .sortWithinPartitions(col("tbl"), col("id"), col("ts"), col("seq"))
-    val parts = UpsertWriter.writeRows(relevant, url, props, dialect) { rows =>
+    // applyOps tx inner ops share the outer ts — seq (index within the
+    // oplog entry) breaks the tie so per-key order is total
+    val parts = UpsertWriter.writeRows(marked, url, props, dialect,
+        key = Seq(col("tbl"), col("id")), order = Seq(col("ts"), col("seq"))) { rows =>
       var maxTs = Long.MinValue // below every in-scope ts: none seen yet
       var deadLetters = 0L
       // per op, before the fold: the dead-letter count, the replay guard and

@@ -54,10 +54,11 @@ trait SqlDialect extends Serializable {
     * (snapshot writeBatch, orphan delete, streamed apply); None = one
     * connection per input partition. A bounded fan-in is what a real
     * deployment wants anyway — a 1000-executor cluster must not open
-    * 1000 connections against one sink — and the cap is applied with
-    * `coalesce`, which concatenates whole parent partitions, so the
-    * per-key ordered-apply contract (O1) survives: a key's ops live in
-    * one parent partition and stay contiguous and in order. */
+    * 1000 connections against one sink. It is also the streamed apply's
+    * exchange width: that path hash-partitions its keys into exactly this
+    * many partitions, or, for a cap of 1, coalesces to one partition with
+    * no exchange; the snapshot and the orphan delete `coalesce` to it
+    * ([[UpsertWriter.writeRows]]). */
   def maxWriteConnections: Option[Int] = None
 
   /** One statement, closed deterministically — the state-table bootstrap

@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.config.TableSpec
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 import java.sql.{Connection, DriverManager, PreparedStatement, SQLException, Types}
 import java.util.Properties
@@ -136,9 +136,21 @@ object UpsertWriter {
     * partition's rows to the writes they make (a row may make none; a
     * write is a statement and the value bound to each named param) and to
     * a summary, read once the rows are consumed and returned from the
-    * same job. A partition that writes (capped at
-    * `dialect.maxWriteConnections`) applies its writes in ONE transaction
-    * on one connection.
+    * same job. A partition that writes applies its writes in ONE
+    * transaction on one connection.
+    *
+    * Partitioning is decided here, from the sink's writer cap
+    * (`dialect.maxWriteConnections`). Without a `key` (snapshot, orphan
+    * delete) the frame keeps its partitions, coalesced to the cap. With a
+    * `key` (the streamed apply) each partition receives whole keys, sorted
+    * by `key ++ order`, and the exchange width is the sink's writer cap:
+    * no cap hash-partitions by `key` at the session's shuffle width; a cap
+    * `n > 1` hash-partitions into `n`; a cap of 1 coalesces to one
+    * partition with no exchange at all, since every key is then already in
+    * that partition and the sort makes its run contiguous and ordered. The
+    * trade-off of one writer: the batch's input splits are read and
+    * decoded in the writer's one task, not in parallel map tasks ahead of
+    * it (those ran before the writer, one stage after the other, anyway).
     *
     * Caller contract: the writes of one partition COMMUTE. Each prepared
     * statement (cached per SQL text) keeps its own open JDBC batch, flushed
@@ -149,11 +161,9 @@ object UpsertWriter {
     * round trip per statement per [[applyBatchSize]] rows, not one per row
     * (the reference round-trips per op, `mysql.go:410-415`). */
   private[graft] def writeRows[A: ClassTag](df: DataFrame, url: String, props: Properties,
-      dialect: SqlDialect)(
+      dialect: SqlDialect, key: Seq[Column] = Nil, order: Seq[Column] = Nil)(
       partition: Iterator[Row] => (Iterator[(SinkStatement, String => Any)], () => A)): Array[A] = {
-    // coalesce concatenates whole parent partitions, so a key's sorted run
-    // stays contiguous at any connection cap
-    val bounded = dialect.maxWriteConnections.fold(df)(df.coalesce)
+    val bounded = forWriters(df, dialect, key, order)
     bounded.rdd.mapPartitions { rows =>
       val (writes, summary) = partition(rows)
       if (writes.hasNext) inTransaction(url, props) { conn =>
@@ -170,6 +180,19 @@ object UpsertWriter {
       Iterator.single(summary())
     }.collect()
   }
+
+  /** The frame [[writeRows]] writes: `df` spread over the sink's writers. */
+  private[sink] def forWriters(df: DataFrame, dialect: SqlDialect, key: Seq[Column],
+      order: Seq[Column]): DataFrame =
+    if (key.isEmpty) dialect.maxWriteConnections.fold(df)(df.coalesce)
+    else {
+      val spread = dialect.maxWriteConnections match {
+        case Some(1) => df.coalesce(1)
+        case Some(n) => df.repartition(n, key: _*)
+        case None    => df.repartition(key: _*)
+      }
+      spread.sortWithinPartitions(key ++ order: _*)
+    }
 
   /** A prepared statement and its open JDBC batch. Derby (and other strict
     * engines) reject `setObject(i, null)` without a type, so each param's

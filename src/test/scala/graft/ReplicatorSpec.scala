@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * delete-reconciliation → continuous streaming apply, against the
   * in-memory JDBC sink. This is the whole reference daemon
   * (run.go:79-335) as one test. */
-class ReplicatorSpec extends SparkSpec {
+class ReplicatorSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   val configText =
@@ -54,8 +54,8 @@ class ReplicatorSpec extends SparkSpec {
     assert(MemJdbc.table("repl", "users").keySet == Set("u1", "u2"))
 
     // C: continuous replication from oplog segments
-    val segDir = Files.createTempDirectory("graft_repl_seg").toString
-    val ckpt = Files.createTempDirectory("graft_repl_ckpt").toString
+    val segDir = tempDir("graft_repl_seg")
+    val ckpt = tempDir("graft_repl_ckpt")
     Files.write(Paths.get(segDir, "seg0.json"), Seq(
       // partial update: only visits changes, name/cfg_pub survive
       """{"op":"u","ns":"app.users","ts":101,"o":{"$set":{"visits":4}},"o2":{"_id":"u1"}}""",
@@ -112,8 +112,8 @@ class ReplicatorSpec extends SparkSpec {
     val url = MemJdbc.UrlPrefix + "replo"
     val repl = new Replicator(spark, cfg, url, new Properties(), CountingDialect)
     repl.reconcileSchema(Map.empty, force = false)
-    val segDir = Files.createTempDirectory("graft_offset_seg").toString
-    val ckpt = Files.createTempDirectory("graft_offset_ckpt").toString
+    val segDir = tempDir("graft_offset_seg")
+    val ckpt = tempDir("graft_offset_ckpt")
     def segment(name: String, lines: String*): Unit =
       Files.write(Paths.get(segDir, name), lines.mkString("\n").getBytes("UTF-8"))
     def offset: String = new String(MemJdbc.table("replo", UpsertWriter.StateTable)("timestamp")("value")
@@ -169,8 +169,8 @@ class ReplicatorSpec extends SparkSpec {
     val cfg = ConfigParser.parse(cfgText)
     val repl = new Replicator(spark, cfg, MemJdbc.UrlPrefix + "replu", new Properties())
     repl.reconcileSchema(Map.empty, force = false)
-    val segDir = Files.createTempDirectory("graft_unset_seg").toString
-    val ckpt = Files.createTempDirectory("graft_unset_ckpt").toString
+    val segDir = tempDir("graft_unset_seg")
+    val ckpt = tempDir("graft_unset_ckpt")
     Files.write(Paths.get(segDir, "seg0.json"), Seq(
       """{"op":"i","ns":"app.users","ts":1,"o":{"_id":"u1","status":"ok","status_code":200,"cfg":{"pub":true}}}""",
       // scalar unset: only `status` nulls; status_code must SURVIVE

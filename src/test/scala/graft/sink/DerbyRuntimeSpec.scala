@@ -121,6 +121,48 @@ class DerbyRuntimeSpec extends SparkSpec with TempDirs {
     assert(withConn(UpsertWriter.readOffset(_, DerbyDialect)).contains(106L))
   }
 
+  test("one micro-batch over three segment files applies a key's ops in ts order, not file order") {
+    val cfg = ConfigParser.parse(configText)
+    val users = cfg.table("users").get
+    freshTable(users)
+    val repl = new Replicator(spark, cfg, url, props, DerbyDialect)
+    val base = Seq(("u1", "ann", 3L)).toDF("_id", "name", "visits")
+    repl.snapshot(users, base)
+
+    // one key's delete, insert, $set and $unset; each file is one input
+    // split, and the files' name order is the reverse of the ops' ts order
+    val segDir = tempDir("graft_derby_splits")
+    val ckpt = tempDir("graft_derby_splits_ckpt")
+    def segment(name: String, lines: String*): Unit =
+      Files.write(Paths.get(segDir, name), lines.mkString("\n").getBytes("UTF-8")): Unit
+    segment("seg0.json",
+      """{"op":"u","ns":"app.users","ts":104,"o":{"$unset":{"visits":1}},"o2":{"_id":"u1"}}""")
+    segment("seg1.json",
+      """{"op":"d","ns":"app.users","ts":101,"o":{"_id":"u1"}}""",
+      """{"op":"u","ns":"app.users","ts":103,"o":{"$set":{"name":"late"}},"o2":{"_id":"u1"}}""")
+    segment("seg2.json",
+      """{"op":"i","ns":"app.users","ts":102,"o":{"_id":"u1","name":"first","visits":5}}""")
+
+    val q = repl.startStream(segDir, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(4L),
+      "the four ops are one micro-batch")
+
+    // (_id, op, partial, unsets, ts, seq, name, visits)
+    val changes = Seq(
+      ("u1", "delete", false, Seq.empty[String], 101L, 0, None, None),
+      ("u1", "insert", false, Seq.empty[String], 102L, 0, Some("first"), Some(5L)),
+      ("u1", "update", true, Seq.empty[String], 103L, 0, Some("late"), None),
+      ("u1", "update", true, Seq("visits"), 104L, 0, None, None))
+      .toDF("_id", "op", "partial", "unsets", "ts", "seq", "name", "visits")
+    val folded = MergeApply.foldChanges(base, changes, "_id", "op", "partial", "unsets",
+      Seq(col("ts"), col("seq")), Seq("name", "visits"))
+      .collect().map(r => r.getString(0) -> Seq(r.get(1), r.get(2))).toMap
+    assert(folded == Map("u1" -> Seq("late", null)))
+    assert(readTable("users", Seq("name", "visits")) == folded)
+    assert(withConn(UpsertWriter.readOffset(_, DerbyDialect)).contains(104L))
+  }
+
   test("a failed orphan delete rolls back and surfaces its own error (FK violation)") {
     val cfg = ConfigParser.parse(configText)
     val users = cfg.table("users").get

@@ -139,35 +139,85 @@ class UpsertWriterRuntimeSpec extends SparkSpec with TempDirs {
     assert(stored(2L) == (50L to 100L by 10L))
   }
 
+  /** Runs `body` in a job group; its result and, per job it ran, the task
+    * count of each of the job's stages, in stage order. */
+  private def jobsOf[A](body: => A): (A, Seq[Seq[Int]]) = {
+    val group = "graft-apply-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.stageInfos.sortBy(_.stageId).map(_.numTasks)): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "apply")
+    val a = try body finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.removeSparkListener(listener)
+    (a, jobs.toArray(Array.empty[Seq[Int]]).toSeq)
+  }
+
   test("a batch without dead letters is one Spark action and writes no dead-letter directory") {
     MemJdbc.reset("db11")
     val url = MemJdbc.UrlPrefix + "db11"
     val batch = decodedDf(fullImages)
     val deadLetters = tempDir("graft_dl")
-    val group = "graft-one-pass-apply"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "one-pass apply")
-    val mx = try graft.Replicator.applyBatch(batch, Seq(spec), url, new Properties(),
-      deadLetterDir = Some(deadLetters), batchId = 3L)
-    finally sc.clearJobGroup()
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.removeSparkListener(listener)
+    val (mx, jobs) = jobsOf(graft.Replicator.applyBatch(batch, Seq(spec), url, new Properties(),
+      deadLetterDir = Some(deadLetters), batchId = 3L))
     // with AQE the one action is two jobs: the shuffle map stage, the result
     val expected = if (spark.conf.get("spark.sql.adaptive.enabled").toBoolean) 2 else 1
-    assert(jobs.get == expected, s"${jobs.get} jobs for one batch")
+    assert(jobs.size == expected, s"${jobs.size} jobs for one batch")
     assert(mx.contains(100L))
     assert(!new java.io.File(s"$deadLetters/batch=3").exists)
     assert(MemJdbc.table("db11", "users").size == 100)
   }
 
-  test("applyBatch flushes between shapes so per-key op order is preserved") {
+  // the shuffle exchanges of the frame the apply writes, by partition count
+  private def exchangeWidths(dialect: SqlDialect): Seq[Int] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    val plan = UpsertWriter.forWriters(decodedDf(fullImages), dialect,
+      key = Seq(col("tbl"), col("id")), order = Seq(col("ts"), col("seq")))
+      .queryExecution.executedPlan
+    new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e.numPartitions }
+  }
+
+  test("the apply's exchange is as wide as the sink's writer cap; one writer means none") {
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(exchangeWidths(MySqlDialect) == Seq(shufflePartitions), "uncapped: keyed exchange")
+    assert(exchangeWidths(WriterCapDialect(3)) == Seq(3))
+    assert(exchangeWidths(OneWriterDialect).isEmpty)
+  }
+
+  test("a one-writer sink applies a batch in one job of one stage") {
+    MemJdbc.reset("db14")
+    val url = MemJdbc.UrlPrefix + "db14"
+    // three input partitions, coalesced into the writer's one task
+    val batch = spark.sparkContext.parallelize(fullImages, 3)
+      .toDF("kind", "tbl", "ts", "id", "fields_json", "partial", "removed", "reason", "seq")
+    val (mx, jobs) = jobsOf(graft.Replicator.applyBatch(batch, Seq(spec), url, new Properties(),
+      dialect = OneWriterDialect))
+    assert(jobs == Seq(Seq(1)), s"jobs (tasks per stage): $jobs")
+    assert(mx.contains(100L))
+    val st = MemJdbc.stats("db14")
+    assert((st("prepare"), st("executeBatch"), st("addBatch")) == ((1, 1, 100)))
+    assert(MemJdbc.table("db14", "users").size == 100)
+  }
+
+  test("a capped sink applies a batch in as many write tasks as its cap") {
+    MemJdbc.reset("db15")
+    val url = MemJdbc.UrlPrefix + "db15"
+    val (mx, jobs) = jobsOf(graft.Replicator.applyBatch(decodedDf(fullImages), Seq(spec), url,
+      new Properties(), dialect = WriterCapDialect(3)))
+    assert(jobs.last.last == 3, s"jobs (tasks per stage): $jobs")
+    assert(mx.contains(100L))
+    assert(MemJdbc.stats("db15")("prepare") <= 3)
+    assert(MemJdbc.table("db15", "users").size == 100)
+  }
+
+  test("a key's four ops fold to one DELETE: 1 prepare, 1 addBatch") {
     MemJdbc.reset("db5")
     val url = MemJdbc.UrlPrefix + "db5"
     // one key, alternating shapes: partial(name) → partial(visits) →
@@ -404,10 +454,9 @@ class UpsertWriterRuntimeSpec extends SparkSpec with TempDirs {
   }
 }
 
-/** [[MySqlDialect]] over a single writer connection, as Derby's cap makes it:
-  * the whole batch is one partition, so its flushes can be counted. */
-private object OneWriterDialect extends SqlDialect {
-  override def name: String = "mysql-one-writer"
+/** [[MySqlDialect]] over at most `cap` writer connections. */
+private case class WriterCapDialect(cap: Int) extends SqlDialect {
+  override def name: String = s"mysql-$cap-writers"
   override def upsert(spec: TableSpec, present: Seq[String]): SinkStatement =
     MySqlDialect.upsert(spec, present)
   override def delete(spec: TableSpec): SinkStatement = MySqlDialect.delete(spec)
@@ -415,5 +464,9 @@ private object OneWriterDialect extends SqlDialect {
   override def readOffsetSql: String = MySqlDialect.readOffsetSql
   override def ensureStateTable(conn: java.sql.Connection): Unit = MySqlDialect.ensureStateTable(conn)
   override def renderDdl(ddl: SchemaSync.Ddl): Option[String] = MySqlDialect.renderDdl(ddl)
-  override def maxWriteConnections: Option[Int] = Some(1)
+  override def maxWriteConnections: Option[Int] = Some(cap)
 }
+
+/** [[MySqlDialect]] over a single writer connection, as Derby's cap makes it:
+  * the whole batch is one partition, so its flushes can be counted. */
+private object OneWriterDialect extends WriterCapDialect(1)

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.Properties
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.config.ConfigParser
 import graft.sink.{MemJdbc, UpsertWriter}
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * calls it wraps, and the Replicator lifecycle runs end to end against
   * an EXPLICIT provider (the production call shape — the lambda overload
   * the older specs use delegates to this same primitive). */
-class SourceProviderSpec extends SparkSpec {
+class SourceProviderSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("forConfig: mongodb:// selects the live binding with the URI's db; else harness") {
@@ -28,8 +28,8 @@ class SourceProviderSpec extends SparkSpec {
   }
 
   test("parquet harness binding ≡ the direct reads it wraps") {
-    val snapDir = Files.createTempDirectory("graft_prov_snap").toString
-    val segDir = Files.createTempDirectory("graft_prov_seg").toString
+    val snapDir = tempDir("graft_prov_snap")
+    val segDir = tempDir("graft_prov_seg")
     Seq(("u1", "ann"), ("u2", "bob")).toDF("_id", "name")
       .write.mode("overwrite").parquet(s"$snapDir/users.parquet")
     Files.write(Paths.get(segDir, "seg0.json"), Seq(
@@ -52,9 +52,9 @@ class SourceProviderSpec extends SparkSpec {
   test("Replicator.run drives the lifecycle through an explicit provider") {
     val db = "provider_lifecycle"
     MemJdbc.reset(db)
-    val snapDir = Files.createTempDirectory("graft_provl_snap").toString
-    val segDir = Files.createTempDirectory("graft_provl_seg").toString
-    val ckpt = Files.createTempDirectory("graft_provl_ckpt").toString
+    val snapDir = tempDir("graft_provl_snap")
+    val segDir = tempDir("graft_provl_seg")
+    val ckpt = tempDir("graft_provl_ckpt")
     Seq(("u1", "ann"), ("u2", "bob")).toDF("_id", "name")
       .write.mode("overwrite").parquet(s"$snapDir/users.parquet")
     Files.write(Paths.get(segDir, "seg0.json"), Seq(
